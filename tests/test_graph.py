@@ -197,10 +197,17 @@ def test_graph_quantized_traversal_payload(spark, vec_df):
         assert len(row.code) == 16 // 2  # 16 dims, 2 bits → nibble-packed
 
 
-def test_graph_serve_path_equivalence(spark, vec_df, monkeypatch):
-    """The r13 zero-exchange per-shard-directory serve returns exactly the
-    rows of the legacy grouped-exchange path (search AND search_batch),
-    and stays identical after prewarm (the cached per-shard frames)."""
+def test_graph_serve_path_equivalence(spark, vec_df):
+    """The per-shard reader hands each task the WHOLE shard, which
+    positional row_no indexing needs: every task sees row_no 0..n-1 of
+    its shard, and every (id, dist) that search and search_batch return
+    is the exact distance of that id in vec_df (a split shard corrupts
+    row_no indexing). search(q) equals search_batch([q]) (one shard
+    kernel), and results stay identical after prewarm()."""
+    import pandas as pd
+
+    from vectorchord_spark.functions import distances as D
+
     rng = np.random.default_rng(17)
     q = [float(x) for x in rng.uniform(-1, 1, 16)]
     qs = [[float(x) for x in rng.uniform(-1, 1, 16)] for _ in range(3)]
@@ -210,29 +217,56 @@ def test_graph_serve_path_equivalence(spark, vec_df, monkeypatch):
             VamanaOptions(metric="l2", m=24, ef_construction=48, n_shards=4),
         )
 
+        def task_view(grp, shard):
+            rows = np.sort(grp["row_no"].to_numpy())
+            whole = bool(np.array_equal(rows, np.arange(len(rows))))
+            return pd.DataFrame({"shard": [shard], "n": [len(rows)], "whole": [whole]})
+
+        seen = {
+            r.shard: (r.n, r.whole)
+            for r in idx._shard_candidates(
+                list(range(idx.meta["n_shards"])),
+                task_view,
+                "shard int, n long, whole boolean",
+            ).collect()
+        }
+        stored = (
+            spark.read.parquet(idx.graph_path).groupBy("shard").count().collect()
+        )
+        assert seen == {r["shard"]: (r["count"], True) for r in stored}
+
+        def exact(qv):
+            d = D.output_distance("l2", "vec", D.vec_lit(qv))
+            return {r.id: r.d for r in vec_df.select("id", d.alias("d")).collect()}
+
         def srch():
             return [
                 (r.id, r.dist)
                 for r in idx.search(q, k=10, ef_search=64, probe_shards=2).collect()
             ]
 
-        def bsrch():
+        def bsrch(queries):
             return sorted(
                 (r.qid, r.id, r.dist, r.rank)
                 for r in idx.search_batch(
-                    qs, k=10, ef_search=64, probe_shards=2
+                    queries, k=10, ef_search=64, probe_shards=2
                 ).collect()
             )
 
-        new_s, new_b = srch(), bsrch()
-        monkeypatch.setenv("VC_GRAPH_SERVE_EXCHANGE", "1")
-        assert srch() == new_s
-        assert bsrch() == new_b
-        monkeypatch.delenv("VC_GRAPH_SERVE_EXCHANGE")
+        s_rows, b_rows = srch(), bsrch(qs)
+        ex = exact(q)
+        assert len(s_rows) == 10
+        assert all(d == ex[i] for i, d in s_rows)
+        ex_b = [exact(qv) for qv in qs]
+        assert sorted({r[0] for r in b_rows}) == [0, 1, 2]
+        assert len(b_rows) == 30
+        assert all(d == ex_b[qi][i] for qi, i, d, _ in b_rows)
+        one = sorted(bsrch([q]), key=lambda r: r[3])
+        assert [(i, d) for _, i, d, _ in one] == s_rows
         # prewarm reads through the same per-shard reader; results stable
         assert idx.prewarm() >= 3000
-        assert srch() == new_s
-        assert bsrch() == new_b
+        assert srch() == s_rows
+        assert bsrch(qs) == b_rows
 
 
 def test_graph_search_batch(spark, vec_df):
@@ -253,6 +287,30 @@ def test_graph_search_batch(spark, vec_df):
             assert len(by_q[qi]) == 10
             rec = len(set(by_q[qi]) & set(brute_topk(vec_df, q, 10))) / 10
             assert rec >= 0.8, (qi, rec)
+
+
+@pytest.mark.parametrize("length", [1, 17])
+def test_graph_search_rejects_wrong_dimension(spark, vec_df, length):
+    """A query whose length is not the index dimension (16) fails on the
+    driver with a ValueError, before it is routed, recorded by query
+    sampling, or runs any Spark job."""
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, vec_df, "id", "vec", os.path.join(tmp, "g"),
+            VamanaOptions(metric="l2", m=24, ef_construction=48, n_shards=2),
+        )
+        idx.enable_query_sampling(rate=1.0)
+        sc = spark.sparkContext
+        group = f"graph-wrong-dim-{length}"
+        sc.setJobGroup(group, "wrong-dimension graph query")
+        try:
+            with pytest.raises(ValueError, match="query dimension"):
+                idx.search([0.5] * length, k=10)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert not os.path.exists(idx._queries_log_path)
 
 
 def test_graph_insert_delete_compact(spark, vec_df):

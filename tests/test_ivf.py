@@ -583,6 +583,45 @@ def test_search_batch_quantized_storage(spark, clustered_df):
             assert by_q[qi] == single
 
 
+@pytest.mark.parametrize("storage", ["f32", "f16", "rabitq8", "rabitq4", "base_df"])
+def test_search_matches_search_batch(spark, clustered_df, storage):
+    """search(q) and search_batch([q]) rerank through the same
+    storage-dispatched scorer, so they return identical (id, dist) rows
+    for every storage and for rerank-in-table (base_df), on the
+    short-circuit (all probed rows) and the rough-scoring path."""
+    rng = np.random.default_rng(61)
+    q = [float(x) for x in rng.uniform(-1, 1, 8)]
+    if storage == "base_df":
+        opts = IvfOptions(metric="l2", lists=[33], rerank_in_index=False)
+        kw = {"base_df": clustered_df.select("id", "vec")}
+    else:
+        opts = IvfOptions(metric="l2", lists=[33], storage=storage)
+        kw = {}
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = IvfIndex.build(
+            spark, clustered_df, "id", "vec", os.path.join(tmp, "idx"), opts
+        )
+        batch = [
+            (r.id, r.dist)
+            for r in sorted(
+                idx.search_batch(
+                    [q], k=10, probes=[16], rerank_factor=None, **kw
+                ).collect(),
+                key=lambda r: r.rank,
+            )
+        ]
+        assert len(batch) == 10
+        for cheap_threshold in (8192, 0):
+            single = [
+                (r.id, r.dist)
+                for r in idx.search(
+                    q, k=10, probes=[16], rerank_factor=None,
+                    cheap_threshold=cheap_threshold, **kw,
+                ).collect()
+            ]
+            assert single == batch, cheap_threshold
+
+
 def test_search_batch_rerank_in_table(spark, clustered_df):
     """search_batch(base_df=...) reranks against the caller's table: an
     index built with rerank_in_index=False stores no payload, so batch

@@ -152,9 +152,9 @@ def main() -> None:
         f"encode={t_marks.get('encode', 0):.1f}s"
     )
 
-    # JVM-side CPU accounting (the VC_ENCODE_TIMERS sums only cover the
-    # PYTHON worker phases; shuffle serialization, the Tungsten sort, and
-    # parquet encoding are JVM task-thread work): pull per-stage
+    # per-stage CPU accounting (shuffle serialization, the Tungsten sort
+    # and parquet encoding are JVM task-thread work, next to the Python
+    # worker's encode): pull per-stage
     # executorCpuTime/executorRunTime from the local UI REST API so the
     # CPU-sum floor table covers BOTH sides.
     try:

@@ -11,9 +11,8 @@ progressively more of the sink enabled:
   C  encode -> shuffle -> noop + the cluster-range repartition / sort
   D  encode -> full write      + parquet encode to disk (the real sink)
 
-(B - A) is the Python crossing + compute (VC_ENCODE_TIMERS=1 splits the
-compute part in worker stderr), (C - B) the shuffle+sort, (D - C) the
-parquet term. Prints a bytes/s figure per term against the codes payload
+(B - A) is the Python crossing + compute, (C - B) the shuffle+sort,
+(D - C) the parquet term. Prints a bytes/s figure per term against the codes payload
 size. Diagnostic only."""
 
 from __future__ import annotations
@@ -56,7 +55,6 @@ def main() -> None:
     from vectorchord_spark import IvfIndex, IvfOptions
     from vectorchord_spark.session import get_spark
 
-    os.environ.setdefault("VC_ENCODE_TIMERS", "1")
     n_rows = int(os.environ.get("ROWS", "1000000"))
     dim = int(os.environ.get("DIM", "768"))
     reps = int(os.environ.get("REPS", "2"))

@@ -33,8 +33,8 @@ probes; routing misses are the same failure mode as unprobed IVF cells,
 mitigated by the closure replicas. Within a probed shard, the beam expands
 neighbors on the quantized codes and exact-rescores each popped vertex
 (the reference's scan shape — it too reads full vectors of visited
-vertices); the final cross-shard merge is a JVM-expression rescore join of
-the ≤ probe_shards·ef·rescore_factor candidate ids.
+vertices) and emits fold-exact output distances, so the cross-shard merge
+only dedupes and orders the ≤ probe_shards·ef·rescore_factor candidates.
 """
 
 from __future__ import annotations
@@ -129,26 +129,27 @@ def _output_dist_leftfold(metric: str, v64: np.ndarray, q: np.ndarray) -> np.nda
         return -s
     return 1.0 - s  # cos: stored vectors are normalized; 1 + (-dot)
 
-#: columns needed by traversal: quantized code columns for frontier
-#: scoring + ``vec`` for the reference's exact-rescore-on-pop (the
-#: reference likewise reads full vectors of visited vertices,
-#: search.rs:34-140; shard routing is what prunes the IO)
+#: columns the per-shard reader hands to traversal: quantized code
+#: columns for frontier scoring + ``vec`` for the reference's
+#: exact-rescore-on-pop (the reference likewise reads full vectors of
+#: visited vertices, search.rs:34-140; shard routing is what prunes the
+#: IO). ``shard`` is the hive directory, not a stored column.
 _TRAVERSE_COLS_1BIT = [
-    "shard", "id", "row_no", "medoid_row", "neighbors", "vec",
+    "id", "row_no", "medoid_row", "neighbors", "vec",
     "dis_u_2", "factor_cnt", "factor_ip", "factor_err", "code",
 ]
 _TRAVERSE_COLS_2BIT = [
-    "shard", "id", "row_no", "medoid_row", "neighbors", "vec",
+    "id", "row_no", "medoid_row", "neighbors", "vec",
     "ext_dis_u_2", "ext_nol", "code",
 ]
 
 def _make_shard_reader(graph_path: str, columns: list, body):
     """mapInPandas runner over a seed frame of probed shard ids: each
     task reads its own shard's hive directory with pyarrow (columns
-    pruned to the serve set) and hands the WHOLE shard to ``body`` — the
-    invariant applyInPandas used to provide via the (removed) hash
-    exchange. Local paths here; a distributed deployment points pyarrow
-    at the same store through its filesystem layer (HDFS/S3)."""
+    pruned to the serve set) and hands the WHOLE shard to ``body``, so
+    positional ``row_no`` indexing holds without a hash exchange. Local
+    paths here; a distributed deployment points pyarrow at the same
+    store through its filesystem layer (HDFS/S3)."""
 
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         import pyarrow.parquet as pq
@@ -604,19 +605,6 @@ def _build_vamana_bulk(
     the incremental loop on a 15k-row shard because candidate generation
     is two GEMMs instead of ~n beam searches.
     """
-    import time as _time
-
-    _timers = os.environ.get("VC_VAMANA_TIMERS") == "1"
-    _tm: dict[str, float] = {}
-    _t0 = _time.perf_counter()
-
-    def _mark(name: str) -> None:
-        nonlocal _t0
-        if _timers:
-            now = _time.perf_counter()
-            _tm[name] = _tm.get(name, 0.0) + (now - _t0)
-            _t0 = now
-
     n = len(vecs)
     metric = "l2" if opts.metric == "l2" else "dot"
     alphas = opts.alpha if metric == "l2" else [1.0]
@@ -731,7 +719,6 @@ def _build_vamana_bulk(
         order = np.argsort(alld, axis=1, kind="stable")
         knn_idx[s:e] = np.take_along_axis(allid, order, axis=1)
         knn_d[s:e] = np.take_along_axis(alld, order, axis=1)
-    _mark("knn")
     # A random candidate may duplicate a kNN slot (a rand draw of the row
     # itself is already masked to ∞ above). No explicit dedup pass is
     # needed (the per-row (n, K) id-argsort it took cost ~150 CPU-s at 1M
@@ -754,7 +741,6 @@ def _build_vamana_bulk(
                 v32, metric, alphas, m, knn_idx[s:e], knn_d[s:e]
             )
         )
-    _mark("prune")
     # bidirectional edges, then one vectorized prune pass over oversized
     # adjacencies. Closed form of the sequential scan (append p to adj[j]
     # for every directed edge p→j whose reverse is absent, p ascending):
@@ -776,7 +762,6 @@ def _build_vamana_bulk(
         bounds = np.searchsorted(add_to, np.arange(n + 1, dtype=np.int64))
         for j in np.unique(add_to):
             adj[j].extend(add_val[bounds[j] : bounds[j + 1]].tolist())
-    _mark("bidir")
     # After bidirectional edge insertion MOST vertices are oversized (the
     # in-degree tail is long: measured 33..348 at n=10k, m=32), and the
     # prune's pairwise matrix costs O(k²) per row — padding every row to
@@ -827,18 +812,7 @@ def _build_vamana_bulk(
             ):
                 adj[j] = new
             i = e
-    _mark("reprune")
     _repair_connectivity(adj, medoid, v64)
-    _mark("repair")
-    if _timers:
-        import sys as _sys
-
-        print(
-            "[vc-vamana-timer] n=%d " % n
-            + " ".join(f"{k}={v:.3f}s" for k, v in _tm.items()),
-            file=_sys.stderr,
-            flush=True,
-        )
     return adj, medoid
 
 
@@ -1086,25 +1060,6 @@ class VamanaIndex(QuerySampling):
         opts.validate()
         os.makedirs(path, exist_ok=True)
 
-        # driver-side phase timers (VC_GRAPH_TIMERS=1): the falsifiability
-        # instrument for build-throughput claims, mirroring the IVF
-        # build's VC_ENCODE_TIMERS — wall-clock per phase so "the build is
-        # slow" decomposes into sample/kmeans/count/build+write
-        import time as _time
-
-        _timers_on = os.environ.get("VC_GRAPH_TIMERS") == "1"
-        _t0 = _time.perf_counter()
-        _last = [_t0]
-
-        def _mark(phase: str) -> None:
-            if _timers_on:
-                now = _time.perf_counter()
-                print(
-                    f"[vc-graph-build] {phase}: {now - _last[0]:.2f}s "
-                    f"(cum {now - _t0:.2f}s)",
-                    flush=True,
-                )
-                _last[0] = now
         # NULL vectors are skipped (reference null.fail / issue_427 contract)
         src = df.where(F.col(vec_col).isNotNull()).select(
             F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
@@ -1134,10 +1089,8 @@ class VamanaIndex(QuerySampling):
         # orderBy(rand).limit degenerates into sort-everything at scale;
         # shards are spatial clusters so query routing = centroid argmin,
         # the SPANN-style layout) ---
-        _mark("count")
         cap = max(n_shards * 256, 1024)
         sample_pd = bounded_sample_vectors(src, cap, opts.seed)
-        _mark("sample")
         if len(sample_pd):
             samples = np.stack(sample_pd["vec"].to_numpy()).astype(np.float32)
             dim = samples.shape[1]
@@ -1153,7 +1106,6 @@ class VamanaIndex(QuerySampling):
             )
         cents = KM.lloyd(samples, n_shards, 10, opts.seed, False).astype(np.float32)
         bc_cents = spark.sparkContext.broadcast(cents)
-        _mark("kmeans")
 
         metric = opts.metric
         repl = min(int(opts.replication), int(n_shards))
@@ -1188,7 +1140,6 @@ class VamanaIndex(QuerySampling):
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         }
-        _mark("label-count")
         n_sub = [
             max(1, -(-cluster_cnt.get(c, 0) // _MAX_SHARD_ROWS))
             for c in range(n_shards)
@@ -1217,21 +1168,14 @@ class VamanaIndex(QuerySampling):
         seed = opts.seed
         bits = opts.bits
 
-        worker_timers = os.environ.get("VC_GRAPH_TIMERS") == "1"
-
         def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            import time as _t
-
-            _w0 = _t.perf_counter()
             o = VamanaOptions(**{**opts_d, "n_shards": n_shards})
             shard = int(pdf["shard"].iloc[0])
             vecs = _f32_matrix(pdf["vec"], dim)
-            _w1 = _t.perf_counter()
             rng = np.random.default_rng(seed + shard)
             adj, medoid = _build_graph(vecs, o, rng)
-            _w2 = _t.perf_counter()
             n = len(vecs)
-            out = pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "shard": shard,
                     "id": pdf["id"].to_numpy(np.int64),
@@ -1245,17 +1189,6 @@ class VamanaIndex(QuerySampling):
                     **_vertex_codes(vecs, bits),
                 }
             )
-            if worker_timers:
-                import sys as _sys
-
-                print(
-                    f"[vc-graph-shard] shard={shard} n={n} "
-                    f"stack={_w1 - _w0:.2f}s vamana={_w2 - _w1:.2f}s "
-                    f"assemble={_t.perf_counter() - _w2:.2f}s",
-                    file=_sys.stderr,
-                    flush=True,
-                )
-            return out
 
         # Build-stage task layout: one shard per partition, LAUNCHED IN
         # DESCENDING SIZE ORDER (longest-processing-time-first). The
@@ -1273,35 +1206,26 @@ class VamanaIndex(QuerySampling):
         # task). Grouping includes _pkey so HashPartitioning([_pkey])
         # satisfies the group distribution — no second exchange
         # (plan-asserted in tests).
-        if os.environ.get("VC_GRAPH_LPT") == "0":
-            # A/B escape hatch: the pre-LPT hash layout (4x over-
-            # partitioned, random launch order) for paired benchmarking
-            graph = (
-                assigned.repartition(max(32, 4 * total_shards), "shard")
-                .groupBy("shard")
-                .applyInPandas(build_shard, GRAPH_SCHEMA)
+        est = [
+            cluster_cnt.get(c, 0) / n_sub[c]
+            for c in range(n_shards)
+            for _ in range(n_sub[c])
+        ]
+        order = sorted(range(total_shards), key=lambda s: (-est[s], s))
+        keys = _lpt_partition_keys(total_shards)
+        key_of_shard = [0] * total_shards
+        for rank, s in enumerate(order):
+            key_of_shard[s] = keys[rank]
+        pkey_arr = F.array(*[F.lit(int(k)) for k in key_of_shard])
+        graph = (
+            assigned.withColumn(
+                "_pkey",
+                F.element_at(pkey_arr, F.col("shard") + 1).cast("int"),
             )
-        else:
-            est = [
-                cluster_cnt.get(c, 0) / n_sub[c]
-                for c in range(n_shards)
-                for _ in range(n_sub[c])
-            ]
-            order = sorted(range(total_shards), key=lambda s: (-est[s], s))
-            keys = _lpt_partition_keys(total_shards)
-            key_of_shard = [0] * total_shards
-            for rank, s in enumerate(order):
-                key_of_shard[s] = keys[rank]
-            pkey_arr = F.array(*[F.lit(int(k)) for k in key_of_shard])
-            graph = (
-                assigned.withColumn(
-                    "_pkey",
-                    F.element_at(pkey_arr, F.col("shard") + 1).cast("int"),
-                )
-                .repartition(total_shards, "_pkey")
-                .groupBy("_pkey", "shard")
-                .applyInPandas(build_shard, GRAPH_SCHEMA)
-            )
+            .repartition(total_shards, "_pkey")
+            .groupBy("_pkey", "shard")
+            .applyInPandas(build_shard, GRAPH_SCHEMA)
+        )
         # applyInPandas output already holds whole shards per task, so the
         # partitionBy write needs no repartition — the previous
         # repartition(shard) pushed the FAT built graph (vecs + neighbors
@@ -1310,7 +1234,6 @@ class VamanaIndex(QuerySampling):
         graph.write.mode("overwrite").partitionBy("shard").parquet(
             os.path.join(path, "graph")
         )
-        _mark("build+write")
 
         # per-shard row counts (replicas included — they are traversal
         # vertices) so serving can auto-scale ef_search with shard size;
@@ -1720,25 +1643,6 @@ class VamanaIndex(QuerySampling):
             order = order[: int(probe_shards)]
         return [int(s) for s in order]
 
-    def _graph_base(self) -> DataFrame:
-        """The graph table as one ANALYZED lazy DataFrame, cached per graph
-        version (same rationale as IvfIndex._codes_base: spark.read.parquet
-        pays a driver→JVM file listing per call, so uncached reads added
-        ~0.2-0.4s of plan-construction wall per serving call; since r09
-        a search builds ONE graph scan — the shard task emits fold-exact
-        distances, so the former rescore scan is gone). DML bumps
-        graph_version (insert/compact) or is invalidated explicitly
-        (delete appends tombstones without a version bump, but tombstones
-        anti-join the search RESULT, not this scan — still keyed for
-        safety)."""
-        key = self.meta.get("graph_version", 0)
-        cached = getattr(self, "_graph_base_cache", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        df = self.spark.read.parquet(self.graph_path)
-        self._graph_base_cache = (key, df)
-        return df
-
     def _tombstones_df(self) -> "DataFrame | None":
         """Tombstones as a cached lazy DataFrame (None when there are
         none). delete() invalidates — an appended tombstone file would be
@@ -1752,14 +1656,6 @@ class VamanaIndex(QuerySampling):
         self._tombstones_cache = tomb
         return tomb
 
-    def _traverse_src(self, shards: list[int]) -> DataFrame:
-        bits = self.meta.get("bits", 1)
-        cols = _TRAVERSE_COLS_1BIT if bits == 1 else _TRAVERSE_COLS_2BIT
-        df = self._graph_base()
-        if len(shards) < self.meta["n_shards"]:
-            df = df.where(F.col("shard").isin(shards))
-        return df.select(*cols)
-
     def _shard_candidates(self, shards: list[int], body, out_schema: str) -> DataFrame:
         """Per-shard candidate generation with NO serve-time exchange.
 
@@ -1769,33 +1665,20 @@ class VamanaIndex(QuerySampling):
         shard's directory with pyarrow and runs the beam search in place
         (guide §8 "co-locate instead of join": the task reads its own
         slice from storage) — one stage, one task per probed shard, and
-        only the ≤ef candidate ids ever move. The former
-        groupBy("shard").applyInPandas shipped every probed graph row —
-        vec + neighbors + codes — through a hash exchange per cold query.
+        only the ≤ef candidate ids ever move. A groupBy("shard")
+        .applyInPandas would ship every probed graph row — vec +
+        neighbors + codes — through a hash exchange per cold query.
         (A union of per-directory coalesce(1) scans was measured first
         and rejected: the optimizer hoists the Coalesce above the Union,
         collapsing all probed shards into ONE serial task.)
 
-        The task-side read also guarantees the whole-shard invariant the
-        exchange used to provide (positional row_no indexing needs the
-        full shard in one frame), with no file-split hazard.
+        The task-side read also guarantees the whole-shard invariant
+        (positional row_no indexing needs the full shard in one frame),
+        with no file-split hazard.
 
-        ``body(grp, shard) -> pdf`` is the per-shard search.
-        VC_GRAPH_SERVE_EXCHANGE=1 forces the legacy exchange path (A/B
-        harness)."""
-        if os.environ.get("VC_GRAPH_SERVE_EXCHANGE") == "1":
-
-            def grouped(grp: pd.DataFrame) -> pd.DataFrame:
-                return body(grp, int(grp["shard"].iloc[0]))
-
-            return (
-                self._traverse_src(shards)
-                .groupBy("shard")
-                .applyInPandas(grouped, out_schema)
-            )
+        ``body(grp, shard) -> pdf`` is the per-shard search."""
         bits = self.meta.get("bits", 1)
         cols = _TRAVERSE_COLS_1BIT if bits == 1 else _TRAVERSE_COLS_2BIT
-        ser_cols = [c for c in cols if c != "shard"]
         live = [
             int(s)
             for s in shards
@@ -1808,8 +1691,92 @@ class VamanaIndex(QuerySampling):
             sc.parallelize([(s,) for s in live], len(live)), "shard int"
         )
         return seed.mapInPandas(
-            _make_shard_reader(self.graph_path, ser_cols, body), out_schema
+            _make_shard_reader(self.graph_path, cols, body), out_schema
         )
+
+    def _prep_queries(self, Qe: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Query prep shared by ``search`` and ``search_batch``: the
+        (nq, dim) f64 query matrix is dimension-checked (mirroring
+        crates/vchordg/src/search.rs), normalized for cos, and rotated.
+        Returns (normalized f64 queries, rotated f32 queries)."""
+        dim = self.meta["dim"]
+        if Qe.ndim != 2 or Qe.shape[1] != dim:
+            raise ValueError(
+                f"query dimension {Qe.shape[1:]} does not match index "
+                f"dimension {dim}"
+            )
+        if self.meta["metric"] == "cos":
+            norms = np.linalg.norm(Qe, axis=1, keepdims=True)
+            norms[norms == 0] = 1.0
+            Qe = Qe / norms
+        return Qe, K.rotate(Qe.astype(np.float32))
+
+    def _candidates(
+        self,
+        Qe: np.ndarray,
+        Q_rot: np.ndarray,
+        k: int,
+        ef_search: int | None,
+        probe_shards: int | None,
+        rescore_factor: int,
+    ) -> DataFrame:
+        """Route every query, then beam-search each probed shard once for
+        all the queries routed to it. Returns (qid, id, dist) candidates
+        with tombstoned ids removed; replica rows are exact duplicates
+        (identical bytes in, identical fold out) for the caller to
+        dedupe. ``ef_search=None`` auto-scales with the largest probed
+        shard (see ``_auto_ef_search``)."""
+        meta = self.meta
+        metric = meta["metric"]
+        dim = meta["dim"]
+        bits = meta.get("bits", 1)
+        shard_qids: dict[int, list[int]] = {}
+        for qi in range(len(Qe)):
+            for s in self._expand_shards(self._route(Qe[qi], probe_shards)):
+                shard_qids.setdefault(int(s), []).append(qi)
+        if ef_search is None:
+            ef_search = self._auto_ef_search(list(shard_qids), k)
+        ef = int(max(ef_search, k)) * max(1, int(rescore_factor))
+        internal = "l2" if metric == "l2" else "dot"
+
+        def shard_search(grp: pd.DataFrame, shard: int) -> pd.DataFrame:
+            # grp is the WHOLE shard (see _shard_candidates): row_no is
+            # the positional vertex index the adjacency lists refer to
+            grp = grp.sort_values("row_no")
+            adj = _adj_from_bin(grp["neighbors"])
+            medoid = int(grp["medoid_row"].iloc[0])
+            ids = grp["id"].to_numpy(np.int64)
+            v64 = _f32_matrix(grp["vec"], dim).astype(np.float64)
+            out_qid, out_id, out_dist = [], [], []
+            for qi in shard_qids[shard]:
+                est_fn = _make_dist_fn(metric, bits, grp, dim, Q_rot[qi])
+                qx = Qe[qi]
+                exact_fn = lambda idx: _dists(internal, v64[idx], qx)  # noqa: B023,E731
+                best = _beam_search(est_fn, adj, medoid, ef, exact_fn)
+                sel = np.asarray([u for _, u in best], np.int64)
+                out_qid.append(np.full(len(sel), qi, np.int32))
+                out_id.append(ids[sel])
+                # output distances with the JVM-fold-exact accumulation
+                # (the candidates' exact vectors are already in memory),
+                # so no rescore join or second graph scan is needed
+                out_dist.append(_output_dist_leftfold(metric, v64[sel], qx))
+            return pd.DataFrame(
+                {
+                    "qid": np.concatenate(out_qid),
+                    "id": np.concatenate(out_id),
+                    "dist": np.concatenate(out_dist),
+                }
+            )
+
+        cand = self._shard_candidates(
+            sorted(shard_qids), shard_search, "qid int, id long, dist double"
+        )
+        # tombstoned ids are filtered from the RESULT, not the traversal
+        # (the reference keeps the vertex as a waypoint until vacuum)
+        tomb = self._tombstones_df()
+        if tomb is not None:
+            cand = cand.join(F.broadcast(tomb), "id", "left_anti")
+        return cand
 
     def search(
         self,
@@ -1833,59 +1800,12 @@ class VamanaIndex(QuerySampling):
         ``ef_search=None`` (the default) auto-scales the beam width with
         the probed shards' sizes (see ``_auto_ef_search``); pass an int to
         pin it (the reference's fixed GUC behavior)."""
-        meta = self.meta
-        metric = meta["metric"]
-        dim = meta["dim"]
-        bits = meta.get("bits", 1)
-        q_exact = np.asarray(query, np.float64)
-        if metric == "cos":
-            n = float(np.linalg.norm(q_exact))
-            if n > 0:
-                q_exact = q_exact / n
-        q32 = q_exact.astype(np.float32)
-        self._maybe_record_query(q32)
-        q_rot = K.rotate(q32)
-        shards = self._expand_shards(self._route(q_exact, probe_shards))
-        if ef_search is None:
-            ef_search = self._auto_ef_search(shards, k)
-        ef = int(max(ef_search, k)) * max(1, int(rescore_factor))
-
-        internal = "l2" if metric == "l2" else "dot"
-
-        def shard_search(grp: pd.DataFrame, _shard: int) -> pd.DataFrame:
-            # the caller guarantees grp is the WHOLE shard (a split shard
-            # would corrupt positional row_no indexing) — via the grouped
-            # exchange or the coalesce(1) per-directory scan
-            grp = grp.sort_values("row_no")
-            adj = _adj_from_bin(grp["neighbors"])
-            medoid = int(grp["medoid_row"].iloc[0])
-            est_fn = _make_dist_fn(metric, bits, grp, dim, q_rot)
-            v64 = _f32_matrix(grp["vec"], dim).astype(np.float64)
-            qx = np.asarray(q_exact, np.float64)
-            exact_fn = lambda idx: _dists(internal, v64[idx], qx)  # noqa: E731
-            best = _beam_search(est_fn, adj, medoid, ef, exact_fn)
-            ids = grp["id"].to_numpy(np.int64)
-            sel = np.asarray([u for _, u in best], np.int64)
-            # output distances are computed here with the JVM-fold-exact
-            # accumulation (the candidates' exact vectors are already in
-            # memory), replacing the former rescore join and its second
-            # graph scan
-            return pd.DataFrame(
-                {
-                    "id": ids[sel],
-                    "dist": _output_dist_leftfold(metric, v64[sel], qx),
-                }
-            )
-
-        cand = self._shard_candidates(shards, shard_search, "id long, dist double")
-        # tombstoned ids are filtered from the RESULT, not the traversal
-        # (the reference keeps the vertex as a waypoint until vacuum);
-        # replica candidates are exact-duplicate (id, dist) rows —
-        # identical bytes in, identical fold out — so distinct dedupes
-        tomb = self._tombstones_df()
-        if tomb is not None:
-            cand = cand.join(F.broadcast(tomb), "id", "left_anti")
-        return cand.distinct().orderBy("dist", "id").limit(int(k))
+        Qe, Q_rot = self._prep_queries(np.asarray(query, np.float64)[None])
+        self._maybe_record_query(Qe[0].astype(np.float32))
+        cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards, rescore_factor)
+        return (
+            cand.select("id", "dist").distinct().orderBy("dist", "id").limit(int(k))
+        )
 
     def search_batch(
         self,
@@ -1904,70 +1824,11 @@ class VamanaIndex(QuerySampling):
         value over the batch's union of probed shards — see ``search``)."""
         from pyspark.sql import Window
 
-        meta = self.meta
-        metric = meta["metric"]
-        dim = meta["dim"]
-        bits = meta.get("bits", 1)
-        Qe = np.asarray(queries, np.float64)
-        if Qe.ndim != 2 or Qe.shape[1] != dim:
-            raise ValueError(
-                f"query batch shape {Qe.shape} does not match index dimension {dim}"
-            )
-        if metric == "cos":
-            norms = np.linalg.norm(Qe, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            Qe = Qe / norms
-        nq = len(Qe)
-        Q_rot = K.rotate(Qe.astype(np.float32))
-        shard_qids: dict[int, list[int]] = {}
-        for qi in range(nq):
-            for s in self._expand_shards(self._route(Qe[qi], probe_shards)):
-                shard_qids.setdefault(s, []).append(qi)
-        shards = sorted(shard_qids)
-        if ef_search is None:
-            ef_search = self._auto_ef_search(shards, k)
-        ef = int(max(ef_search, k)) * max(1, int(rescore_factor))
-        sq = {int(s): qids for s, qids in shard_qids.items()}
-
-        internal = "l2" if metric == "l2" else "dot"
-
-        def shard_search(grp: pd.DataFrame, shard: int) -> pd.DataFrame:
-            grp = grp.sort_values("row_no")
-            adj = _adj_from_bin(grp["neighbors"])
-            medoid = int(grp["medoid_row"].iloc[0])
-            ids = grp["id"].to_numpy(np.int64)
-            v64 = _f32_matrix(grp["vec"], dim).astype(np.float64)
-            out_qid, out_id, out_dist = [], [], []
-            for qi in sq.get(shard, []):
-                est_fn = _make_dist_fn(metric, bits, grp, dim, Q_rot[qi])
-                qx = Qe[qi]
-                exact_fn = lambda idx: _dists(internal, v64[idx], qx)  # noqa: B023,E731
-                best = _beam_search(est_fn, adj, medoid, ef, exact_fn)
-                sel = np.asarray([u for _, u in best], np.int64)
-                out_qid.append(np.full(len(sel), qi, np.int32))
-                out_id.append(ids[sel])
-                out_dist.append(_output_dist_leftfold(metric, v64[sel], qx))
-            if not out_qid:
-                return pd.DataFrame({"qid": [], "id": [], "dist": []}).astype(
-                    {"qid": np.int32, "id": np.int64, "dist": np.float64}
-                )
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_qid),
-                    "id": np.concatenate(out_id),
-                    "dist": np.concatenate(out_dist),
-                }
-            )
-
-        cand = self._shard_candidates(
-            shards, shard_search, "qid int, id long, dist double"
-        )
-        tomb = self._tombstones_df()
-        if tomb is not None:
-            cand = cand.join(F.broadcast(tomb), "id", "left_anti")
+        Qe, Q_rot = self._prep_queries(np.asarray(queries, np.float64))
+        cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards, rescore_factor)
         w = Window.partitionBy("qid").orderBy("dist", "id")
         return (
-            cand.distinct()  # replica rows are exact duplicates
+            cand.distinct()
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .orderBy("qid", "rank")

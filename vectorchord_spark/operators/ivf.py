@@ -64,8 +64,8 @@ CODES_SCHEMA = (
 SCORE_SCHEMA = "id long, cluster_id int, lb double, rough double"
 
 #: Parquet row-group target for the codes table — the probed scan's
-#: pruning granularity (see _write_codes). Env override for A/B runs.
-_CODES_BLOCK_BYTES = int(os.environ.get("VC_CODES_BLOCK_BYTES", 8 << 20))
+#: pruning granularity (see _write_codes).
+_CODES_BLOCK_BYTES = 8 << 20
 
 
 def _binary_fp_matrix(rb, col_name: str, dim: int, fp_dtype: str) -> "np.ndarray":
@@ -698,18 +698,7 @@ class IvfIndex(QuerySampling):
                 pa.binary(nbytes), n, [None, pa.py_buffer(buf)]
             ).cast(pa.binary())
 
-        # VC_ENCODE_TIMERS=1: per-worker phase timers (rotate / route+code /
-        # arrow assembly) printed to executor stderr — the falsifiability
-        # instrument for build-throughput claims (r05 verdict #4): compute
-        # ceilings are measured in the worker, IO ceilings from the A/B of
-        # destination dirs (tools/profile_build.py + docs/SCALE.md).
-        timers_on = os.environ.get("VC_ENCODE_TIMERS") == "1"
-
         def encode(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-            import time as _time
-
-            t_rot = t_code = t_arrow = 0.0
-            n_tot = 0
             centroids = bc.value  # (L, d) f32, rotated space
             # routing assignment in f32 (BLAS sgemm): at 1M rows x 1k cells
             # the f64 distance matrix is memory-bound and dominates build
@@ -726,11 +715,7 @@ class IvfIndex(QuerySampling):
                 if flat.type != pa.float32():
                     flat = flat.cast(pa.float32())
                 mat = np.asarray(flat).reshape(n, dim)
-                t0 = _time.perf_counter() if timers_on else 0.0
                 rot = K.rotate(mat)
-                if timers_on:
-                    t_rot += _time.perf_counter() - t0
-                    t0 = _time.perf_counter()
                 # argmin distance == argmax score; computing the score
                 # in-place halves the memory traffic of the (n, L) routing
                 # matrix (it dominates encode time at large L)
@@ -758,9 +743,6 @@ class IvfIndex(QuerySampling):
                             )
                 else:
                     delta = np.zeros(n, np.float32)
-                if timers_on:
-                    t_code += _time.perf_counter() - t0
-                    t0 = _time.perf_counter()
                 packed = np.packbits(cm["signs"], axis=1, bitorder="little")
                 code_arr = _fixed_binary(packed.tobytes(), packed.shape[1], n)
                 if keep_vec:
@@ -797,9 +779,6 @@ class IvfIndex(QuerySampling):
                     sq_code = pa.nulls(n, pa.binary())
                     sq_du2 = pa.nulls(n, pa.float32())
                     sq_nol = pa.nulls(n, pa.float32())
-                if timers_on:
-                    t_arrow += _time.perf_counter() - t0
-                    n_tot += n
                 yield pa.record_batch(
                     [
                         ids,
@@ -831,16 +810,6 @@ class IvfIndex(QuerySampling):
                         "sq_nol",
                         "sq_code",
                     ],
-                )
-
-            if timers_on and n_tot:
-                import sys as _sys
-
-                print(
-                    f"[vc-encode-timer] rows={n_tot} rotate={t_rot:.3f}s "
-                    f"route+code={t_code:.3f}s arrow={t_arrow:.3f}s",
-                    file=_sys.stderr,
-                    flush=True,
                 )
 
         encoded = src.mapInArrow(encode, schema=CODES_SCHEMA)
@@ -1215,166 +1184,17 @@ class IvfIndex(QuerySampling):
         if prefilter is not None:
             scored = scored.join(prefilter.select("id"), "id", "left_semi")
 
-        # exact-rerank vector source (original-space vectors; Q4/Q5) — or,
-        # for quantized storage, the dequantized-estimate rerank (the
-        # reference's rabitq8/rabitq4 opclass behavior)
-        storage = meta.get("storage", "f32")
-        vec_src = None
-        f32_src = None
-        f16_src = None
-        if base_df is not None:
-            vec_src = base_df
-            if metric == "cos":
-                vec_src = vec_src.select(
-                    "id", D.normalize("vec").cast("array<float>").alias("vec")
-                )
-        elif storage == "f32":
-            if not meta["rerank_in_index"]:
-                raise ValueError(
-                    "index built with rerank_in_index=False: pass base_df"
-                )
-            f32_src = self._codes_df(probed, ["id", "vec"])
-        elif storage == "f16":
-            if not meta["rerank_in_index"]:
-                raise ValueError(
-                    "index built with rerank_in_index=False: pass base_df"
-                )
-            f16_src = self._codes_df(probed, ["id", "vec_f16"])
+        # exact (or, for quantized storage, dequantized-estimate) rerank
+        # through the same storage-dispatched scorer as search_batch, on a
+        # one-query (qid=0, id) candidate frame
+        exact_dist = self._batch_exact_dist(probed, q_exact[None], q_rot[None], base_df)
 
-        if vec_src is not None:
-            qv = D.vec_lit([float(x) for x in q_exact])
-            if metric == "l2":
-                dist = D.l2("vec", qv)
-            elif metric == "dot":
-                dist = D.ip("vec", qv)
-            else:
-                dist = F.lit(1.0) + D.ip("vec", qv)
-
-            def rerank(cand: DataFrame) -> DataFrame:
-                return (
-                    vec_src.join(F.broadcast(cand.select("id")), "id")
-                    .select("id", dist.alias("dist"))
-                    .orderBy("dist", "id")
-                )
-
-        elif f32_src is not None:
-            # f32 payload is PACKED BINARY on disk (see CODES_SCHEMA): decode
-            # per batch and replicate the JVM fold EXACTLY — per-dimension
-            # f64 accumulation in index order reproduces D.l2/D.ip's
-            # aggregate(zip_with(...)) left fold bit-for-bit (same IEEE ops,
-            # same order, same dtypes), so oracle-gated distances are
-            # unchanged by the storage layout.
-            q64 = np.asarray(q_exact, np.float64)
-
-            def f32_fold_score(batches):
-                # mapInArrow, not mapInPandas: pandas treats NaN as the null
-                # sentinel, which would turn a NaN distance (non-finite
-                # stored vector) into SQL NULL and sort it FIRST instead of
-                # last (the issue_427 contract)
-                import pyarrow as pa
-
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    mat = _binary_f32_matrix(rb, "vec", dim)
-                    acc = np.zeros(rb.num_rows, np.float64)
-                    if metric == "l2":
-                        for j in range(dim):
-                            t = mat[:, j] - q64[j]
-                            acc += t * t
-                        d = np.sqrt(acc)
-                    else:
-                        for j in range(dim):
-                            acc += mat[:, j] * q64[j]
-                        d = -acc if metric == "dot" else 1.0 + (-acc)
-                    ids = rb.column(rb.schema.get_field_index("id"))
-                    if ids.type != pa.int64():
-                        ids = ids.cast(pa.int64())
-                    yield pa.record_batch([ids, pa.array(d)], names=["id", "dist"])
-
-            def rerank(cand: DataFrame) -> DataFrame:
-                return (
-                    f32_src.join(F.broadcast(cand.select("id")), "id")
-                    .mapInArrow(f32_fold_score, "id long, dist double")
-                    .orderBy("dist", "id")
-                )
-
-        elif f16_src is not None:
-            # halfvec rerank: decode the 2-byte-packed vectors per Arrow
-            # batch, widen to f64, one vectorized distance per batch.
-            # mapInArrow (not mapInPandas): pandas turns a NaN distance
-            # into SQL NULL, which sorts FIRST instead of the issue_427
-            # non-finite-rows-rank-last contract.
-            q64 = np.asarray(q_exact, np.float64)
-
-            def f16_score(batches):
-                import pyarrow as pa
-
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    mat = _binary_f16_matrix(rb, "vec_f16", dim)
-                    if metric == "l2":
-                        d = np.sqrt(((mat - q64) ** 2).sum(axis=1))
-                    elif metric == "dot":
-                        d = -(mat @ q64)
-                    else:
-                        d = 1.0 - (mat @ q64)
-                    ids = rb.column(rb.schema.get_field_index("id"))
-                    if ids.type != pa.int64():
-                        ids = ids.cast(pa.int64())
-                    yield pa.record_batch([ids, pa.array(d)], names=["id", "dist"])
-
-            def rerank(cand: DataFrame) -> DataFrame:
-                return (
-                    f16_src.join(F.broadcast(cand.select("id")), "id")
-                    .mapInArrow(f16_score, "id long, dist double")
-                    .orderBy("dist", "id")
-                )
-
-        else:
-            # quantized storage: rerank against the dequantized estimate in
-            # rotated space (distances are rotation-invariant); stays in
-            # numpy because it's bit unpacking + one matmul per batch
-            sq_bits = {"rabitq8": 8, "rabitq4": 4}[storage]
-            q_rot64 = np.asarray(q_rot, np.float64)
-            base_off = np.float64(-0.5 * ((1 << sq_bits) - 1))
-            q_norm2 = float(q_rot64 @ q_rot64)
-
-            def sq_score(batches):
-                # mapInArrow for NaN fidelity (see f32_fold_score)
-                import pyarrow as pa
-
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    code = _sq_code_matrix(rb, sq_bits, dim)
-                    scale = np.sqrt(_arrow_f64_np(rb, "sq_dis_u_2")) / _arrow_f64_np(
-                        rb, "sq_nol"
-                    )
-                    centered = code.astype(np.float64) + base_off
-                    dotq = (centered @ q_rot64) * scale
-                    if metric == "l2":
-                        deq_n2 = (
-                            np.einsum("ij,ij->i", centered, centered) * scale * scale
-                        )
-                        d = np.sqrt(np.maximum(q_norm2 + deq_n2 - 2.0 * dotq, 0.0))
-                    elif metric == "dot":
-                        d = -dotq
-                    else:
-                        d = 1.0 - dotq
-                    yield pa.record_batch(
-                        [_arrow_i64(rb, "id"), pa.array(d)], names=["id", "dist"]
-                    )
-
-            sq_src = self._codes_df(probed, ["id", "sq_dis_u_2", "sq_nol", "sq_code"])
-
-            def rerank(cand: DataFrame) -> DataFrame:
-                return (
-                    sq_src.join(F.broadcast(cand.select("id")), "id")
-                    .mapInArrow(sq_score, "id long, dist double")
-                    .orderBy("dist", "id")
-                )
+        def rerank(cand: DataFrame) -> DataFrame:
+            return (
+                exact_dist(cand.select(F.lit(0).alias("qid"), "id"))
+                .select("id", "dist")
+                .orderBy("dist", "id")
+            )
 
         m_cand = rerank_factor * k if rerank_factor is not None else None
         if max_scan_tuples is not None:
@@ -1453,15 +1273,21 @@ class IvfIndex(QuerySampling):
         Q_rot: np.ndarray,
         base_df: DataFrame | None = None,
     ):
-        """Storage-dispatched batch rerank: returns a function mapping a
+        """Storage-dispatched rerank: returns a function mapping a
         candidate DataFrame (qid, id) to exact (or dequantized-estimate)
-        distances (qid, id, dist) — the batch analogue of the reference's
+        distances (qid, id, dist) — the analogue of the reference's
         storage-agnostic rerank heap (crates/vchordrq/src/rerank.rs:113-137).
-        Shared by ``search_batch`` and the maxsim refine stage.
+        The one rerank of ``search`` (a single query as qid 0),
+        ``search_batch`` and the maxsim refine stage.
 
         ``Qe`` is the (nq, dim) f64 query matrix ALREADY normalized for cos
         metrics; ``Q_rot`` its rotated f32 counterpart (used by quantized
-        storage). ``base_df`` switches to rerank-in-table mode (Q5)."""
+        storage). ``base_df`` switches to rerank-in-table mode (Q5).
+
+        The numpy scorers run under mapInArrow, not mapInPandas: pandas
+        treats NaN as the null sentinel, which would turn a NaN distance
+        (non-finite stored vector) into SQL NULL and sort it FIRST instead
+        of last (the issue_427 contract)."""
         meta = self.meta
         metric = meta["metric"]
         dim = meta["dim"]
@@ -1497,16 +1323,15 @@ class IvfIndex(QuerySampling):
             return exact_dist
 
         if storage in ("rabitq8", "rabitq4"):
-            # quantized storage: batch analogue of the single-query
-            # dequantized-estimate rerank (rotation-invariant distances in
-            # rotated space; one decode + row-wise dot per Arrow batch)
+            # quantized storage: the reference's rabitq8/rabitq4 rerank
+            # against the dequantized estimate (rotation-invariant distances
+            # in rotated space; one decode + row-wise dot per Arrow batch)
             sq_bits = {"rabitq8": 8, "rabitq4": 4}[storage]
             Qr64 = np.asarray(Q_rot, np.float64)  # (nq, dim) rotated queries
             base_off = np.float64(-0.5 * ((1 << sq_bits) - 1))
             q_norm2 = np.einsum("ij,ij->i", Qr64, Qr64)
 
             def sq_score(batches):
-                # mapInArrow for NaN fidelity (see f32_fold_score)
                 import pyarrow as pa
 
                 for rb in batches:
@@ -1560,38 +1385,33 @@ class IvfIndex(QuerySampling):
             vec_src = self._codes_df(probed_arr, ["id", "vec"])
             # binary-packed payload (CODES_SCHEMA): decode per batch and
             # replicate the JVM aggregate(zip_with) left fold exactly —
-            # per-dimension f64 accumulation, so batch rerank distances
-            # stay bit-identical to the former array<float> expression
+            # per-dimension f64 accumulation in index order (same IEEE
+            # ops, same order, same dtypes as D.l2/D.ip), so oracle-gated
+            # distances are unchanged by the storage layout
             Q64 = np.asarray(Qe, np.float64)
-            dim_ = int(meta["dim"])
 
             def f32_fold_batch(batches):
-                # mapInArrow for NaN fidelity (see f32_fold_score)
                 import pyarrow as pa
 
                 for rb in batches:
                     if not rb.num_rows:
                         continue
-                    mat = _binary_f32_matrix(rb, "vec", dim_)
-                    qids = rb.column(rb.schema.get_field_index("qid"))
-                    if qids.type != pa.int32():
-                        qids = qids.cast(pa.int32())
-                    qs = Q64[np.asarray(qids, np.int64)]
+                    mat = _binary_f32_matrix(rb, "vec", dim)
+                    qid_arr = _arrow_i32(rb, "qid")
+                    qs = Q64[np.asarray(qid_arr, np.int64)]
                     acc = np.zeros(rb.num_rows, np.float64)
                     if metric == "l2":
-                        for j in range(dim_):
+                        for j in range(dim):
                             t = mat[:, j] - qs[:, j]
                             acc += t * t
                         d = np.sqrt(acc)
                     else:
-                        for j in range(dim_):
+                        for j in range(dim):
                             acc += mat[:, j] * qs[:, j]
                         d = -acc if metric == "dot" else 1.0 + (-acc)
-                    ids = rb.column(rb.schema.get_field_index("id"))
-                    if ids.type != pa.int64():
-                        ids = ids.cast(pa.int64())
                     yield pa.record_batch(
-                        [qids, ids, pa.array(d)], names=["qid", "id", "dist"]
+                        [qid_arr, _arrow_i64(rb, "id"), pa.array(d)],
+                        names=["qid", "id", "dist"],
                     )
 
             def exact_dist(cand: DataFrame) -> DataFrame:
@@ -1611,7 +1431,6 @@ class IvfIndex(QuerySampling):
         Qmat = Qe  # (nq, dim) f64, closure-captured (tiny)
 
         def f16_score(batches):
-            # mapInArrow for NaN fidelity (see f32_fold_score)
             import pyarrow as pa
 
             for rb in batches:
