@@ -583,43 +583,109 @@ def test_search_batch_quantized_storage(spark, clustered_df):
             assert by_q[qi] == single
 
 
-@pytest.mark.parametrize("storage", ["f32", "f16", "rabitq8", "rabitq4", "base_df"])
-def test_search_matches_search_batch(spark, clustered_df, storage):
-    """search(q) and search_batch([q]) rerank through the same
-    storage-dispatched scorer, so they return identical (id, dist) rows
-    for every storage and for rerank-in-table (base_df), on the
-    short-circuit (all probed rows) and the rough-scoring path."""
+_MATCH_CASES = {
+    "f32": {},
+    "f16": {"storage": "f16"},
+    "rabitq8": {"storage": "rabitq8"},
+    "rabitq4": {"storage": "rabitq4"},
+    "base_df": {"rerank_in_index": False},
+    "dot": {"metric": "dot"},
+    "cos": {"metric": "cos"},
+    "residual": {"residual_quantization": True},
+}
+
+
+@pytest.mark.parametrize("case", list(_MATCH_CASES))
+def test_search_matches_search_batch(spark, clustered_df, case):
+    """search(q) and search_batch([q]) share the query prep, the rough-
+    scoring kernel and the storage-dispatched rerank, so they return
+    identical (id, dist) rows for every storage, rerank-in-table
+    (base_df), every metric and residual quantization: on the exhaustive
+    rerank (short circuit and rough path) and on the rough path's
+    top-m-by-lb rerank with and without the guarantee pass."""
     rng = np.random.default_rng(61)
     q = [float(x) for x in rng.uniform(-1, 1, 8)]
-    if storage == "base_df":
-        opts = IvfOptions(metric="l2", lists=[33], rerank_in_index=False)
-        kw = {"base_df": clustered_df.select("id", "vec")}
-    else:
-        opts = IvfOptions(metric="l2", lists=[33], storage=storage)
-        kw = {}
+    opts = IvfOptions(**{"metric": "l2", "lists": [33], **_MATCH_CASES[case]})
+    kw = {"base_df": clustered_df.select("id", "vec")} if case == "base_df" else {}
     with tempfile.TemporaryDirectory() as tmp:
         idx = IvfIndex.build(
             spark, clustered_df, "id", "vec", os.path.join(tmp, "idx"), opts
         )
-        batch = [
-            (r.id, r.dist)
-            for r in sorted(
-                idx.search_batch(
-                    [q], k=10, probes=[16], rerank_factor=None, **kw
-                ).collect(),
-                key=lambda r: r.rank,
-            )
-        ]
-        assert len(batch) == 10
+
+        def batch(**opt):
+            rows = idx.search_batch([q], k=10, probes=[16], **opt, **kw).collect()
+            return [(r.id, r.dist) for r in sorted(rows, key=lambda r: r.rank)]
+
+        def single(**opt):
+            rows = idx.search(q, k=10, probes=[16], **opt, **kw).collect()
+            return [(r.id, r.dist) for r in rows]
+
+        want = batch(rerank_factor=None)
+        assert len(want) == 10
         for cheap_threshold in (8192, 0):
-            single = [
-                (r.id, r.dist)
-                for r in idx.search(
-                    q, k=10, probes=[16], rerank_factor=None,
-                    cheap_threshold=cheap_threshold, **kw,
-                ).collect()
-            ]
-            assert single == batch, cheap_threshold
+            got = single(rerank_factor=None, cheap_threshold=cheap_threshold)
+            assert got == want, cheap_threshold
+        for guarantee in (True, False):
+            want = batch(rerank_factor=4, guarantee=guarantee)
+            assert len(want) == 10
+            got = single(rerank_factor=4, guarantee=guarantee, cheap_threshold=0)
+            assert got == want, guarantee
+
+
+def test_search_breaks_lb_ties_by_id(spark):
+    """Planted duplicates: every vector appears 6 times, so its copies
+    share one code and one lower bound. The top-m-by-lb candidate cut must
+    break those ties by id in search as in search_batch, or search(q)
+    returns other copies than search_batch([q]) at equal distance."""
+    rng = np.random.default_rng(71)
+    base = rng.uniform(-1, 1, size=(200, 8))
+    rows = [
+        (i * 6 + c, [float(x) for x in base[i]]) for i in range(200) for c in range(6)
+    ]
+    df = spark.createDataFrame(rows, "id long, vec array<float>")
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = IvfIndex.build(
+            spark, df, "id", "vec", os.path.join(tmp, "idx"),
+            IvfOptions(metric="l2", lists=[8]),
+        )
+        opt = {"k": 9, "probes": [8], "rerank_factor": 1, "guarantee": False}
+        for _ in range(8):
+            q = [float(x) for x in rng.uniform(-1, 1, 8)]
+            got = idx.search(q, cheap_threshold=0, **opt).collect()
+            want = sorted(idx.search_batch([q], **opt).collect(), key=lambda r: r.rank)
+            assert [(r.id, r.dist) for r in got] == [(r.id, r.dist) for r in want]
+
+
+@pytest.mark.parametrize("length", [1, 9])
+def test_ivf_rejects_wrong_dimension(spark, clustered_df, length):
+    """A query whose length is not the index dimension (8) fails with a
+    ValueError in every IVF query entry point, before any Spark job runs
+    or query sampling records it."""
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = IvfIndex.build(
+            spark, clustered_df.limit(500), "id", "vec", os.path.join(tmp, "idx"),
+            IvfOptions(metric="cos", lists=[4]),
+        )
+        idx.enable_query_sampling(rate=1.0)
+        q = [0.5] * length
+        calls = [
+            lambda: idx.search(q, k=3),
+            lambda: idx.search_batch([q], k=3),
+            lambda: idx.probed_union([q], 2),
+            lambda: idx.estimation_by_threshold(q, 2, 10),
+        ]
+        sc = spark.sparkContext
+        group = f"ivf-wrong-dim-{length}"
+        sc.setJobGroup(group, "wrong-dimension IVF query")
+        try:
+            for call in calls:
+                with pytest.raises(ValueError, match="query dimension"):
+                    call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert not os.path.exists(idx._queries_log_path)
 
 
 def test_search_batch_rerank_in_table(spark, clustered_df):

@@ -1,8 +1,8 @@
 """Isolated steady-state timing for catalog entries (r05 verdict #6).
 
 Runs each named headline entry N consecutive times (bench serving shape,
-nothing else on the machine) and prints per-run times plus min/median —
-the profile_probes.py treatment, generalized. Absolute bench medians on
+nothing else on the machine) and prints per-run times plus min/median.
+Absolute bench medians on
 this container swing up to 4x same-day (docs/SCALE.md), so apparent
 regressions are confirmed or cleared HERE, not from two rounds' bench
 lines.

@@ -118,6 +118,7 @@ def set_blas_threads(n: int) -> "int | None":
 __all__ = [
     "rotate",
     "rotate_inverse",
+    "prep_queries",
     "bit_code",
     "pack_bits",
     "unpack_bits",
@@ -354,6 +355,27 @@ def rotate(x: np.ndarray) -> np.ndarray:
 def rotate_inverse(x: np.ndarray) -> np.ndarray:
     """Inverse of :func:`rotate`."""
     return _rotate_impl(x, reverse=True)
+
+
+def prep_queries(
+    queries: "np.ndarray | list", metric: str, dim: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Query prep shared by every IVF, graph and MaxSim query entry point:
+    the (nq, dim) query matrix is dimension-checked (mirroring
+    crates/vchordrq/src/search.rs:58 and crates/vchordg/src/search.rs),
+    normalized for cos, and rotated. Returns (normalized f64 queries,
+    rotated f32 queries)."""
+    Qe = np.asarray(queries, np.float64)
+    if Qe.ndim != 2 or Qe.shape[1] != dim:
+        raise ValueError(
+            f"query dimension {Qe.shape[1:]} does not match index "
+            f"dimension {dim}"
+        )
+    if metric == "cos":
+        norms = np.linalg.norm(Qe, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        Qe = Qe / norms
+    return Qe, rotate(Qe.astype(np.float32))
 
 
 # ---------------------------------------------------------------------------

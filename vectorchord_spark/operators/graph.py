@@ -1694,23 +1694,6 @@ class VamanaIndex(QuerySampling):
             _make_shard_reader(self.graph_path, cols, body), out_schema
         )
 
-    def _prep_queries(self, Qe: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Query prep shared by ``search`` and ``search_batch``: the
-        (nq, dim) f64 query matrix is dimension-checked (mirroring
-        crates/vchordg/src/search.rs), normalized for cos, and rotated.
-        Returns (normalized f64 queries, rotated f32 queries)."""
-        dim = self.meta["dim"]
-        if Qe.ndim != 2 or Qe.shape[1] != dim:
-            raise ValueError(
-                f"query dimension {Qe.shape[1:]} does not match index "
-                f"dimension {dim}"
-            )
-        if self.meta["metric"] == "cos":
-            norms = np.linalg.norm(Qe, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            Qe = Qe / norms
-        return Qe, K.rotate(Qe.astype(np.float32))
-
     def _candidates(
         self,
         Qe: np.ndarray,
@@ -1800,7 +1783,9 @@ class VamanaIndex(QuerySampling):
         ``ef_search=None`` (the default) auto-scales the beam width with
         the probed shards' sizes (see ``_auto_ef_search``); pass an int to
         pin it (the reference's fixed GUC behavior)."""
-        Qe, Q_rot = self._prep_queries(np.asarray(query, np.float64)[None])
+        Qe, Q_rot = K.prep_queries(
+            np.asarray(query, np.float64)[None], self.meta["metric"], self.meta["dim"]
+        )
         self._maybe_record_query(Qe[0].astype(np.float32))
         cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards, rescore_factor)
         return (
@@ -1824,7 +1809,7 @@ class VamanaIndex(QuerySampling):
         value over the batch's union of probed shards — see ``search``)."""
         from pyspark.sql import Window
 
-        Qe, Q_rot = self._prep_queries(np.asarray(queries, np.float64))
+        Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
         cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards, rescore_factor)
         w = Window.partitionBy("qid").orderBy("dist", "id")
         return (

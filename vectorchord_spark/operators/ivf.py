@@ -61,7 +61,6 @@ CODES_SCHEMA = (
     "factor_err float, delta float, code binary, vec binary, "
     "vec_f16 binary, sq_dis_u_2 float, sq_nol float, sq_code binary"
 )
-SCORE_SCHEMA = "id long, cluster_id int, lb double, rough double"
 
 #: Parquet row-group target for the codes table — the probed scan's
 #: pruning granularity (see _write_codes).
@@ -141,6 +140,31 @@ def _arrow_f64_np(rb, name: str) -> "np.ndarray":
     return np.asarray(
         rb.column(rb.schema.get_field_index(name)), dtype=np.float64
     )
+
+
+def _guarantee_threshold(top: DataFrame, metric: str, k: int, *by: str) -> DataFrame:
+    """The guarantee pass's lb threshold per ``by`` group (one row for
+    ``search``, one per qid for ``search_batch``): the k-th pass-1 exact
+    distance ``d_k`` mapped from the output space to the internal lb space
+    (squared-l2 / negated-dot), or +inf when pass 1 produced fewer than k
+    rows."""
+    if metric == "l2":
+        t = F.col("d_k") * F.col("d_k")
+    elif metric == "cos":
+        t = F.col("d_k") - F.lit(1.0)
+    else:
+        t = F.col("d_k")
+    return (
+        top.groupBy(*by)
+        .agg(F.count(F.lit(1)).alias("n_top"), F.max("dist").alias("d_k"))
+        .select(
+            *by,
+            F.when(F.col("n_top") < int(k), F.lit(float("inf")))
+            .otherwise(t.cast("double"))
+            .alias("_thresh"),
+        )
+    )
+
 
 #: hard per-cell sample bound for the distributed leaf k-means stage —
 #: caps ONE applyInPandas task's input even when coarse-cell skew
@@ -958,17 +982,21 @@ class IvfIndex(QuerySampling):
     def _descend(
         self,
         q_rot: np.ndarray,
-        probes: list[int] | None,
+        probes: list[int] | int | None,
         lazy: bool = False,
         epsilon: float = 1.9,
     ) -> np.ndarray:
         """Centroid-tree descent on the driver (the tree is small/broadcast;
         mirrors /root/reference/crates/vchordrq/src/search.rs:95-157).
-        ``lazy=True`` scores each level with RaBitQ estimates + error
-        bounds and exact-rescoring on pop (the reference's default); the
-        default scores every candidate exactly (equivalent selection when
-        the ε bounds hold, cheaper for shallow trees)."""
+        An int ``probes`` keeps every upper-level centroid and probes that
+        many leaf cells. ``lazy=True`` scores each level with RaBitQ
+        estimates + error bounds and exact-rescoring on pop (the
+        reference's default); the default scores every candidate exactly
+        (equivalent selection when the ε bounds hold, cheaper for shallow
+        trees)."""
         metric = self.meta["metric"]
+        if isinstance(probes, int):
+            probes = [len(lv["parent"]) for lv in self.levels[:-1]] + [probes]
         if probes is not None and len(probes) != len(self.levels):
             raise ValueError(
                 f"probes must have {len(self.levels)} entries (one per level)"
@@ -997,27 +1025,32 @@ class IvfIndex(QuerySampling):
                 keep = cand
         return keep
 
+    def _probe(
+        self,
+        Q_rot: np.ndarray,
+        probes: list[int] | int | None,
+        lazy: bool = False,
+        epsilon: float = 1.9,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Descend every rotated query. Returns (sorted union of the probed
+        leaf cells, (n_leaves, nq) mask of the cells each query probed)."""
+        mask = np.zeros((self.meta["n_leaves"], len(Q_rot)), bool)
+        for qi in range(len(Q_rot)):
+            probed = self._descend(Q_rot[qi], probes, lazy=lazy, epsilon=epsilon)
+            mask[probed, qi] = True
+        return np.flatnonzero(mask.any(axis=1)), mask
+
     def probed_union(
         self,
         queries: "list[list[float]] | np.ndarray",
         probes: list[int] | int | None,
     ) -> np.ndarray:
         """Union of probed leaf cells across a query batch (the same
-        normalization + descent search_batch performs) — lets callers prune
-        auxiliary scans (e.g. the maxsim refine join) to the probed cells."""
-        meta = self.meta
-        Qe = np.asarray(queries, np.float64)
-        if meta["metric"] == "cos":
-            norms = np.linalg.norm(Qe, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            Qe = Qe / norms
-        Q_rot = K.rotate(Qe.astype(np.float32))
-        if isinstance(probes, int):
-            probes = [len(lv["parent"]) for lv in self.levels[:-1]] + [probes]
-        union: set[int] = set()
-        for qi in range(len(Q_rot)):
-            union.update(int(c) for c in self._descend(Q_rot[qi], probes))
-        return np.array(sorted(union))
+        ``K.prep_queries`` prep and descent as ``search_batch``) — lets
+        callers prune auxiliary scans (e.g. the maxsim refine join) to the
+        probed cells."""
+        _, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
+        return self._probe(Q_rot, probes)[0]
 
     def _codes_base(self) -> DataFrame:
         """The codes table as an ANALYZED lazy DataFrame, cached per codes
@@ -1061,6 +1094,13 @@ class IvfIndex(QuerySampling):
     ) -> DataFrame:
         """k-NN search returning a DataFrame (id, dist) ordered by distance.
 
+        One query through the same front end as ``search_batch`` (qid 0):
+        the shared prep (``K.prep_queries``), the descent, the shared
+        rough-scoring kernel (``_rough_scored``) and the shared
+        storage-dispatched rerank (``_batch_exact_dist``). Only the plan
+        around them is single-query: a global ``orderBy("lb", "id")``
+        pass 1 and a 1-row threshold cross join instead of per-qid windows.
+
         ``cheap_threshold``: when the probed cells hold at most this many
         rows, skip the RaBitQ rough-scoring + guarantee machinery and
         exact-rerank every probed row directly — the answer is the same
@@ -1087,114 +1127,26 @@ class IvfIndex(QuerySampling):
         """
         meta = self.meta
         metric = meta["metric"]
-        # keep the query in full double precision for the exact rerank
-        # expression; the f32 copy is only for rotation / LUT quantization
-        q_exact = np.asarray(query, np.float64)
-        if q_exact.shape != (meta["dim"],):
-            # explicit dim check, mirroring crates/vchordrq/src/search.rs:58
-            raise ValueError(
-                f"query dimension {q_exact.shape} does not match index "
-                f"dimension {meta['dim']}"
-            )
-        if metric == "cos":
-            n = float(np.linalg.norm(q_exact))
-            if n > 0:
-                q_exact = q_exact / n
-        q = q_exact.astype(np.float32)
-        self._maybe_record_query(q)
-        q_rot = K.rotate(q)
-        if isinstance(probes, int):
-            probes = [len(lv["parent"]) for lv in self.levels[:-1]] + [probes]
-        probed = self._descend(q_rot, probes, lazy=lazy_descent, epsilon=epsilon)
+        # Qe keeps the query in full double precision for the exact rerank;
+        # the rotated f32 Q_rot drives the descent, the LUT and the
+        # quantized-storage rerank
+        Qe, Q_rot = K.prep_queries(
+            np.asarray(query, np.float64)[None], metric, meta["dim"]
+        )
+        self._maybe_record_query(Qe[0].astype(np.float32))
+        probed, probe_mask = self._probe(
+            Q_rot, probes, lazy=lazy_descent, epsilon=epsilon
+        )
         if len(probed) == 0:
             return self._empty_result()
 
-        internal = "l2" if metric == "l2" else "dot"
-        lut = K.binary_lut(q_rot)
-        residual = meta["residual_quantization"]
-        dim = meta["dim"]
-        if residual:
-            leaf_rot = self.levels[-1]["vec_rot"].astype(np.float64)
-            if internal == "l2":
-                dis_f_all = (
-                    ((leaf_rot - q_rot.astype(np.float64)) ** 2).sum(axis=1)
-                ).astype(np.float32)
-                norm_all = None
-            else:
-                dis_f_all = (-(leaf_rot @ q_rot.astype(np.float64))).astype(np.float32)
-                norm_all = np.linalg.norm(leaf_rot, axis=1).astype(np.float32)
-        else:
-            dis_f_all = None
-            norm_all = None
-        eps = float(epsilon)
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                bits = K.unpack_bits(list(pdf["code"]), dim)
-                sums = bits.astype(np.int64) @ lut["qvector"].astype(np.int64)
-                m = {
-                    "dis_u_2": pdf["dis_u_2"].to_numpy(np.float32),
-                    "factor_cnt": pdf["factor_cnt"].to_numpy(np.float32),
-                    "factor_ip": pdf["factor_ip"].to_numpy(np.float32),
-                    "factor_err": pdf["factor_err"].to_numpy(np.float32),
-                }
-                cids = pdf["cluster_id"].to_numpy(np.int64)
-                if residual:
-                    delta = pdf["delta"].to_numpy(np.float32)
-                    if internal == "l2":
-                        rough, err = K.rough_l2(
-                            sums, m, lut, dis_f=dis_f_all[cids], delta=delta
-                        )
-                    else:
-                        rough, err = K.rough_dot(
-                            sums,
-                            m,
-                            lut,
-                            dis_f=dis_f_all[cids],
-                            delta=delta,
-                            norm=norm_all[cids],
-                        )
-                else:
-                    if internal == "l2":
-                        rough, err = K.rough_l2(sums, m, lut)
-                    else:
-                        rough, err = K.rough_dot(sums, m, lut)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"].to_numpy(np.int64),
-                        "cluster_id": cids.astype(np.int32),
-                        "lb": (rough - eps * err).astype(np.float64),
-                        "rough": rough.astype(np.float64),
-                    }
-                )
-
-        meta_cols = [
-            "id",
-            "cluster_id",
-            "dis_u_2",
-            "factor_cnt",
-            "factor_ip",
-            "factor_err",
-            "delta",
-            "code",
-        ]
-        scored = self._codes_df(probed, meta_cols).mapInPandas(score, SCORE_SCHEMA)
-        if prefilter is not None:
-            scored = scored.join(prefilter.select("id"), "id", "left_semi")
-
         # exact (or, for quantized storage, dequantized-estimate) rerank
-        # through the same storage-dispatched scorer as search_batch, on a
-        # one-query (qid=0, id) candidate frame
-        exact_dist = self._batch_exact_dist(probed, q_exact[None], q_rot[None], base_df)
+        # through the same storage-dispatched scorer as search_batch, on
+        # one-query (qid=0, id) candidate frames
+        exact_dist = self._batch_exact_dist(probed, Qe, Q_rot, base_df)
 
         def rerank(cand: DataFrame) -> DataFrame:
-            return (
-                exact_dist(cand.select(F.lit(0).alias("qid"), "id"))
-                .select("id", "dist")
-                .orderBy("dist", "id")
-            )
+            return exact_dist(cand).select("id", "dist").orderBy("dist", "id")
 
         m_cand = rerank_factor * k if rerank_factor is not None else None
         if max_scan_tuples is not None:
@@ -1218,53 +1170,132 @@ class IvfIndex(QuerySampling):
             cand = self._codes_df(probed, ["id"])
             if prefilter is not None:
                 cand = cand.join(prefilter.select("id"), "id", "left_semi")
-            return rerank(cand).limit(int(k))
+            return rerank(cand.select(F.lit(0).alias("qid"), "id")).limit(int(k))
 
+        scored = self._rough_scored(probed, probe_mask, Q_rot, epsilon)
+        if prefilter is not None:
+            scored = scored.join(prefilter.select("id"), "id", "left_semi")
         if m_cand is None:
             # exhaustive: rerank everything that was scored
-            return rerank(scored).limit(int(k))
+            return rerank(scored.select("qid", "id")).limit(int(k))
 
         if not guarantee or max_scan_tuples is not None:
             # single-consumer plan: persisting here would only add cache
             # churn (the scored scan is read exactly once)
-            return rerank(scored.orderBy("lb").limit(int(m_cand))).limit(int(k))
+            top_m = scored.orderBy("lb", "id").limit(int(m_cand))
+            return rerank(top_m.select("qid", "id")).limit(int(k))
         # the guarantee pass reads `scored` twice (pass-1 top-m and the
         # lb ≤ D_k sweep) — persist so the python scoring stage runs once
         scored = self._persist_scored(scored)
-        pass1 = scored.orderBy("lb").limit(int(m_cand))
+        pass1 = scored.orderBy("lb", "id").limit(int(m_cand)).select("qid", "id")
         # guarantee pass as ONE lazy plan (no mid-plan driver collect — the
         # k-th pass-1 distance reaches the lb filter as a broadcast 1-row
         # join, so the whole search is a single Spark action): rerank
-        # everything with lb ≤ D_k (internal space: squared-l2/negated-dot),
-        # falling back to "rerank all scored" (threshold = +inf) when pass 1
-        # produced fewer than k rows
-        p1_top = rerank(pass1).limit(int(k))
-        if metric == "l2":
-            t = F.col("d_k") * F.col("d_k")
-        elif metric == "cos":
-            t = F.col("d_k") - F.lit(1.0)
-        else:
-            t = F.col("d_k")
-        thresh_df = (
-            p1_top.agg(
-                F.count(F.lit(1)).alias("n_top"), F.max("dist").alias("d_k")
-            )
-            .select(
-                F.when(F.col("n_top") < int(k), F.lit(float("inf")))
-                .otherwise(t.cast("double"))
-                .alias("_thresh")
-            )
-        )
+        # everything with lb ≤ D_k, falling back to "rerank all scored"
+        # (threshold = +inf) when pass 1 produced fewer than k rows
+        thresh_df = _guarantee_threshold(rerank(pass1).limit(int(k)), metric, k)
         # union pass-1: a pass-1 winner whose lb exceeds thresh (the ε bound
         # is probabilistic) must not be dropped from the final rerank
         final_cand = (
             scored.crossJoin(F.broadcast(thresh_df))
             .where(F.col("lb") <= F.col("_thresh"))
-            .select("id")
-            .unionAll(pass1.select("id"))
+            .select("qid", "id")
+            .unionAll(pass1)
             .distinct()
         )
         return rerank(final_cand).limit(int(k))
+
+    def _rough_scored(
+        self,
+        probed: np.ndarray,
+        probe_mask: np.ndarray,
+        Q_rot: np.ndarray,
+        epsilon: float,
+    ) -> DataFrame:
+        """The one RaBitQ rough-scoring kernel, shared by ``search`` (one
+        query as qid 0) and ``search_batch``: ONE scan of the probed cells'
+        codes, where each batch's sums for every query come from a single
+        ``bits @ QQᵀ`` matmul and a row is scored only for the queries
+        whose descent probed its cell (``probe_mask``, (n_leaves, nq)).
+        Returns (qid, id, lb, rough) in the index's internal distance space
+        (squared-l2 / negated-dot) with ``lb = rough − ε·err``."""
+        meta = self.meta
+        dim = meta["dim"]
+        nq = len(Q_rot)
+        internal = "l2" if meta["metric"] == "l2" else "dot"
+        luts = [K.binary_lut(Q_rot[qi]) for qi in range(nq)]
+        QQ = np.stack([lut["qvector"] for lut in luts]).astype(np.int64)  # (nq, d)
+        residual = meta["residual_quantization"]
+        if residual:
+            leaf_rot = self.levels[-1]["vec_rot"].astype(np.float64)
+            if internal == "l2":
+                dis_f_all = np.stack(
+                    [
+                        ((leaf_rot - Q_rot[qi].astype(np.float64)) ** 2).sum(axis=1)
+                        for qi in range(nq)
+                    ]
+                ).astype(np.float32)  # (nq, L)
+                norm_all = None
+            else:
+                dis_f_all = np.stack(
+                    [-(leaf_rot @ Q_rot[qi].astype(np.float64)) for qi in range(nq)]
+                ).astype(np.float32)
+                norm_all = np.linalg.norm(leaf_rot, axis=1).astype(np.float32)
+        else:
+            dis_f_all = None
+            norm_all = None
+        eps = float(epsilon)
+        rough_fn = K.rough_l2 if internal == "l2" else K.rough_dot
+
+        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                bits = K.unpack_bits(list(pdf["code"]), dim)
+                sums_all = bits.astype(np.int64) @ QQ.T  # (m, nq)
+                m = {
+                    "dis_u_2": pdf["dis_u_2"].to_numpy(np.float32),
+                    "factor_cnt": pdf["factor_cnt"].to_numpy(np.float32),
+                    "factor_ip": pdf["factor_ip"].to_numpy(np.float32),
+                    "factor_err": pdf["factor_err"].to_numpy(np.float32),
+                }
+                cids = pdf["cluster_id"].to_numpy(np.int64)
+                ids = pdf["id"].to_numpy(np.int64)
+                delta = pdf["delta"].to_numpy(np.float32) if residual else None
+                out_id, out_qid, out_lb, out_rough = [], [], [], []
+                for qi in range(nq):
+                    mask = probe_mask[cids, qi]
+                    if not mask.any():
+                        continue
+                    mm = {kk: vv[mask] for kk, vv in m.items()}
+                    kw = {}
+                    if residual:
+                        kw = {"dis_f": dis_f_all[qi][cids[mask]], "delta": delta[mask]}
+                        if internal == "dot":
+                            kw["norm"] = norm_all[cids[mask]]
+                    rough, err = rough_fn(sums_all[mask, qi], mm, luts[qi], **kw)
+                    out_id.append(ids[mask])
+                    out_qid.append(np.full(mask.sum(), qi, np.int32))
+                    out_lb.append((rough - eps * err).astype(np.float64))
+                    out_rough.append(rough.astype(np.float64))
+                if not out_id:
+                    continue
+                yield pd.DataFrame(
+                    {
+                        "qid": np.concatenate(out_qid),
+                        "id": np.concatenate(out_id),
+                        "lb": np.concatenate(out_lb),
+                        "rough": np.concatenate(out_rough),
+                    }
+                )
+
+        meta_cols = [
+            "id", "cluster_id", "dis_u_2", "factor_cnt",
+            "factor_ip", "factor_err", "delta", "code",
+        ]
+        return self._codes_df(probed, meta_cols).mapInPandas(
+            score, "qid int, id long, lb double, rough double"
+        )
 
     def _batch_exact_dist(
         self,
@@ -1280,9 +1311,10 @@ class IvfIndex(QuerySampling):
         The one rerank of ``search`` (a single query as qid 0),
         ``search_batch`` and the maxsim refine stage.
 
-        ``Qe`` is the (nq, dim) f64 query matrix ALREADY normalized for cos
-        metrics; ``Q_rot`` its rotated f32 counterpart (used by quantized
-        storage). ``base_df`` switches to rerank-in-table mode (Q5).
+        ``Qe`` and ``Q_rot`` are the shared prep's output
+        (``K.prep_queries``: the (nq, dim) f64 queries normalized for cos,
+        and their rotated f32 counterpart, used by quantized storage).
+        ``base_df`` switches to rerank-in-table mode (Q5).
 
         The numpy scorers run under mapInArrow, not mapInPandas: pandas
         treats NaN as the null sentinel, which would turn a NaN distance
@@ -1472,11 +1504,13 @@ class IvfIndex(QuerySampling):
     ) -> DataFrame:
         """Multi-query k-NN in ONE pass over the codes table.
 
-        The Spark-native serving shape: all queries descend on the driver
-        (one vectorized matmul), the union of probed clusters is scanned
-        once, the Python scoring stage computes every query's rough
-        estimates from a single ``bits @ QQᵀ`` matmul, and the rerank is a
-        JVM expression indexing a broadcast literal array of query vectors.
+        The Spark-native serving shape, and the same front end as
+        ``search``: the queries go through the shared prep
+        (``K.prep_queries``) and descend the centroid tree, the union of
+        probed clusters is scanned once by the shared rough-scoring kernel
+        (``_rough_scored``: every query's estimates from a single
+        ``bits @ QQᵀ`` matmul), and candidates are reranked by the shared
+        storage-dispatched scorer (``_batch_exact_dist``).
         Returns (qid, id, dist, rank) with rank ≤ k per query.
 
         ``base_df``: rerank against this (id, vec) table instead of the
@@ -1492,122 +1526,13 @@ class IvfIndex(QuerySampling):
         ``search(prefilter=...)``; one broadcast semi-join on the shared
         scored scan).
         """
-        meta = self.meta
-        metric = meta["metric"]
-        dim = meta["dim"]
-        Qe = np.asarray(queries, np.float64)
-        if Qe.ndim != 2 or Qe.shape[1] != dim:
-            raise ValueError(
-                f"query batch shape {Qe.shape} does not match index dimension {dim}"
+        Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
+        probed_arr, probe_mask = self._probe(Q_rot, probes)
+        if not len(probed_arr):
+            return self.spark.createDataFrame(
+                [], "qid int, id long, dist double, rank int"
             )
-        if metric == "cos":
-            norms = np.linalg.norm(Qe, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            Qe = Qe / norms
-        Q32 = Qe.astype(np.float32)
-        Q_rot = K.rotate(Q32)
-        nq = len(Q32)
-        if isinstance(probes, int):
-            probes = [len(lv["parent"]) for lv in self.levels[:-1]] + [probes]
-
-        n_leaves = self.meta["n_leaves"]
-        probe_mask = np.zeros((n_leaves, nq), bool)
-        union_probed: set[int] = set()
-        for qi in range(nq):
-            probed = self._descend(Q_rot[qi], probes)
-            probe_mask[probed, qi] = True
-            union_probed.update(int(c) for c in probed)
-        if not union_probed:
-            return self.spark.createDataFrame([], "qid int, id long, dist double, rank int")
-
-        internal = "l2" if metric == "l2" else "dot"
-        luts = [K.binary_lut(Q_rot[qi]) for qi in range(nq)]
-        QQ = np.stack([lut["qvector"] for lut in luts]).astype(np.int64)  # (nq, d)
-        residual = meta["residual_quantization"]
-        if residual:
-            leaf_rot = self.levels[-1]["vec_rot"].astype(np.float64)
-            if internal == "l2":
-                dis_f_all = np.stack(
-                    [
-                        ((leaf_rot - Q_rot[qi].astype(np.float64)) ** 2).sum(axis=1)
-                        for qi in range(nq)
-                    ]
-                ).astype(np.float32)  # (nq, L)
-                norm_all = None
-            else:
-                dis_f_all = np.stack(
-                    [-(leaf_rot @ Q_rot[qi].astype(np.float64)) for qi in range(nq)]
-                ).astype(np.float32)
-                norm_all = np.linalg.norm(leaf_rot, axis=1).astype(np.float32)
-        else:
-            dis_f_all = None
-            norm_all = None
-        eps = float(epsilon)
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                bits = K.unpack_bits(list(pdf["code"]), dim)
-                sums_all = bits.astype(np.int64) @ QQ.T  # (m, nq)
-                m = {
-                    "dis_u_2": pdf["dis_u_2"].to_numpy(np.float32),
-                    "factor_cnt": pdf["factor_cnt"].to_numpy(np.float32),
-                    "factor_ip": pdf["factor_ip"].to_numpy(np.float32),
-                    "factor_err": pdf["factor_err"].to_numpy(np.float32),
-                }
-                cids = pdf["cluster_id"].to_numpy(np.int64)
-                ids = pdf["id"].to_numpy(np.int64)
-                delta = pdf["delta"].to_numpy(np.float32) if residual else None
-                out_id, out_qid, out_lb, out_rough = [], [], [], []
-                for qi in range(nq):
-                    mask = probe_mask[cids, qi]
-                    if not mask.any():
-                        continue
-                    mm = {kk: vv[mask] for kk, vv in m.items()}
-                    sums = sums_all[mask, qi]
-                    if residual:
-                        if internal == "l2":
-                            rough, err = K.rough_l2(
-                                sums, mm, luts[qi],
-                                dis_f=dis_f_all[qi][cids[mask]],
-                                delta=delta[mask],
-                            )
-                        else:
-                            rough, err = K.rough_dot(
-                                sums, mm, luts[qi],
-                                dis_f=dis_f_all[qi][cids[mask]],
-                                delta=delta[mask],
-                                norm=norm_all[cids[mask]],
-                            )
-                    else:
-                        if internal == "l2":
-                            rough, err = K.rough_l2(sums, mm, luts[qi])
-                        else:
-                            rough, err = K.rough_dot(sums, mm, luts[qi])
-                    out_id.append(ids[mask])
-                    out_qid.append(np.full(mask.sum(), qi, np.int32))
-                    out_lb.append((rough - eps * err).astype(np.float64))
-                    out_rough.append(rough.astype(np.float64))
-                if not out_id:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_qid),
-                        "id": np.concatenate(out_id),
-                        "lb": np.concatenate(out_lb),
-                        "rough": np.concatenate(out_rough),
-                    }
-                )
-
-        meta_cols = [
-            "id", "cluster_id", "dis_u_2", "factor_cnt",
-            "factor_ip", "factor_err", "delta", "code",
-        ]
-        probed_arr = np.array(sorted(union_probed))
-        scored = self._codes_df(probed_arr, meta_cols).mapInPandas(
-            score, "qid int, id long, lb double, rough double"
-        )
+        scored = self._rough_scored(probed_arr, probe_mask, Q_rot, epsilon)
         if prefilter is not None:
             scored = scored.join(prefilter.select("id"), "id", "left_semi")
         from pyspark.sql import Window
@@ -1652,23 +1577,7 @@ class IvfIndex(QuerySampling):
         # lazy-rerank contract) as ONE lazy plan: each query's k-th pass-1
         # exact distance reaches the lb filter as a broadcast nq-row join —
         # the same no-mid-plan-collect shape as the single-query path
-        if metric == "l2":
-            t = F.col("d_k") * F.col("d_k")
-        elif metric == "cos":
-            t = F.col("d_k") - F.lit(1.0)
-        else:
-            t = F.col("d_k")
-        thresh_df = (
-            rerank(pass1)
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("n_top"), F.max("dist").alias("d_k"))
-            .select(
-                "qid",
-                F.when(F.col("n_top") < int(k), F.lit(float("inf")))
-                .otherwise(t.cast("double"))
-                .alias("_thresh"),
-            )
-        )
+        thresh_df = _guarantee_threshold(rerank(pass1), self.meta["metric"], k, "qid")
         final_cand = (
             # left join: a query with NO pass-1 rows at all has no threshold
             # row — treat as +inf (rerank everything it scored)
@@ -1798,17 +1707,12 @@ class IvfIndex(QuerySampling):
         probed cells already cover the threshold), so it composes directly
         with ``search()`` result distances. A floor for what an unvisited
         document could score."""
-        meta = self.meta
-        metric = meta["metric"]
-        q = np.asarray(query, np.float64)
-        if metric == "cos":
-            n = np.linalg.norm(q)
-            if n > 0:
-                q = q / n
-        q_rot = K.rotate(q.astype(np.float32)).astype(np.float64)
-        if isinstance(probes, int):
-            probes = [len(lv["parent"]) for lv in self.levels[:-1]] + [probes]
-        probed = set(int(c) for c in self._descend(q_rot.astype(np.float32), probes))
+        metric = self.meta["metric"]
+        _, Q_rot = K.prep_queries(
+            np.asarray(query, np.float64)[None], metric, self.meta["dim"]
+        )
+        probed = set(int(c) for c in self._descend(Q_rot[0], probes))
+        q_rot = Q_rot[0].astype(np.float64)
         leaf_rot = self.levels[-1]["vec_rot"].astype(np.float64)
         if metric == "l2":
             dists = ((leaf_rot - q_rot) ** 2).sum(axis=1)

@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorchord_spark.kernels import prep_queries
 from vectorchord_spark.operators.ivf import IvfIndex
 
 
@@ -109,18 +110,6 @@ def maxsim_search(
                 "needs base_df (rerank-in-table); quantized storage "
                 "reranks on its own codes"
             )
-        # cos indexes store normalized vectors and search normalized
-        # queries; the refine join computes exact distances itself, so it
-        # must apply the same query normalization search_batch would
-        if index.meta["metric"] == "cos":
-            tn = []
-            for t in tokens_f:
-                arr = np.asarray(t, np.float64)
-                n = float(np.linalg.norm(arr))
-                tn.append((arr / n).tolist() if n > 0 else t)
-            tokens_refine = tn
-        else:
-            tokens_refine = tokens_f
         # reference refine semantics: rough-scored candidate pool + exact
         # rerank of only the top `maxsim_refine` per token
         pool = index.search_batch(
@@ -149,16 +138,11 @@ def maxsim_search(
         head = pool.where(F.col("_rk") <= int(maxsim_refine)).select("qid", "id")
         # storage-dispatched exact rerank of the head, pruned to the probed
         # cells (head candidates can only come from there) — the same
-        # machinery search_batch's own rerank uses, so every storage the
+        # query prep and rerank search_batch uses, so every storage the
         # single-query path reranks, refine reranks too
-        from vectorchord_spark.kernels import rotate
-
-        Qe_r = np.asarray(tokens_refine, np.float64)
+        Qe, Q_rot = prep_queries(tokens_f, metric, index.meta["dim"])
         exact_dist = index._batch_exact_dist(
-            index.probed_union(tokens_f, probes),
-            Qe_r,
-            rotate(Qe_r.astype(np.float32)),
-            base_df=base_df,
+            index.probed_union(tokens_f, probes), Qe, Q_rot, base_df=base_df
         )
         refined = exact_dist(head)
         tail = pool.where(F.col("_rk") > int(maxsim_refine)).select(
