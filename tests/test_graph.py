@@ -12,9 +12,9 @@ from vectorchord_spark.operators.graph import (
     VamanaIndex,
     VamanaOptions,
     _beam_search,
-    _build_vamana,
     _build_vamana_bulk,
     _dists,
+    _options_from_meta,
 )
 
 
@@ -44,7 +44,7 @@ def test_vamana_unit_build():
     rng = np.random.default_rng(0)
     vecs = rng.normal(size=(500, 8)).astype(np.float32)
     opts = VamanaOptions(m=16, ef_construction=32)
-    adj, medoid = _build_vamana(vecs, opts, np.random.default_rng(42))
+    adj, medoid = _build_vamana_bulk(vecs, opts, np.random.default_rng(42))
     assert all(len(a) <= 16 for a in adj)
     # BFS from medoid reaches (almost) everything
     seen = {medoid}
@@ -62,7 +62,7 @@ def test_bulk_build_clustered_recall():
     """The bulk build must keep inter-cluster shortcut edges: a pure-kNN
     candidate pool on clustered data yields a graph whose clusters are
     mutually unreachable by beam search (measured recall@10 ~0.74); the
-    random-candidate augmentation restores incremental-build recall."""
+    random candidates in the pool supply those edges."""
     rng = np.random.default_rng(0)
     n, d = 6000, 32
     centers = rng.normal(size=(30, d)).astype(np.float32) * 5
@@ -85,31 +85,6 @@ def test_bulk_build_clustered_recall():
         res = _beam_search(lambda ids: dall[np.asarray(ids)], adj, medoid, 64)
         hits += len(gt & set(i for _, i in sorted(res)[:10]))
     assert hits / 400 >= 0.95, f"bulk clustered recall {hits / 400}"
-
-
-def test_build_mode_dispatch(monkeypatch):
-    """build_mode and the oversized-shard safety valve pick the right
-    constructor: bulk by default, incremental when forced or when the
-    shard exceeds _BULK_MAX_ROWS (where the bulk O(n²) candidate pass
-    would cost more than the insert loop)."""
-    import vectorchord_spark.operators.graph as G
-
-    calls = []
-    monkeypatch.setattr(
-        G, "_build_vamana", lambda v, o, r: (calls.append("incr"), ([[]] * len(v), 0))[1]
-    )
-    monkeypatch.setattr(
-        G,
-        "_build_vamana_bulk",
-        lambda v, o, r: (calls.append("bulk"), ([[]] * len(v), 0))[1],
-    )
-    rng = np.random.default_rng(0)
-    vecs = rng.normal(size=(50, 4)).astype(np.float32)
-    G._build_graph(vecs, VamanaOptions(), rng)
-    G._build_graph(vecs, VamanaOptions(build_mode="incremental"), rng)
-    monkeypatch.setattr(G, "_BULK_MAX_ROWS", 10)
-    G._build_graph(vecs, VamanaOptions(), rng)
-    assert calls == ["bulk", "incr", "incr"]
 
 
 def test_bulk_build_tiny_inputs():
@@ -359,6 +334,88 @@ def test_graph_insert_delete_compact(spark, vec_df):
         )
         assert deg.max() <= 24 + 8
         assert deg.mean() <= 24
+
+
+def test_graph_empty_build_then_insert(spark, vec_df):
+    """An all-NULL input with a declared dim builds an empty but usable
+    index (reference issue_427 contract): no shard rows, search returns
+    nothing, and a first insert builds the empty shard whole over the new
+    rows, after which exhaustive and default search equal brute force."""
+    rng = np.random.default_rng(23)
+    q = [float(x) for x in rng.uniform(-1, 1, 16)]
+    nulls = spark.createDataFrame(
+        [(i, None) for i in range(50)], "id long, vec array<float>"
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, nulls, "id", "vec", os.path.join(tmp, "g"), VamanaOptions(dim=16)
+        )
+        assert idx.meta["shard_rows"] == {}
+        assert idx.search(q, k=10).collect() == []
+        part = vec_df.where("id < 600")
+        idx.insert(part, "id", "vec")
+        g = spark.read.parquet(idx.graph_path)
+        assert g.count() == 600
+        assert sorted(r.row_no for r in g.select("row_no").collect()) == list(
+            range(600)
+        )
+        exact = brute_topk(part, q, 10)
+        got = [r.id for r in idx.search(q, k=10, ef_search=1 << 20).collect()]
+        assert got == exact
+        assert [r.id for r in idx.search(q, k=10).collect()] == exact
+
+
+def test_graph_dml_write_has_no_second_shuffle(spark, vec_df, monkeypatch):
+    """insert and compact write the rebuilt shards straight out of their
+    groupBy("shard") stage: the written plan repartitions by no column,
+    and every shard directory still holds exactly one parquet file."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from vectorchord_spark.plans import explain as P
+
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if "graph_v" in os.path.basename(path):
+            plans.append(P.explain_str(self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, vec_df.where("id < 2500"), "id", "vec", os.path.join(tmp, "g"),
+            VamanaOptions(metric="l2", m=16, ef_construction=32, n_shards=3),
+        )
+        idx.insert(vec_df.where("id >= 2500"), "id", "vec")
+        idx.delete(vec_df.where(F.col("id") % 11 == 0).select("id"))
+        idx.compact()
+        assert len(plans) == 2
+        for plan in plans:
+            assert "REPARTITION_BY_COL" not in plan, plan
+        dirs = [d for d in os.listdir(idx.graph_path) if d.startswith("shard=")]
+        assert len(dirs) == 3
+        for d in dirs:
+            files = os.listdir(os.path.join(idx.graph_path, d))
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, files
+
+
+def test_graph_options_round_trip(spark, vec_df):
+    """The meta → options reader that insert and compact build with
+    returns exactly the options the index was built with."""
+    given = dict(
+        metric="cos", m=12, ef_construction=20, alpha=[1.0, 1.1, 1.3], bits=1,
+        replication=3, closure_epsilon=0.25, seed=7,
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "g")
+        VamanaIndex.build(
+            spark, vec_df.where("id < 600"), "id", "vec", path,
+            VamanaOptions(n_shards=3, **given),
+        )
+        assert _options_from_meta(VamanaIndex(spark, path).meta) == VamanaOptions(
+            **given
+        )
 
 
 def test_graph_auto_ef_search(spark, vec_df):

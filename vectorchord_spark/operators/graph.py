@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import asdict, dataclass, field
 from typing import Iterator
 
@@ -185,20 +186,12 @@ class VamanaOptions:
     #: declared vector dimension — required only for empty/all-NULL
     #: builds (reference issue_427 contract), else inferred from data
     dim: int | None = None
-    #: "bulk" (default): batch exact-kNN candidates + RobustPrune — the
-    #: Spark-first shard build (~10-20x the incremental loop's speed;
-    #: all rows are present up front so per-row beam searches are
-    #: unnecessary). "incremental": the reference's per-row insert
-    #: protocol (insert.rs:34-395), always used by DML insert regardless
-    #: of this setting.
-    build_mode: str = "bulk"
     seed: int = 42
 
     def validate(self) -> None:
         assert self.metric in ("l2", "dot", "cos")
         assert self.replication >= 1
         assert self.bits in (1, 2)
-        assert self.build_mode in ("bulk", "incremental")
         assert sorted(self.alpha) == list(self.alpha) and self.alpha[0] == 1.0
         assert all(1.0 <= a < 2.0 for a in self.alpha)
 
@@ -492,73 +485,6 @@ def _batch_robust_prune(
     return out
 
 
-def _build_vamana(
-    vecs: np.ndarray, opts: VamanaOptions, rng: np.random.Generator
-) -> tuple[list[list[int]], int]:
-    """In-memory Vamana build over one shard; returns (adjacency, medoid).
-
-    Single incremental pass (the reference inserts each row once); the
-    ascending alpha schedule lives *inside* RobustPrune. Build-time
-    distances are exact f32 (executor-local, no IO amplification); the
-    quantized codes are an artifact for search-time traversal."""
-    n = len(vecs)
-    metric = "l2" if opts.metric == "l2" else "dot"
-    alphas = opts.alpha if metric == "l2" else [1.0]
-    m = opts.m
-    v64 = vecs.astype(np.float64)
-    medoid = int(np.argmin(_dists("l2", v64, v64.mean(axis=0))))
-    adj: list[list[int]] = [[] for _ in range(n)]
-
-    def robust_prune(p: int, cand: list[tuple[float, int]]) -> list[int]:
-        return _robust_prune(v64, metric, alphas, m, p, cand)
-
-    # hot path: ~ef_construction small-index scoring calls per insert —
-    # precomputing row sq-norms turns each l2 call into one gather + one
-    # small matvec instead of a fresh einsum over the gathered rows
-    sq = np.einsum("ij,ij->i", v64, v64) if metric == "l2" else None
-
-    def exact_fn(vq: np.ndarray):
-        if metric == "l2":
-            qq = float(vq @ vq)
-
-            def fn(idx: np.ndarray) -> np.ndarray:
-                return np.maximum(sq[idx] - 2.0 * (v64[idx] @ vq) + qq, 0.0)
-
-        else:
-
-            def fn(idx: np.ndarray) -> np.ndarray:
-                return -(v64[idx] @ vq)
-
-        return fn
-
-    # deferred back-edge pruning: let adjacency grow to m+slack and prune
-    # once, instead of re-pruning on every single overflow (same graph
-    # quality, ~slack× fewer prune calls)
-    slack = max(4, m // 2)
-    for i in rng.permutation(n):
-        i = int(i)
-        cand = _beam_search(
-            exact_fn(v64[i]), adj, medoid, opts.ef_construction,
-            prune_frontier=True,
-        )
-        if adj[i]:
-            nd = _dists(metric, v64[adj[i]], v64[i])
-            cand = cand + list(zip(nd.tolist(), adj[i]))
-        adj[i] = robust_prune(i, cand)
-        for j in adj[i]:
-            if i not in adj[j]:
-                adj[j].append(i)
-                if len(adj[j]) > m + slack:
-                    nd = _dists(metric, v64[adj[j]], v64[j])
-                    adj[j] = robust_prune(j, list(zip(nd.tolist(), adj[j])))
-    for j in range(n):
-        if len(adj[j]) > m:
-            nd = _dists(metric, v64[adj[j]], v64[j])
-            adj[j] = robust_prune(j, list(zip(nd.tolist(), adj[j])))
-    _repair_connectivity(adj, medoid, v64)
-    return adj, medoid
-
-
 def _repair_connectivity(adj: "list[list[int]]", medoid: int, v64: np.ndarray) -> None:
     """Bridge every vertex unreachable from the medoid.
 
@@ -590,20 +516,18 @@ def _repair_connectivity(adj: "list[list[int]]", medoid: int, v64: np.ndarray) -
 def _build_vamana_bulk(
     vecs: np.ndarray, opts: VamanaOptions, rng: np.random.Generator
 ) -> tuple[list[list[int]], int]:
-    """Bulk (batch) graph build over one shard: exact k-nearest-neighbor
-    candidate lists via blocked matrix products, then the SAME RobustPrune
-    + bidirectional-edge + connectivity-repair pipeline as the incremental
-    build.
+    """Whole-shard graph build (every ``build``, ``compact`` and
+    empty-shard ``insert``): exact k-nearest-neighbor candidate lists via
+    blocked matrix products, then RobustPrune, bidirectional edges and
+    connectivity repair; returns (adjacency, medoid).
 
-    This is the Spark-first default for ``build``/``compact``: a shard's
-    rows are all present up front, so candidate generation does not need
-    the reference's per-row beam searches (insert.rs's protocol exists
-    because Postgres inserts arrive one at a time — that path remains the
-    DML ``insert`` implementation). Exact-kNN candidates + alpha-pruned
-    diversity edges is the classic batch DiskANN/NSG construction; search
-    semantics and the recall contracts are unchanged. ~10-20x faster than
-    the incremental loop on a 15k-row shard because candidate generation
-    is two GEMMs instead of ~n beam searches.
+    A shard's rows are all present up front, so candidate generation does
+    not need the reference's per-row beam searches (insert.rs's protocol
+    exists because Postgres inserts arrive one at a time — that protocol
+    remains the DML ``insert`` into a non-empty shard). Exact-kNN
+    candidates + alpha-pruned diversity edges is the classic batch
+    DiskANN/NSG construction; candidate generation is two GEMMs instead
+    of ~n beam searches.
     """
     n = len(vecs)
     metric = "l2" if opts.metric == "l2" else "dot"
@@ -619,11 +543,11 @@ def _build_vamana_bulk(
     # vertices per row. On clustered data a pure-kNN pool lies entirely
     # inside the vertex's own cluster, so the graph has no inter-cluster
     # edges and beam search cannot navigate between clusters (measured:
-    # recall@10 0.74 vs 1.0 incremental on 50-cluster data). The random
-    # candidates restore the long-range shortcut edges that per-row beam
-    # searches provide in the incremental protocol — the alpha prune keeps
-    # a far random candidate exactly when it is diverse (not dominated by
-    # an already-kept edge), which is the DiskANN edge-selection rule.
+    # recall@10 0.74 vs 1.0 with per-row beam-search candidates on
+    # 50-cluster data). The random candidates restore the long-range
+    # shortcut edges that beam-search candidates provide — the alpha
+    # prune keeps a far random candidate exactly when it is diverse (not
+    # dominated by an already-kept edge), the DiskANN edge-selection rule.
     k = min(n - 1, 2 * int(opts.ef_construction))
     nr = min(32, n - 1)
     v32 = np.ascontiguousarray(vecs.astype(np.float32))
@@ -816,12 +740,6 @@ def _build_vamana_bulk(
     return adj, medoid
 
 
-#: above this shard size the bulk builder's O(n²) exact-kNN candidate
-#: pass costs more than the incremental insert loop (measured crossover
-#: ~70k rows at 64d); auto-sharding keeps shards below this, but a user
-#: forcing a small n_shards on a huge input must not quietly go quadratic
-_BULK_MAX_ROWS = 100_000
-
 #: post-closure row bound per BUILD TASK: clusters larger than this split
 #: into hash-subshards at build (routing still probes whole clusters), so
 #: single-task build time/memory is bounded by construction even when
@@ -833,29 +751,6 @@ _BULK_MAX_ROWS = 100_000
 #: at 37-77s each); recall is unaffected by construction since probed
 #: clusters always expand to ALL their subshards
 _MAX_SHARD_ROWS = 20_000
-
-
-def _build_graph(
-    vecs: np.ndarray, opts: VamanaOptions, rng: np.random.Generator
-) -> tuple[list[list[int]], int]:
-    """Dispatch on ``opts.build_mode`` (bulk default, incremental for
-    reference-protocol parity), with a size safety valve: oversized shards
-    fall back to the incremental build rather than paying the bulk
-    builder's quadratic candidate pass."""
-    if opts.build_mode == "incremental" or len(vecs) > _BULK_MAX_ROWS:
-        if opts.build_mode != "incremental":
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "graph shard of %d rows exceeds _BULK_MAX_ROWS=%d; falling "
-                "back to the 10-20x slower incremental build — raise "
-                "n_shards (or let auto-sharding pick it) to stay on the "
-                "bulk path",
-                len(vecs),
-                _BULK_MAX_ROWS,
-            )
-        return _build_vamana(vecs, opts, rng)
-    return _build_vamana_bulk(vecs, opts, rng)
 
 
 def _make_dist_fn(metric: str, bits: int, grp: pd.DataFrame, dim: int, q_rot: np.ndarray):
@@ -904,52 +799,74 @@ def _make_dist_fn(metric: str, bits: int, grp: pd.DataFrame, dim: int, q_rot: np
     return fn2
 
 
+def _source_vectors(df: DataFrame, id_col: str, vec_col: str, metric: str) -> DataFrame:
+    """(id long, vec) rows to index: NULL vectors are skipped (reference
+    null.fail / issue_427 contract) and cos vectors are stored
+    normalized."""
+    src = df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
+    )
+    if metric == "cos":
+        src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
+    return src
+
+
+#: output of :func:`_make_assign_fn`, before the subshard split
+_ASSIGNED_SCHEMA = "id long, vec binary, shard int, is_primary boolean"
+
+
+def _closure_assign(
+    mat: np.ndarray, cents: np.ndarray, metric: str, repl: int, eps: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """SPANN-style closure assignment: primary shard = argmin centroid
+    distance; replicate into up to ``repl`` nearest shards whose distance
+    is within the closure factor of the minimum. Returns (row positions,
+    shard, is_primary), replica rank by rank."""
+    if metric == "dot":
+        d = -(mat @ cents.T)
+    else:
+        # squared l2 up to the constant |x|^2 (argmin/closure ratios need
+        # the true squared distance, so add it)
+        x2 = np.einsum("ij,ij->i", mat, mat)
+        c2 = np.einsum("ij,ij->i", cents, cents)
+        d = x2[:, None] + c2[None, :] - 2.0 * (mat @ cents.T)
+    order = np.argsort(d, axis=1, kind="stable")[:, :repl]
+    d_min = d.min(axis=1)
+    if metric == "dot":
+        thresh = d_min + eps * np.abs(d_min)
+    else:
+        thresh = (1.0 + eps) ** 2 * np.maximum(d_min, 0.0)
+    n = len(mat)
+    rows, shards, prim = [], [], []
+    for r in range(repl):
+        s = order[:, r]
+        keep = np.ones(n, bool) if r == 0 else d[np.arange(n), s] <= thresh
+        idxs = np.nonzero(keep)[0]
+        rows.append(idxs)
+        shards.append(s[idxs].astype(np.int32))
+        prim.append(np.full(len(idxs), r == 0, bool))
+    return np.concatenate(rows), np.concatenate(shards), np.concatenate(prim)
+
+
 def _make_assign_fn(bc_cents, metric: str, repl: int, eps: float):
-    """Closure-assignment mapInPandas fn (SPANN-style): primary shard =
-    argmin centroid distance; replicate into up to ``repl`` nearest shards
-    whose distance is within the closure factor of the minimum."""
+    """Closure-assignment mapInPandas fn: one output row per (vector,
+    shard) placement, vector bytes packed for the shard build."""
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc_cents.value
-        c2 = np.einsum("ij,ij->i", c, c)
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.stack([np.asarray(v, np.float32) for v in pdf["vec"]])
-            if metric == "dot":
-                d = -(mat @ c.T)
-            else:
-                # squared l2 up to the constant |x|^2 (argmin/closure
-                # ratios need the true squared distance, so add it)
-                x2 = np.einsum("ij,ij->i", mat, mat)
-                d = x2[:, None] + c2[None, :] - 2.0 * (mat @ c.T)
-            order = np.argsort(d, axis=1, kind="stable")[:, :repl]
-            d_min = d.min(axis=1)
-            if metric == "dot":
-                thresh = d_min + eps * np.abs(d_min)
-            else:
-                thresh = (1.0 + eps) ** 2 * np.maximum(d_min, 0.0)
-            ids = pdf["id"].to_numpy(np.int64)
+            rows, shards, prim = _closure_assign(
+                mat, bc_cents.value, metric, repl, eps
+            )
             vecs = _f32_row_bytes(mat)
-            out_id, out_vec, out_shard, out_prim = [], [], [], []
-            for r in range(repl):
-                s = order[:, r]
-                keep = (
-                    np.ones(len(ids), bool)
-                    if r == 0
-                    else d[np.arange(len(ids)), s] <= thresh
-                )
-                idxs = np.nonzero(keep)[0]
-                out_id.append(ids[idxs])
-                out_vec.extend(vecs[i] for i in idxs)
-                out_shard.append(s[idxs].astype(np.int32))
-                out_prim.append(np.full(len(idxs), r == 0, bool))
             yield pd.DataFrame(
                 {
-                    "id": np.concatenate(out_id),
-                    "vec": out_vec,
-                    "shard": np.concatenate(out_shard),
-                    "is_primary": np.concatenate(out_prim),
+                    "id": pdf["id"].to_numpy(np.int64)[rows],
+                    "vec": [vecs[i] for i in rows],
+                    "shard": shards,
+                    "is_primary": prim,
                 }
             )
 
@@ -958,41 +875,37 @@ def _make_assign_fn(bc_cents, metric: str, repl: int, eps: float):
 
 def _make_assign_labels_fn(bc_cents, metric: str, repl: int, eps: float):
     """Label-only variant of :func:`_make_assign_fn` for counting passes:
-    same closure-replicated assignment, but only the 4-byte shard label
-    crosses Arrow back — no vector columns are rebuilt or transferred
-    (the same two-pass trade as the IVF distributed k-means counts)."""
+    only the 4-byte shard label crosses Arrow back — no vector columns
+    are rebuilt or transferred (the same two-pass trade as the IVF
+    distributed k-means counts)."""
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc_cents.value
-        c2 = np.einsum("ij,ij->i", c, c)
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.stack([np.asarray(v, np.float32) for v in pdf["vec"]])
-            if metric == "dot":
-                d = -(mat @ c.T)
-            else:
-                x2 = np.einsum("ij,ij->i", mat, mat)
-                d = x2[:, None] + c2[None, :] - 2.0 * (mat @ c.T)
-            order = np.argsort(d, axis=1, kind="stable")[:, :repl]
-            d_min = d.min(axis=1)
-            if metric == "dot":
-                thresh = d_min + eps * np.abs(d_min)
-            else:
-                thresh = (1.0 + eps) ** 2 * np.maximum(d_min, 0.0)
-            n = len(pdf)
-            out = []
-            for r in range(repl):
-                s = order[:, r]
-                keep = (
-                    np.ones(n, bool)
-                    if r == 0
-                    else d[np.arange(n), s] <= thresh
-                )
-                out.append(s[keep].astype(np.int32))
-            yield pd.DataFrame({"shard": np.concatenate(out)})
+            _, shards, _ = _closure_assign(mat, bc_cents.value, metric, repl, eps)
+            yield pd.DataFrame({"shard": shards})
 
     return assign
+
+
+def _subshard(assigned: DataFrame, subs: "list[list[int]]") -> DataFrame:
+    """Cluster id → physical shard: a cluster with ``[base, n_sub]`` in
+    ``subs`` maps a row to ``base + xxhash64(id) % n_sub`` — reproducible,
+    so DML insert routes an id to the same physical shard as the build.
+    Identity when no cluster is split."""
+    if not any(int(n) > 1 for _, n in subs):
+        return assigned
+    base_arr = F.array(*[F.lit(int(b)) for b, _ in subs])
+    nsub_arr = F.array(*[F.lit(int(n)) for _, n in subs])
+    return assigned.withColumn(
+        "shard",
+        (
+            F.element_at(base_arr, F.col("shard") + 1)
+            + F.pmod(F.xxhash64("id"), F.element_at(nsub_arr, F.col("shard") + 1))
+        ).cast("int"),
+    )
 
 
 def _vertex_codes(vecs: np.ndarray, bits: int) -> dict:
@@ -1021,6 +934,49 @@ def _vertex_codes(vecs: np.ndarray, bits: int) -> dict:
         "ext_nol": ext["norm_of_lattice"],
         "code": K.pack_nibbles(ext["code"]),
     }
+
+
+def _shard_frame(
+    shard: int, rows: pd.DataFrame, vecs: np.ndarray, adj, medoid: int, bits: int
+) -> pd.DataFrame:
+    """One shard's GRAPH_SCHEMA rows: ``rows`` (id, is_primary, packed
+    ``vec`` bytes) and ``vecs`` (their f32 matrix) in vertex order, so
+    ``row_no`` is the position the adjacency lists refer to."""
+    n = len(rows)
+    return pd.DataFrame(
+        {
+            "shard": shard,
+            "id": rows["id"].to_numpy(np.int64),
+            "row_no": np.arange(n, dtype=np.int32),
+            "medoid_row": np.full(n, medoid, np.int32),
+            "is_primary": rows["is_primary"].to_numpy(bool),
+            "neighbors": _adj_to_bin(adj),
+            "vec": rows["vec"].to_numpy(),
+            **_vertex_codes(vecs, bits),
+        }
+    )
+
+
+def _bulk_shard_frame(
+    shard: int, rows: pd.DataFrame, dim: int, opts: VamanaOptions
+) -> pd.DataFrame:
+    """Build one whole shard's graph over ``rows`` (in the given vertex
+    order) and return its GRAPH_SCHEMA rows. The rng is seeded with
+    ``seed + shard``, so a rebuild of the same rows is byte-identical."""
+    vecs = _f32_matrix(rows["vec"], dim)
+    rng = np.random.default_rng(opts.seed + shard)
+    adj, medoid = _build_vamana_bulk(vecs, opts, rng)
+    return _shard_frame(shard, rows, vecs, adj, medoid, opts.bits)
+
+
+def _options_from_meta(meta: dict) -> VamanaOptions:
+    """The options a graph's shards were built with, read back from its
+    meta.json: ``insert`` and ``compact`` build with exactly these."""
+    keys = (
+        "metric", "m", "ef_construction", "alpha", "bits",
+        "replication", "closure_epsilon", "seed",
+    )
+    return VamanaOptions(**{k: meta[k] for k in keys})
 
 
 class VamanaIndex(QuerySampling):
@@ -1053,6 +1009,11 @@ class VamanaIndex(QuerySampling):
         path: str,
         options: VamanaOptions | None = None,
     ) -> "VamanaIndex":
+        """Build the index at ``path``: k-means shard centroids from a
+        bounded sample, closure assignment of every vector to its
+        shard(s), hash-subsharding of clusters over ``_MAX_SHARD_ROWS``,
+        then one task per shard builds that shard's graph whole over its
+        rows in arrival order (:func:`_bulk_shard_frame`)."""
         from vectorchord_spark.session import ensure_worker_imports
 
         ensure_worker_imports(spark)
@@ -1060,12 +1021,7 @@ class VamanaIndex(QuerySampling):
         opts.validate()
         os.makedirs(path, exist_ok=True)
 
-        # NULL vectors are skipped (reference null.fail / issue_427 contract)
-        src = df.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-        )
-        if opts.metric == "cos":
-            src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
+        src = _source_vectors(df, id_col, vec_col, opts.metric)
         n_shards = opts.n_shards
         if n_shards is None:
             total = src.count()
@@ -1073,13 +1029,8 @@ class VamanaIndex(QuerySampling):
             # local[N] parallelism is used), bounded per-shard size at
             # large scale: past ~320k vectors the count grows one shard
             # per 30k raw rows (~60k per shard after 2x closure
-            # replication — deliberately BELOW the _BULK_MAX_ROWS=100k
-            # safety valve so an above-average shard still takes the fast
-            # bulk build rather than silently tripping the 10-20x-slower
-            # incremental fallback). This keeps every single-task build
-            # inside the bulk builder's O(n²)-candidate sweet spot
-            # (crossover vs the incremental insert loop is ~70k
-            # rows/shard) AND bounds per-shard memory; at 100M rows it
+            # replication, and _MAX_SHARD_ROWS splits build tasks
+            # further). This bounds per-shard memory; at 100M rows it
             # yields ~3.4k shards, which routing (a rows x n_shards
             # matvec) and the driver shard k-means both absorb easily
             n_shards = max(1, min(total // 5000 + 1, 64 + total // 30_000))
@@ -1112,8 +1063,7 @@ class VamanaIndex(QuerySampling):
         eps = float(opts.closure_epsilon)
 
         assigned = src.mapInPandas(
-            _make_assign_fn(bc_cents, metric, repl, eps),
-            "id long, vec binary, shard int, is_primary boolean",
+            _make_assign_fn(bc_cents, metric, repl, eps), _ASSIGNED_SCHEMA
         )
 
         # --- deterministic subsharding of oversized clusters: k-means
@@ -1144,51 +1094,15 @@ class VamanaIndex(QuerySampling):
             max(1, -(-cluster_cnt.get(c, 0) // _MAX_SHARD_ROWS))
             for c in range(n_shards)
         ]
-        sub_base = [0] * n_shards
-        acc = 0
-        for c in range(n_shards):
-            sub_base[c] = acc
-            acc += n_sub[c]
-        total_shards = acc
-        if total_shards > n_shards:
-            base_arr = F.array(*[F.lit(int(b)) for b in sub_base])
-            nsub_arr = F.array(*[F.lit(int(s)) for s in n_sub])
-            assigned = assigned.withColumn(
-                "shard",
-                (
-                    F.element_at(base_arr, F.col("shard") + 1)
-                    + F.pmod(
-                        F.xxhash64("id"),
-                        F.element_at(nsub_arr, F.col("shard") + 1),
-                    )
-                ).cast("int"),
-            )
-
-        opts_d = asdict(opts)
-        seed = opts.seed
-        bits = opts.bits
+        subs, total_shards = [], 0
+        for n in n_sub:
+            subs.append([total_shards, n])
+            total_shards += n
+        assigned = _subshard(assigned, subs)
 
         def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            o = VamanaOptions(**{**opts_d, "n_shards": n_shards})
-            shard = int(pdf["shard"].iloc[0])
-            vecs = _f32_matrix(pdf["vec"], dim)
-            rng = np.random.default_rng(seed + shard)
-            adj, medoid = _build_graph(vecs, o, rng)
-            n = len(vecs)
-            return pd.DataFrame(
-                {
-                    "shard": shard,
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "row_no": np.arange(n, dtype=np.int32),
-                    "medoid_row": np.full(n, medoid, np.int32),
-                    "is_primary": pdf["is_primary"].to_numpy(bool),
-                    "neighbors": _adj_to_bin(adj),
-                    # input vec bytes pass through unchanged (already
-                    # the packed f32 payload)
-                    "vec": pdf["vec"].to_numpy(),
-                    **_vertex_codes(vecs, bits),
-                }
-            )
+            # arrival order is the vertex order
+            return _bulk_shard_frame(int(pdf["shard"].iloc[0]), pdf, dim, opts)
 
         # Build-stage task layout: one shard per partition, LAUNCHED IN
         # DESCENDING SIZE ORDER (longest-processing-time-first). The
@@ -1235,34 +1149,22 @@ class VamanaIndex(QuerySampling):
             os.path.join(path, "graph")
         )
 
-        # per-shard row counts (replicas included — they are traversal
-        # vertices) so serving can auto-scale ef_search with shard size;
-        # a count-only scan over the freshly written column-pruned parquet
-        shard_rows = {
-            str(r["shard"]): int(r["cnt"])
-            for r in spark.read.parquet(os.path.join(path, "graph"))
-            .groupBy("shard")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-
         meta = {
-            **opts_d,
+            **asdict(opts),
             # n_shards = SERVING shard count (subshards included);
             # routing runs over the n_clusters original centroids and
             # expands probed clusters via cluster_subshards
             "n_shards": int(total_shards),
             "n_clusters": int(n_shards),
-            "cluster_subshards": [
-                [int(sub_base[c]), int(n_sub[c])] for c in range(n_shards)
-            ],
+            "cluster_subshards": subs,
             "dim": int(dim),
             "centroids": [[float(x) for x in c] for c in cents],
-            "shard_rows": shard_rows,
         }
         with open(os.path.join(path, "meta.json"), "w") as f:
             json.dump(meta, f)
-        return cls(spark, path)
+        idx = cls(spark, path)
+        idx._record_shard_rows()
+        return idx
 
     # ------------------------------------------------------------------
     # DML: insert / delete / compact (the vchordg incremental lifecycle,
@@ -1285,12 +1187,10 @@ class VamanaIndex(QuerySampling):
         old_v = self.meta.get("graph_version", 0)
         new_v = old_v + 1
         new_path = os.path.join(self.path, f"graph_v{new_v}")
-        (
-            updated.repartition(F.col("shard"))
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(new_path)
-        )
+        # ``updated`` comes out of a groupBy("shard") stage, so every shard
+        # is whole in one task and the partitionBy write lays out one file
+        # per shard directory without a second shuffle
+        updated.write.mode("overwrite").partitionBy("shard").parquet(new_path)
         aff = {int(s) for s in affected}
         for entry in os.listdir(old_path):
             if not entry.startswith("shard="):
@@ -1307,8 +1207,6 @@ class VamanaIndex(QuerySampling):
                         os.path.join(dst_dir, f_name),
                     )
                 except OSError:
-                    import shutil
-
                     shutil.copy2(
                         os.path.join(src_dir, f_name),
                         os.path.join(dst_dir, f_name),
@@ -1320,61 +1218,37 @@ class VamanaIndex(QuerySampling):
         self._record_shard_rows()
         # reclaim the version *before* the one we just superseded
         if old_v >= 1:
-            import shutil
-
             stale = "graph" if old_v == 1 else f"graph_v{old_v - 1}"
             shutil.rmtree(os.path.join(self.path, stale), ignore_errors=True)
 
     def insert(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> None:
-        """Incremental insert mirroring the reference's per-row protocol
-        (crates/vchordg/src/insert.rs:34-395): per new vector — greedy beam
-        search for ``ef_construction`` candidate neighbors → RobustPrune
-        with the ascending alpha schedule → bidirectional edge insert with
-        re-prune of overflowing neighbors. Rows route to shards with the
-        same closure assignment as the build, so each affected shard
-        performs its inserts independently (executor-local), and only
-        affected shard partitions are rewritten."""
+        """Insert rows, rewriting only the shards they land in. Rows route
+        with the build's closure assignment and subshard rule. A shard
+        that already has vertices takes the reference's per-row protocol
+        (crates/vchordg/src/insert.rs:34-395) for each new vector in id
+        order: greedy beam search for ``ef_construction`` candidate
+        neighbors → RobustPrune with the ascending alpha schedule →
+        bidirectional edge insert with re-prune of overflowing neighbors.
+        A shard with no vertices yet is built whole over its new rows,
+        like ``build``. Each affected shard is one executor-local task."""
         meta = self.meta
-        opts_d = {
-            k: meta[k]
-            for k in (
-                "metric", "m", "ef_construction", "alpha", "bits",
-                "replication", "closure_epsilon", "seed",
-            )
-        }
-        metric = meta["metric"]
-        bits = int(meta.get("bits", 1))
+        opts = _options_from_meta(meta)
         dim = int(meta["dim"])
-        # NULL vectors are skipped (reference null.fail / issue_427 contract)
-        src = df.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
+        src = _source_vectors(df, id_col, vec_col, opts.metric)
+        bc_cents = self.spark.sparkContext.broadcast(
+            np.asarray(self.centroids, np.float32)
         )
-        if metric == "cos":
-            src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
-        cents = np.asarray(self.centroids, np.float32)
-        bc_cents = self.spark.sparkContext.broadcast(cents)
         n_clusters = int(meta.get("n_clusters", meta["n_shards"]))
-        repl = min(int(meta["replication"]), n_clusters)
-        assigned = src.mapInPandas(
-            _make_assign_fn(bc_cents, metric, repl, float(meta["closure_epsilon"])),
-            "id long, vec binary, shard int, is_primary boolean",
+        repl = min(int(opts.replication), n_clusters)
+        assigned = _subshard(
+            src.mapInPandas(
+                _make_assign_fn(
+                    bc_cents, opts.metric, repl, float(opts.closure_epsilon)
+                ),
+                _ASSIGNED_SCHEMA,
+            ),
+            meta.get("cluster_subshards") or [],
         )
-        subs = meta.get("cluster_subshards")
-        if subs and any(int(n) > 1 for _, n in subs):
-            # same deterministic subshard split as the build, so an id
-            # always lands in the same physical shard
-            base_arr = F.array(*[F.lit(int(b)) for b, _ in subs])
-            nsub_arr = F.array(*[F.lit(int(n)) for _, n in subs])
-            assigned = assigned.withColumn(
-                "shard",
-                (
-                    F.element_at(base_arr, F.col("shard") + 1)
-                    + F.pmod(
-                        F.xxhash64("id"),
-                        F.element_at(nsub_arr, F.col("shard") + 1),
-                    )
-                ).cast("int"),
-            )
         assigned = assigned.persist()  # pin ONE evaluation: the affected-shard set and the
         # rewrite job must see identical routing, or _write_version would
         # hardlink an old partition over a freshly written one (a
@@ -1387,7 +1261,7 @@ class VamanaIndex(QuerySampling):
             assigned.unpersist()
             return
         old = (
-            self.spark.read.parquet(self.graph_path)
+            self._graph_df()
             .where(F.col("shard").isin(affected))
             .withColumn("_new", F.lit(False))
         )
@@ -1411,45 +1285,23 @@ class VamanaIndex(QuerySampling):
         )
 
         def insert_shard(grp: pd.DataFrame) -> pd.DataFrame:
-            o = VamanaOptions(**opts_d)
             shard = int(grp["shard"].iloc[0])
             olds = grp[~grp["_new"]].sort_values("row_no")
             news = grp[grp["_new"]].sort_values("id")
-            new_vecs = (
-                _f32_matrix(news["vec"], dim)
-                if len(news)
-                else np.zeros((0, 1), np.float32)
-            )
             if not len(olds):
-                # shard had no rows yet: fresh build over the inserts
-                rng = np.random.default_rng(o.seed + shard)
-                adj, medoid = _build_graph(new_vecs, o, rng)
-                n = len(new_vecs)
-                return pd.DataFrame(
-                    {
-                        "shard": shard,
-                        "id": news["id"].to_numpy(np.int64),
-                        "row_no": np.arange(n, dtype=np.int32),
-                        "medoid_row": np.full(n, medoid, np.int32),
-                        "is_primary": news["is_primary"].to_numpy(bool),
-                        "neighbors": _adj_to_bin(adj),
-                        "vec": news["vec"].to_numpy(),
-                        **_vertex_codes(new_vecs, bits),
-                    }
-                )
-            old_vecs = _f32_matrix(olds["vec"], dim)
-            v64 = np.concatenate([old_vecs, new_vecs]).astype(np.float64)
-            adj = [np.frombuffer(b, "<i4").tolist() for b in olds["neighbors"]]
+                return _bulk_shard_frame(shard, news, dim, opts)
+            rows = pd.concat([olds, news])
+            vecs = _f32_matrix(rows["vec"], dim)
+            v64 = vecs.astype(np.float64)
+            adj = _adj_from_bin(olds["neighbors"])
             medoid = int(olds["medoid_row"].iloc[0])
-            internal = "l2" if o.metric == "l2" else "dot"
-            alphas = o.alpha if internal == "l2" else [1.0]
-            m = o.m
-            n_old = len(olds)
-            for j, _ in enumerate(news.itertuples()):
-                i = n_old + j
+            internal = "l2" if opts.metric == "l2" else "dot"
+            alphas = opts.alpha if internal == "l2" else [1.0]
+            m = opts.m
+            for i in range(len(olds), len(rows)):
                 exact_fn = lambda idx: _dists(internal, v64[idx], v64[i])  # noqa: B023,E731
                 cand = _beam_search(
-                    exact_fn, adj, medoid, o.ef_construction, prune_frontier=True
+                    exact_fn, adj, medoid, opts.ef_construction, prune_frontier=True
                 )
                 adj.append(_robust_prune(v64, internal, alphas, m, i, cand))
                 # bidirectional edges with re-prune on overflow
@@ -1463,30 +1315,7 @@ class VamanaIndex(QuerySampling):
                                 v64, internal, alphas, m, nb,
                                 list(zip(nd.tolist(), adj[nb])),
                             )
-            n = n_old + len(news)
-            all_vecs = v64.astype(np.float32)
-            return pd.DataFrame(
-                {
-                    "shard": shard,
-                    "id": np.concatenate(
-                        [
-                            olds["id"].to_numpy(np.int64),
-                            news["id"].to_numpy(np.int64),
-                        ]
-                    ),
-                    "row_no": np.arange(n, dtype=np.int32),
-                    "medoid_row": np.full(n, medoid, np.int32),
-                    "is_primary": np.concatenate(
-                        [
-                            olds["is_primary"].to_numpy(bool),
-                            news["is_primary"].to_numpy(bool),
-                        ]
-                    ),
-                    "neighbors": _adj_to_bin(adj),
-                    "vec": _f32_row_bytes(all_vecs),
-                    **_vertex_codes(all_vecs, bits),
-                }
-            )
+            return _shard_frame(shard, rows, vecs, adj, medoid, opts.bits)
 
         updated = (
             old.unionByName(new)
@@ -1509,13 +1338,14 @@ class VamanaIndex(QuerySampling):
 
     def compact(self) -> None:
         """Vacuum: rebuild every shard containing tombstoned vertices
-        without them (shard-local Vamana rebuild — adjacency is positional,
-        so removal requires a rebuild; the reference's vacuum similarly
-        rewrites vertex pages), then drop the tombstones."""
+        without them (a whole-shard build over the survivors in id order —
+        adjacency is positional, so removal requires a rebuild; the
+        reference's vacuum similarly rewrites vertex pages), then drop the
+        tombstones."""
         if not os.path.exists(self._tombstones_path):
             return
         tomb = self.spark.read.parquet(self._tombstones_path)
-        g = self.spark.read.parquet(self.graph_path)
+        g = self._graph_df()
         affected = [
             int(r.shard)
             for r in g.join(F.broadcast(tomb), "id", "left_semi")
@@ -1524,36 +1354,12 @@ class VamanaIndex(QuerySampling):
             .collect()
         ]
         if affected:
-            opts_d = {
-                k: self.meta[k]
-                for k in (
-                    "metric", "m", "ef_construction", "alpha", "bits",
-                    "replication", "closure_epsilon", "seed",
-                )
-            }
-            bits = int(self.meta.get("bits", 1))
+            opts = _options_from_meta(self.meta)
             dim = int(self.meta["dim"])
 
             def rebuild_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-                o = VamanaOptions(**opts_d)
                 shard = int(pdf["shard"].iloc[0])
-                pdf = pdf.sort_values("id")
-                vecs = _f32_matrix(pdf["vec"], dim)
-                rng = np.random.default_rng(o.seed + shard)
-                adj, medoid = _build_graph(vecs, o, rng)
-                n = len(vecs)
-                return pd.DataFrame(
-                    {
-                        "shard": shard,
-                        "id": pdf["id"].to_numpy(np.int64),
-                        "row_no": np.arange(n, dtype=np.int32),
-                        "medoid_row": np.full(n, medoid, np.int32),
-                        "is_primary": pdf["is_primary"].to_numpy(bool),
-                        "neighbors": _adj_to_bin(adj),
-                        "vec": pdf["vec"].to_numpy(),
-                        **_vertex_codes(vecs, bits),
-                    }
-                )
+                return _bulk_shard_frame(shard, pdf.sort_values("id"), dim, opts)
 
             survivors = (
                 g.where(F.col("shard").isin(affected))
@@ -1564,19 +1370,26 @@ class VamanaIndex(QuerySampling):
                 rebuild_shard, GRAPH_SCHEMA
             )
             self._write_version(updated, affected)
-        import shutil
-
         shutil.rmtree(self._tombstones_path, ignore_errors=True)
 
     # ------------------------------------------------------------------
 
+    def _graph_df(self) -> DataFrame:
+        """The current graph version. The schema is pinned to
+        GRAPH_SCHEMA, so a graph with no rows (an empty or all-NULL
+        build) reads as an empty frame instead of failing schema
+        inference."""
+        return self.spark.read.schema(GRAPH_SCHEMA).parquet(self.graph_path)
+
     def _record_shard_rows(self) -> dict[str, int]:
-        """Count rows per shard in the current graph version and persist
-        the counts into ``meta.json``. Serving reads these to auto-scale
-        ``ef_search`` with shard size; DML refreshes them per version."""
+        """Count rows per shard in the current graph version (replicas
+        included — they are traversal vertices) and persist the counts
+        into ``meta.json``. Serving reads these to auto-scale
+        ``ef_search`` with shard size; build and DML refresh them per
+        version."""
         shard_rows = {
             str(r["shard"]): int(r["cnt"])
-            for r in self.spark.read.parquet(self.graph_path)
+            for r in self._graph_df()
             .groupBy("shard")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()

@@ -9,6 +9,8 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _PYFILES_ADDED: set[int] = set()
+#: the package zip this process built (None until the first build)
+_PKG_ZIP: str | None = None
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
@@ -23,12 +25,14 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     key = id(spark.sparkContext)
     if key in _PYFILES_ADDED:
         return
+    global _PKG_ZIP
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # rebuild once per process (cheap) so a stale zip never shadows edits
+    # rebuild once per process (cheap) so a stale zip never shadows edits —
+    # also one left at this path by an earlier process with the same pid
     zpath = os.path.join(
         tempfile.gettempdir(), f"vectorchord_spark_pkg_{os.getuid()}_{os.getpid()}.zip"
     )
-    if not os.path.exists(zpath):
+    if _PKG_ZIP != zpath:
         tmp = zpath + f".{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):
@@ -38,6 +42,7 @@ def ensure_worker_imports(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         z.write(full, rel)
         os.replace(tmp, zpath)
+        _PKG_ZIP = zpath
     spark.sparkContext.addPyFile(zpath)
     _PYFILES_ADDED.add(key)
 
