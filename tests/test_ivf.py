@@ -66,12 +66,11 @@ def test_build_and_recall(spark, clustered_df, opts):
 
 
 def test_cheap_path_equivalence_and_plan(spark, clustered_df):
-    """Small-probed-set short circuit: with the probed cells under
-    cheap_threshold, search() must return row-identical results to the
-    full guarantee machinery (the contract is the same: exact top-k
-    within the probed cells) while its plan drops the guarantee pass —
-    no threshold cross-join (BroadcastNestedLoopJoin) and no persisted
-    scored scan (InMemoryTableScan)."""
+    """On a small probed set the default lazy-rerank search (rerank_factor
+    4, guarantee on) returns the same (id, dist) rows as reranking every
+    probed row, and neither plan runs a threshold cross join
+    (BroadcastNestedLoopJoin) or a persisted scored scan
+    (InMemoryTableScan): the rerank happens inside the one codes scan."""
     rng = np.random.default_rng(14)
     q = [float(x) for x in rng.uniform(-1, 1, 8)]
     with tempfile.TemporaryDirectory() as tmp:
@@ -79,25 +78,107 @@ def test_cheap_path_equivalence_and_plan(spark, clustered_df):
             spark, clustered_df, "id", "vec", os.path.join(tmp, "idx"),
             IvfOptions(metric="l2", lists=[33]),
         )
-        cheap = idx.search(q, k=10, probes=[6], rerank_factor=4)
-        full = idx.search(
-            q, k=10, probes=[6], rerank_factor=4, cheap_threshold=0
-        )
-        assert [(r.id, r.dist) for r in cheap.collect()] == [
+        lazy = idx.search(q, k=10, probes=[6], rerank_factor=4)
+        full = idx.search(q, k=10, probes=[6], rerank_factor=None)
+        assert [(r.id, r.dist) for r in lazy.collect()] == [
             (r.id, r.dist) for r in full.collect()
         ]
-        cheap_plan = cheap._jdf.queryExecution().executedPlan().toString()
-        full_plan = full._jdf.queryExecution().executedPlan().toString()
-        for marker in ("BroadcastNestedLoopJoin", "InMemoryTableScan"):
-            assert marker not in cheap_plan, f"cheap path still runs {marker}"
-        assert "BroadcastNestedLoopJoin" in full_plan  # guarantee pass alive
-        # decision boundary: a threshold below the probed row count takes
-        # the machinery path (plan shows the guarantee cross-join)
-        tiny = idx.search(
-            q, k=10, probes=[6], rerank_factor=4, cheap_threshold=1
+        for res in (lazy, full):
+            plan = res._jdf.queryExecution().executedPlan().toString()
+            for marker in ("BroadcastNestedLoopJoin", "InMemoryTableScan"):
+                assert marker not in plan, marker
+
+
+def _global_rule(ids, lb, rough, d, metric, k, m=None, guarantee=False, refine=None):
+    """The two-pass selection applied to all probed rows at once (the rule
+    the per-batch kernel must reproduce): (id, dist) rows in answer order,
+    dist None where the rule reranks nothing."""
+    from vectorchord_spark.operators.ivf import _internal_dist
+
+    if refine is not None:
+        pool = np.lexsort((ids, rough))[:k]
+        return [(ids[i], d[i] if r < refine else None) for r, i in enumerate(pool)]
+    cand = np.arange(len(ids)) if m is None else np.lexsort((ids, lb))[:m]
+    if m is not None and guarantee:
+        top = cand[np.lexsort((ids[cand], d[cand]))][:k]
+        t = _internal_dist(d[top[-1]], metric) if len(top) >= k else np.inf
+        cand = np.union1d(cand, np.flatnonzero(lb <= t))
+    ans = cand[np.lexsort((ids[cand], d[cand]))][:k]
+    return [(ids[i], d[i]) for i in ans]
+
+
+def _merged_batches(ids, lb, rough, d, metric, n_batches, rng, k, **select):
+    """Split the rows at random, run the kernel's per-batch selection on
+    each batch and merge the outputs the way search / search_batch do."""
+    from vectorchord_spark.operators.ivf import _local_select
+
+    cuts = np.sort(rng.choice(np.arange(1, len(ids)), n_batches - 1, replace=False))
+    perm = rng.permutation(len(ids))
+    kept = []
+    for part in np.split(perm, cuts):
+        rows, dist = _local_select(
+            ids[part], lb[part], rough[part], lambda r, part=part: d[part[r]],
+            metric, k, **select,
         )
-        tiny_plan = tiny._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" in tiny_plan
+        for j, r in enumerate(rows):
+            i = part[r]
+            kept.append((ids[i], lb[i], rough[i], dist[j] if j < len(dist) else None))
+    if select.get("refine") is not None:
+        # maxsim reads dist only for rank ≤ refine
+        kept.sort(key=lambda t: (t[2], t[0]))
+        head = select["refine"]
+        return [(t[0], t[3] if r < head else None) for r, t in enumerate(kept[:k])]
+    if select.get("m") is not None and not select.get("guarantee"):
+        kept = sorted(kept, key=lambda t: (t[1], t[0]))[: select["m"]]
+    kept.sort(key=lambda t: (t[3], t[0]))
+    return [(t[0], t[3]) for t in kept[:k]]
+
+
+@pytest.mark.parametrize("metric", ["l2", "dot", "cos"])
+def test_local_select_merge_matches_global_rule(metric):
+    """The scan kernel applies the selection rule to each Arrow batch
+    alone. Wherever the RaBitQ bound holds (lb ≤ the exact internal
+    distance), merging the batches' outputs must give the rows of the
+    rule applied to every probed row at once, for each rule: the
+    guarantee sweep, the top-m cut (guarantee off, max_scan_tuples), the
+    exhaustive rerank, k above the row count (range_search) and the
+    rough pool with an exact head (maxsim refine). Ids are unique;
+    lower bounds and distances carry planted ties."""
+    from vectorchord_spark.operators.ivf import _internal_dist
+
+    rng = np.random.default_rng(5)
+    for trial in range(40):
+        n = int(rng.integers(1, 400))
+        ids = rng.permutation(10 * n)[:n].astype(np.int64)
+        d = rng.uniform(0.0, 2.0, n)
+        if metric != "l2":
+            d -= 1.0
+        d[rng.integers(0, n, n // 4)] = d[0]  # equal distances
+        e = _internal_dist(d, metric)
+        lb = e - rng.exponential(0.3, n)
+        tie = rng.integers(0, n, n // 3)
+        lb[tie] = lb[tie].min()  # equal lower bounds, still ≤ exact
+        rough = lb + rng.uniform(0.0, 0.5, n)
+        rough[tie[: len(tie) // 2]] = rough[0]
+        n_batches = int(rng.integers(1, min(n, 8) + 1))
+        k = int(rng.integers(1, 25))
+        cases = [
+            {"m": 4 * k, "guarantee": True},
+            {"m": 4 * k, "guarantee": False},
+            {"m": min(4 * k, 30), "guarantee": False},
+            {"m": 30},
+            {},
+            {"k": 2**31 - 1},
+            {"k": 50, "refine": 5},
+            {"k": 50, "refine": 0},
+        ]
+        for case in cases:
+            sel = {"k": k, **case}
+            want = _global_rule(ids, lb, rough, d, metric, **sel)
+            got = _merged_batches(
+                ids, lb, rough, d, metric, n_batches, rng, **sel
+            )
+            assert got == want, (trial, sel)
 
 
 def test_range_search(spark, clustered_df):
@@ -408,8 +489,11 @@ def test_lazy_descent_matches_exact(spark, clustered_df):
 
 def test_persisted_rdds_bounded_across_searches(spark, clustered_df):
     """Serving processes must not leak block-manager entries: 50 probed
-    searches (each persists a scored DF) leave at most a constant number of
-    persistent RDDs (the bounded one-outstanding-per-index policy)."""
+    searches each of search and search_batch persist nothing, and 50
+    in-index maxsim refine searches keep at most the one persisted
+    candidate frame that the index holds (maxsim reads it twice)."""
+    from vectorchord_spark.operators.maxsim import maxsim_search
+
     rng = np.random.default_rng(41)
     with tempfile.TemporaryDirectory() as tmp:
         idx = IvfIndex.build(
@@ -422,6 +506,14 @@ def test_persisted_rdds_bounded_across_searches(spark, clustered_df):
         for _ in range(50):
             q = rng.uniform(-1, 1, 8).tolist()
             idx.search(q, k=5, probes=8).count()
+            idx.search_batch([q], k=5, probes=8).count()
+        assert jsc.getPersistentRDDs().size() == baseline
+        for _ in range(50):
+            toks = [rng.uniform(-1, 1, 8).tolist() for _ in range(2)]
+            maxsim_search(
+                idx, lambda c: c, toks, k=5, per_token_candidates=20,
+                probes=8, maxsim_refine=5,
+            ).count()
         assert jsc.getPersistentRDDs().size() <= baseline + 1
 
 
@@ -601,8 +693,8 @@ def test_search_matches_search_batch(spark, clustered_df, case):
     scoring kernel and the storage-dispatched rerank, so they return
     identical (id, dist) rows for every storage, rerank-in-table
     (base_df), every metric and residual quantization: on the exhaustive
-    rerank (short circuit and rough path) and on the rough path's
-    top-m-by-lb rerank with and without the guarantee pass."""
+    rerank and on the top-m-by-lb rerank with and without the guarantee
+    pass."""
     rng = np.random.default_rng(61)
     q = [float(x) for x in rng.uniform(-1, 1, 8)]
     opts = IvfOptions(**{"metric": "l2", "lists": [33], **_MATCH_CASES[case]})
@@ -622,13 +714,12 @@ def test_search_matches_search_batch(spark, clustered_df, case):
 
         want = batch(rerank_factor=None)
         assert len(want) == 10
-        for cheap_threshold in (8192, 0):
-            got = single(rerank_factor=None, cheap_threshold=cheap_threshold)
-            assert got == want, cheap_threshold
+        got = single(rerank_factor=None)
+        assert got == want
         for guarantee in (True, False):
             want = batch(rerank_factor=4, guarantee=guarantee)
             assert len(want) == 10
-            got = single(rerank_factor=4, guarantee=guarantee, cheap_threshold=0)
+            got = single(rerank_factor=4, guarantee=guarantee)
             assert got == want, guarantee
 
 
@@ -651,7 +742,7 @@ def test_search_breaks_lb_ties_by_id(spark):
         opt = {"k": 9, "probes": [8], "rerank_factor": 1, "guarantee": False}
         for _ in range(8):
             q = [float(x) for x in rng.uniform(-1, 1, 8)]
-            got = idx.search(q, cheap_threshold=0, **opt).collect()
+            got = idx.search(q, **opt).collect()
             want = sorted(idx.search_batch([q], **opt).collect(), key=lambda r: r.rank)
             assert [(r.id, r.dist) for r in got] == [(r.id, r.dist) for r in want]
 
@@ -740,7 +831,7 @@ def test_maxsim_refine_f16_storage(spark):
     """maxsim_refine beyond f32 storage (the round-4 parity gap): on an
     f16-storage multivector index, a full-pool refine budget reproduces
     the all-exact result row-identically (both paths rerank on the same
-    f16 payload through the shared _batch_exact_dist dispatch)."""
+    f16 payload through the scan kernel's payload scorer)."""
     from vectorchord_spark.operators.maxsim import maxsim_search
 
     rng = np.random.default_rng(45)

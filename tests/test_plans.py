@@ -1,6 +1,7 @@
 """Plan-shape assertions (the Spark analogue of the reference's
-pushdown_plan.slt): partition pruning on probed searches, column pruning on
-scoring scans, broadcast reranks, predicate pushdown on relational queries."""
+pushdown_plan.slt): partition pruning on probed searches, one codes scan
+per query, broadcast rerank-in-table joins, predicate pushdown on relational
+queries."""
 
 import os
 import tempfile
@@ -42,20 +43,64 @@ def test_probe_scan_is_partition_pruned(spark, small_index):
     assert any("cluster_id" in p for p in pushed), pushed
 
 
-def test_rerank_join_is_broadcast(spark, small_index):
+def test_rerank_join_is_broadcast(spark, small_index, small_source):
+    """Rerank-in-table keeps the candidate join: the candidate ids are
+    broadcast to the base table (guarantee on and off), so the base table
+    never shuffles."""
     q = [0.0] * 8
-    res = small_index.search(q, k=5, probes=[4], guarantee=False)
-    assert P.has_broadcast_join(res)
+    base = small_source.select("id", "vec")
+    for guarantee in (True, False):
+        res = small_index.search(
+            q, k=5, probes=[4], guarantee=guarantee, base_df=base
+        )
+        assert P.has_broadcast_join(res), P.explain_str(res)
 
 
-def test_scoring_scan_prunes_vec_column(spark, small_index):
-    """The rough-score stage must not read the stored vectors: its scan's
-    ReadSchema excludes `vec` (the widest column)."""
+def test_scoring_scan_prunes_vec_column(spark, small_index, small_source):
+    """Where the rerank payload is not the stored f32 vector, the scoring
+    scan must not read `vec` (the widest column): its codes ReadSchema
+    excludes it for rerank-in-table search and for quantized storage."""
     q = [0.0] * 8
-    res = small_index.search(q, k=5, probes=[4], guarantee=False)
-    schemas = P.read_schemas(res)
-    scoring = [s for s in schemas if "code" in s]
-    assert scoring and all("vec" not in s for s in scoring), schemas
+    tmp = tempfile.mkdtemp(prefix="vc_plan_sq_")
+    sq_index = IvfIndex.build(
+        spark, small_source, "id", "vec", os.path.join(tmp, "idx"),
+        IvfOptions(metric="l2", lists=[16], storage="rabitq8"),
+    )
+    base = small_source.select("id", "vec")
+    for res in (
+        small_index.search(q, k=5, probes=[4], guarantee=False, base_df=base),
+        sq_index.search(q, k=5, probes=[4], guarantee=False),
+    ):
+        schemas = P.read_schemas(res)
+        scoring = [s for s in schemas if "code" in s]
+        assert scoring and all("vec" not in s for s in scoring), schemas
+
+
+@pytest.mark.parametrize("storage", ["f32", "f16", "rabitq8"])
+def test_search_scans_codes_once(spark, small_source, storage):
+    """One-stage query: search (guarantee on and off) and search_batch
+    read the codes table exactly once — codes and rerank payload in the
+    same scan — with no threshold cross join (BroadcastNestedLoopJoin) and
+    no persisted scored scan (InMemoryTableScan)."""
+    tmp = tempfile.mkdtemp(prefix="vc_plan_once_")
+    idx = IvfIndex.build(
+        spark, small_source, "id", "vec", os.path.join(tmp, "idx"),
+        IvfOptions(metric="l2", lists=[16], storage=storage),
+    )
+    payload = {"f32": "vec:binary", "f16": "vec_f16:binary"}.get(
+        storage, "sq_code:binary"
+    )
+    q = [0.0] * 8
+    for res in (
+        idx.search(q, k=5, probes=[4]),
+        idx.search(q, k=5, probes=[4], guarantee=False),
+        idx.search_batch([q, [0.5] * 8], k=5, probes=[4]),
+    ):
+        codes = [s for s in P.read_schemas(res) if "code:binary" in s]
+        assert len(codes) == 1 and payload in codes[0], codes
+        plan = P.explain_str(res)
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert "InMemoryTableScan" not in plan, plan
 
 
 def test_batch_prefilter_and_rerank_table_plan_shape(

@@ -9,10 +9,12 @@ Spark-first re-expression of the reference's index lifecycle:
   single Spark write job IS the reference's parallel build
   (am_build.rs:611-789).
 - search = driver tree descent over the (small, broadcast) centroid tree →
-  partition-pruned scan of the probed clusters → Arrow-batched rough
-  scoring with ε lower bounds (search.rs:95-196) → bounded candidate top-m
-  by lower bound → exact rerank join → ``ORDER BY dist LIMIT k``
-  (rerank.rs:53-137 re-expressed as TakeOrderedAndProject).
+  ONE partition-pruned scan of the probed clusters' codes and rerank
+  payload → per Arrow batch, rough scoring with ε lower bounds
+  (search.rs:95-196) and the lazy rerank applied to the batch's rows
+  (rerank.rs:53-137: rerank by lower bound until no bound can beat the
+  k-th exact distance) → ``ORDER BY dist LIMIT k`` over the batches'
+  survivors (TakeOrderedAndProject).
 - insert = encode+append (insert.rs:70-212); delete = tombstones
   (bulkdelete.rs:24-183); compact = partition rewrite (maintain.rs:38-260).
 
@@ -21,11 +23,11 @@ the centroid tree is ≤ a few hundred MB even at 1M leaves → broadcast;
 ``codes`` is cluster-range-bucketed and sorted, so the probes' pushed
 ``cluster_id IN`` filter prunes at Parquet file/row-group granularity
 (a directory per cluster would mean 1M directories at 1M leaves);
-the rough-score stage reads only (meta, code) columns (column
-pruning keeps the full vectors out of the Python exchange); the rerank join
-broadcasts the ≤ ``rerank_factor·k`` candidate ids, so the only shuffle in
-the whole query is the final top-k, which TakeOrderedAndProject does with
-per-partition heaps.
+the scan reads the code columns and the storage's rerank payload once,
+and each batch emits at most its local top-k per query (top-m under a
+``rerank_factor·k``/``max_scan_tuples`` cap), so the only
+shuffle in the whole query is the final top-k, which
+TakeOrderedAndProject does with per-partition heaps.
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vectorchord_spark import kernels as K
@@ -67,41 +69,13 @@ CODES_SCHEMA = (
 _CODES_BLOCK_BYTES = 8 << 20
 
 
-def _binary_fp_matrix(rb, col_name: str, dim: int, fp_dtype: str) -> "np.ndarray":
-    """(n, dim) float64 matrix from an Arrow record batch's binary column
-    of packed little-endian float rows (the CODES_SCHEMA ``vec``/
-    ``vec_f16`` layouts). Zero-copy up to the final f64 widening: rows are
-    fixed itemsize*dim bytes, so the variable-width binary array's data
-    buffer is one contiguous float run between its first and last
-    offsets."""
-    col = rb.column(rb.schema.get_field_index(col_name))
-    if col.null_count:  # defensive: the rerank payload is written non-null
-        raise ValueError(f"NULL {col_name} payload in codes batch")
-    off = np.frombuffer(
-        col.buffers()[1], np.int32, len(col) + 1, offset=col.offset * 4
-    )
-    data = np.frombuffer(col.buffers()[2], np.uint8)
-    return (
-        data[off[0] : off[-1]]
-        .view(fp_dtype)
-        .reshape(len(col), dim)
-        .astype(np.float64)
-    )
-
-
-def _binary_f32_matrix(rb, col_name: str, dim: int) -> "np.ndarray":
-    return _binary_fp_matrix(rb, col_name, dim, "<f4")
-
-
-def _binary_f16_matrix(rb, col_name: str, dim: int) -> "np.ndarray":
-    return _binary_fp_matrix(rb, col_name, dim, "<f2")
-
-
 def _binary_u8_matrix(rb, col_name: str) -> "np.ndarray":
-    """(n, row_bytes) uint8 matrix from a fixed-row-width binary column
-    (the packed sq_code layout), via the same contiguous-buffer slice."""
+    """(n, row_bytes) uint8 matrix from an Arrow record batch's binary
+    column of fixed-width rows (the CODES_SCHEMA code and payload
+    layouts). Zero-copy: the variable-width binary array's data buffer is
+    one contiguous run between its first and last offsets."""
     col = rb.column(rb.schema.get_field_index(col_name))
-    if col.null_count:
+    if col.null_count:  # defensive: codes and payloads are written non-null
         raise ValueError(f"NULL {col_name} payload in codes batch")
     off = np.frombuffer(
         col.buffers()[1], np.int32, len(col) + 1, offset=col.offset * 4
@@ -122,45 +96,95 @@ def _sq_code_matrix(rb, sq_bits: int, dim: int) -> "np.ndarray":
     return out[:, :dim]
 
 
-def _arrow_i64(rb, name: str):
-    import pyarrow as pa
-
-    col = rb.column(rb.schema.get_field_index(name))
-    return col if col.type == pa.int64() else col.cast(pa.int64())
+def _arrow_np(rb, name: str, dtype) -> "np.ndarray":
+    return np.asarray(rb.column(rb.schema.get_field_index(name)), dtype=dtype)
 
 
-def _arrow_i32(rb, name: str):
-    import pyarrow as pa
-
-    col = rb.column(rb.schema.get_field_index(name))
-    return col if col.type == pa.int32() else col.cast(pa.int32())
-
-
-def _arrow_f64_np(rb, name: str) -> "np.ndarray":
-    return np.asarray(
-        rb.column(rb.schema.get_field_index(name)), dtype=np.float64
-    )
-
-
-def _guarantee_threshold(top: DataFrame, metric: str, k: int, *by: str) -> DataFrame:
-    """The guarantee pass's lb threshold per ``by`` group (one row for
-    ``search``, one per qid for ``search_batch``): the k-th pass-1 exact
-    distance ``d_k`` mapped from the output space to the internal lb space
-    (squared-l2 / negated-dot), or +inf when pass 1 produced fewer than k
-    rows."""
+def _internal_dist(d, metric: str):
+    """An output-space distance mapped to the internal lb space
+    (squared-l2 / negated-dot)."""
     if metric == "l2":
-        t = F.col("d_k") * F.col("d_k")
-    elif metric == "cos":
-        t = F.col("d_k") - F.lit(1.0)
-    else:
-        t = F.col("d_k")
+        return d * d
+    if metric == "cos":
+        return d - 1.0
+    return d
+
+
+def _local_select(
+    ids: np.ndarray,
+    lb: np.ndarray,
+    rough: np.ndarray,
+    exact,
+    metric: str,
+    k: int,
+    m: int | None = None,
+    guarantee: bool = False,
+    refine: int | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One query's selection over one Arrow batch of the scan kernel.
+
+    ``ids``/``lb``/``rough`` describe the batch's rows scored for the
+    query; ``exact(rows)`` returns the output-space distances of rows
+    ``rows`` (indices into them). Returns ``(rows, dist)``: the rows the
+    final merge can need and the exact distances of the first
+    ``len(dist)`` of them. Every rule keeps a superset of the batch's
+    share of the rule applied to all probed rows at once, so merging the
+    batches gives that global answer:
+
+    - ``refine`` set (the maxsim pool): the top-k by (rough, id), exact
+      for the first ``refine``; the global top-``refine`` is a subset of
+      the union of the batches' top-``refine``.
+    - ``m`` None: the exact top-k by (dist, id).
+    - ``m`` set, no ``guarantee``: the top-m by (lb, id), all exact; the
+      merge cuts the global top-m by (lb, id), then the top-k by
+      (dist, id).
+    - ``m`` set with ``guarantee``: pass 1 reranks the top-m by (lb, id);
+      every row whose lb is ≤ the k-th pass-1 distance (in the internal
+      space; +inf below k rows) is reranked too, and the exact top-k by
+      (dist, id) is kept. Wherever the RaBitQ bound holds (lb ≤ the exact
+      internal distance) that is the batch's exact top-k, and the global
+      exact top-k is a subset of the union of the batches' top-k.
+
+    Comparisons follow Spark's: NaN sorts last and equals NaN, so a NaN
+    threshold admits every row."""
+    if refine is not None:
+        rows = np.lexsort((ids, rough))[:k]
+        return rows, (exact(rows[:refine]) if refine else np.empty(0))
+    rows = np.arange(len(ids)) if m is None else np.lexsort((ids, lb))[:m]
+    dist = exact(rows)
+    if m is not None and not guarantee:
+        return rows, dist
+    if m is not None:
+        top = np.lexsort((ids[rows], dist))
+        t = _internal_dist(dist[top[k - 1]], metric) if 0 < k <= len(top) else np.inf
+        sweep = np.ones(len(ids), bool) if np.isnan(t) else lb <= t
+        sweep[rows] = False
+        extra = np.flatnonzero(sweep)
+        rows = np.concatenate([rows, extra])
+        dist = np.concatenate([dist, exact(extra)])
+    top = np.lexsort((ids[rows], dist))[:k]
+    return rows[top], dist[top]
+
+
+def _top_per_query(df: DataFrame, n: int, *order: str, rank: str = "rank") -> DataFrame:
+    """Each qid's first ``n`` rows by ``order``, numbered in column
+    ``rank``."""
+    w = Window.partitionBy("qid").orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= int(n))
+
+
+def _guarantee_threshold(top: DataFrame, metric: str, k: int) -> DataFrame:
+    """The guarantee sweep's lb threshold per qid for the rerank-in-table
+    plan: the k-th pass-1 exact distance ``d_k`` mapped from the output
+    space to the internal lb space, or +inf when pass 1 produced fewer
+    than k rows (``_local_select``'s rule as a DataFrame)."""
     return (
-        top.groupBy(*by)
+        top.groupBy("qid")
         .agg(F.count(F.lit(1)).alias("n_top"), F.max("dist").alias("d_k"))
         .select(
-            *by,
+            "qid",
             F.when(F.col("n_top") < int(k), F.lit(float("inf")))
-            .otherwise(t.cast("double"))
+            .otherwise(_internal_dist(F.col("d_k"), metric).cast("double"))
             .alias("_thresh"),
         )
     )
@@ -394,16 +418,6 @@ class IvfIndex(QuerySampling):
                     "parent": sub["parent"].to_numpy(np.int64),
                 }
             )
-
-    def _persist_scored(self, scored: DataFrame) -> DataFrame:
-        # bound cached-search memory: at most one outstanding scored DF per
-        # index (a long-lived serving session would otherwise accumulate
-        # one cached RDD per query)
-        prev = getattr(self, "_last_scored", None)
-        if prev is not None:
-            prev.unpersist()
-        self._last_scored = scored.persist()
-        return self._last_scored
 
     # ------------------------------------------------------------------
     # Build
@@ -1047,8 +1061,7 @@ class IvfIndex(QuerySampling):
     ) -> np.ndarray:
         """Union of probed leaf cells across a query batch (the same
         ``K.prep_queries`` prep and descent as ``search_batch``) — lets
-        callers prune auxiliary scans (e.g. the maxsim refine join) to the
-        probed cells."""
+        callers prune their own auxiliary scans to the probed cells."""
         _, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
         return self._probe(Q_rot, probes)[0]
 
@@ -1056,9 +1069,8 @@ class IvfIndex(QuerySampling):
         """The codes table as an ANALYZED lazy DataFrame, cached per codes
         version (DataFrames are immutable, so sharing one across searches
         is safe). spark.read.parquet costs a driver→JVM file listing +
-        footer read per call; a single search builds 2-3 codes scans, so
-        uncached reads added ~0.5-0.9s of pure plan-construction wall to
-        every serving call at sf0.1. Invalidated by insert/delete/compact
+        footer read per call, which uncached would be plan-construction
+        wall on every serving call. Invalidated by insert/delete/compact
         (they bump the version or change the tombstone set — the cached
         plan's file list is resolved at analysis time and would go stale)."""
         key = (self.meta["codes_version"], os.path.exists(self._tombstones_path))
@@ -1090,139 +1102,204 @@ class IvfIndex(QuerySampling):
         base_df: DataFrame | None = None,
         guarantee: bool = True,
         lazy_descent: bool = False,
-        cheap_threshold: int = 8192,
     ) -> DataFrame:
         """k-NN search returning a DataFrame (id, dist) ordered by distance.
 
         One query through the same front end as ``search_batch`` (qid 0):
-        the shared prep (``K.prep_queries``), the descent, the shared
-        rough-scoring kernel (``_rough_scored``) and the shared
-        storage-dispatched rerank (``_batch_exact_dist``). Only the plan
-        around them is single-query: a global ``orderBy("lb", "id")``
-        pass 1 and a 1-row threshold cross join instead of per-qid windows.
-
-        ``cheap_threshold``: when the probed cells hold at most this many
-        rows, skip the RaBitQ rough-scoring + guarantee machinery and
-        exact-rerank every probed row directly — the answer is the same
-        contract (exact top-k within the probed cells) computed in ONE
-        Spark job instead of three. At small scale the fixed machinery
-        dominates (sf0.1: probed search ~2× the exhaustive scan); at
-        scale the 1-bit codes are 32× less I/O than the f32 vectors, so
-        the rough path wins — the default (8192 rows) sits well under
-        the measured crossover (probed sets ≥~30k rows at 1M×64d favor
-        rough scoring). 0 disables the short circuit.
+        the shared prep (``K.prep_queries``), the descent and the one scan
+        kernel (``_scan``), which reads every probed row's code and rerank
+        payload once and keeps, per Arrow batch, the rows the answer can
+        need with their exact distances. A global ``ORDER BY dist, id
+        LIMIT k`` merges the batches: one codes scan per query, whatever
+        the probed cells hold, and nothing cached.
 
         ``guarantee=True`` reproduces the reference's lazy-rerank contract
-        (exact within the probed cells, up to estimator-bound validity): after
-        reranking the top ``rerank_factor·k`` candidates by lower bound, every
-        remaining candidate whose lower bound is ≤ the k-th exact distance is
-        reranked too (the batch analogue of popping the candidate heap until
-        no lower bound can improve the result —
-        /root/reference/crates/vchordrq/src/rerank.rs:53-101).
+        (exact within the probed cells, up to estimator-bound validity):
+        after reranking the top ``rerank_factor·k`` candidates by lower
+        bound, every remaining candidate whose lower bound is ≤ the k-th
+        exact distance is reranked too (the batch analogue of popping the
+        candidate heap until no lower bound can improve the result —
+        crates/vchordrq/src/rerank.rs:53-101). Each batch
+        applies the rule to its own rows; the global top-k is a subset of
+        the union of the batches' top-k, so the merge returns the same
+        rows as the rule applied to all probed rows at once.
+
+        ``guarantee=False`` or ``max_scan_tuples`` rerank only the top
+        ``m`` candidates by (lower bound, id), ``m = rerank_factor·k``
+        capped by ``max_scan_tuples``: each batch emits its top-m and the
+        merge cuts the global top-m before the top-k by distance.
+        ``rerank_factor=None`` reranks every probed row.
 
         ``prefilter``: optional DataFrame of allowed ``id`` values applied
         BEFORE rerank (the reference's prefilter semantics, Q9).
         ``base_df``: rerank against this (id, vec) table instead of the
         index-stored vectors (``rerank_in_table`` mode, Q5).
         """
-        meta = self.meta
-        metric = meta["metric"]
-        # Qe keeps the query in full double precision for the exact rerank;
-        # the rotated f32 Q_rot drives the descent, the LUT and the
-        # quantized-storage rerank
         Qe, Q_rot = K.prep_queries(
-            np.asarray(query, np.float64)[None], metric, meta["dim"]
+            np.asarray(query, np.float64)[None], self.meta["metric"], self.meta["dim"]
         )
         self._maybe_record_query(Qe[0].astype(np.float32))
-        probed, probe_mask = self._probe(
-            Q_rot, probes, lazy=lazy_descent, epsilon=epsilon
-        )
-        if len(probed) == 0:
-            return self._empty_result()
-
-        # exact (or, for quantized storage, dequantized-estimate) rerank
-        # through the same storage-dispatched scorer as search_batch, on
-        # one-query (qid=0, id) candidate frames
-        exact_dist = self._batch_exact_dist(probed, Qe, Q_rot, base_df)
-
-        def rerank(cand: DataFrame) -> DataFrame:
-            return exact_dist(cand).select("id", "dist").orderBy("dist", "id")
-
-        m_cand = rerank_factor * k if rerank_factor is not None else None
+        m = rerank_factor * k if rerank_factor is not None else None
         if max_scan_tuples is not None:
-            m_cand = min(m_cand, max_scan_tuples) if m_cand else max_scan_tuples
-
-        # Small-probed-set short circuit: exact-reranking EVERY probed row
-        # returns the guarantee contract's answer (exact top-k within the
-        # probed cells — crates/vchordrq/src/rerank.rs:53-101 restricted
-        # brute force) unconditionally, so when the probed cells are small
-        # the descent result feeds the rerank directly and the rough-score
-        # stage, the persist, and the two-pass lb sweep never run. Not
-        # taken under max_scan_tuples (that contract truncates by lb order)
-        # or guarantee=False with a cap (explicitly top-m-by-lb).
-        if (
-            cheap_threshold
-            and max_scan_tuples is None
-            and (m_cand is None or guarantee)
-            and sum(self.cluster_sizes().get(int(c), 0) for c in probed)
-            <= cheap_threshold
-        ):
-            cand = self._codes_df(probed, ["id"])
-            if prefilter is not None:
-                cand = cand.join(prefilter.select("id"), "id", "left_semi")
-            return rerank(cand.select(F.lit(0).alias("qid"), "id")).limit(int(k))
-
-        scored = self._rough_scored(probed, probe_mask, Q_rot, epsilon)
-        if prefilter is not None:
-            scored = scored.join(prefilter.select("id"), "id", "left_semi")
-        if m_cand is None:
-            # exhaustive: rerank everything that was scored
-            return rerank(scored.select("qid", "id")).limit(int(k))
-
-        if not guarantee or max_scan_tuples is not None:
-            # single-consumer plan: persisting here would only add cache
-            # churn (the scored scan is read exactly once)
-            top_m = scored.orderBy("lb", "id").limit(int(m_cand))
-            return rerank(top_m.select("qid", "id")).limit(int(k))
-        # the guarantee pass reads `scored` twice (pass-1 top-m and the
-        # lb ≤ D_k sweep) — persist so the python scoring stage runs once
-        scored = self._persist_scored(scored)
-        pass1 = scored.orderBy("lb", "id").limit(int(m_cand)).select("qid", "id")
-        # guarantee pass as ONE lazy plan (no mid-plan driver collect — the
-        # k-th pass-1 distance reaches the lb filter as a broadcast 1-row
-        # join, so the whole search is a single Spark action): rerank
-        # everything with lb ≤ D_k, falling back to "rerank all scored"
-        # (threshold = +inf) when pass 1 produced fewer than k rows
-        thresh_df = _guarantee_threshold(rerank(pass1).limit(int(k)), metric, k)
-        # union pass-1: a pass-1 winner whose lb exceeds thresh (the ε bound
-        # is probabilistic) must not be dropped from the final rerank
-        final_cand = (
-            scored.crossJoin(F.broadcast(thresh_df))
-            .where(F.col("lb") <= F.col("_thresh"))
-            .select("qid", "id")
-            .unionAll(pass1)
-            .distinct()
+            m = min(m, max_scan_tuples) if m else max_scan_tuples
+        guarantee = guarantee and max_scan_tuples is None
+        rows = self._selected_rows(
+            Qe, Q_rot, probes, epsilon, prefilter, base_df, lazy_descent,
+            k=k, m=m, guarantee=guarantee,
         )
-        return rerank(final_cand).limit(int(k))
+        if rows is None:
+            return self._empty_result()
+        if m is not None and not guarantee:
+            rows = rows.orderBy("lb", "id").limit(int(m))
+        return rows.select("id", "dist").orderBy("dist", "id").limit(int(k))
 
-    def _rough_scored(
+    def search_batch(
+        self,
+        queries: "list[list[float]] | np.ndarray",
+        k: int = 10,
+        probes: list[int] | int | None = None,
+        epsilon: float = 1.9,
+        rerank_factor: int | None = 4,
+        guarantee: bool = True,
+        return_rough: bool = False,
+        base_df: DataFrame | None = None,
+        prefilter: DataFrame | None = None,
+    ) -> DataFrame:
+        """Multi-query k-NN in ONE pass over the codes table.
+
+        The Spark-native serving shape, and the same front end as
+        ``search``: the queries go through the shared prep
+        (``K.prep_queries``) and descend the centroid tree, and the union
+        of probed clusters is read once by the scan kernel (``_scan``:
+        every query's estimates from a single ``bits @ QQᵀ`` matmul, then
+        each query's selection and exact rerank inside the batch). A
+        per-``qid`` ``row_number`` merges the batches, with the same
+        selection rules as ``search`` (the top-m cut by (lower bound, id)
+        comes before the top-k cut when ``guarantee=False``).
+        Returns (qid, id, dist, rank) with rank ≤ k per query.
+
+        ``return_rough``: return (qid, id, rough) instead — each query's
+        top-k by the RaBitQ estimate, in the index's INTERNAL distance
+        space (squared-l2 / negated-dot), with no rerank (the reference's
+        maxsim candidate pool keeps rough distances, scanners/maxsim.rs).
+
+        ``base_df``: rerank against this (id, vec) table instead of the
+        index-stored payload (``rerank_in_table``, Q5 — the batch analogue
+        of ``search(base_df=...)``; the reference's rerank heap works for
+        every storage, crates/vchordrq/src/rerank.rs:113-137). Required
+        when the index was built with ``rerank_in_index=False`` and
+        f32/f16 storage; quantized storage reranks on its own codes.
+
+        ``prefilter``: optional DataFrame of allowed ``id`` values applied
+        BEFORE rerank for every query in the batch (the reference's
+        prefilter semantics, Q9 — the batch analogue of
+        ``search(prefilter=...)``; one semi-join on the codes scan).
+        """
+        if return_rough:
+            return self._rough_pool(
+                queries, k, probes, epsilon, 0, prefilter=prefilter
+            ).select("qid", "id", "rough")
+        Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
+        m = rerank_factor * k if rerank_factor is not None else None
+        rows = self._selected_rows(
+            Qe, Q_rot, probes, epsilon, prefilter, base_df,
+            k=k, m=m, guarantee=guarantee,
+        )
+        if rows is None:
+            return self.spark.createDataFrame(
+                [], "qid int, id long, dist double, rank int"
+            )
+        if m is not None and not guarantee:
+            rows = _top_per_query(rows, m, "lb", "id", rank="_rn")
+        return (
+            _top_per_query(rows, k, "dist", "id")
+            .select("qid", "id", "dist", "rank")
+            .orderBy("qid", "rank")
+        )
+
+    def _rough_pool(
+        self,
+        queries: "list[list[float]] | np.ndarray",
+        k: int,
+        probes: list[int] | int | None,
+        epsilon: float,
+        refine: int,
+        base_df: DataFrame | None = None,
+        prefilter: DataFrame | None = None,
+    ) -> DataFrame:
+        """The maxsim candidate pool: each query's top-k rows by
+        (rough, id) as (qid, id, rough, dist, rank). ``dist`` is the exact
+        distance of the rows with rank ≤ ``refine`` (the refine head,
+        reranked inside the scan, or through ``base_df``) and null for the
+        rest."""
+        Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
+        rows = self._selected_rows(
+            Qe, Q_rot, probes, epsilon, prefilter, base_df, k=k, refine=refine
+        )
+        if rows is None:
+            return self.spark.createDataFrame(
+                [], "qid int, id long, rough double, dist double, rank int"
+            )
+        return _top_per_query(rows, k, "rough", "id")
+
+    def _selected_rows(
+        self,
+        Qe: np.ndarray,
+        Q_rot: np.ndarray,
+        probes: list[int] | int | None,
+        epsilon: float,
+        prefilter: DataFrame | None,
+        base_df: DataFrame | None,
+        lazy: bool = False,
+        **select,
+    ) -> DataFrame | None:
+        """(qid, id, lb, rough, dist): the descent's probed rows that
+        ``_local_select`` keeps under ``select``, from the scan kernel —
+        or, for a ``base_df`` that must rerank, from the rerank-in-table
+        plan. None when the descent probes no cell."""
+        probed, probe_mask = self._probe(Q_rot, probes, lazy=lazy, epsilon=epsilon)
+        if not len(probed):
+            return None
+        if base_df is None or select.get("refine") == 0:
+            return self._scan(
+                probed, probe_mask, Qe, Q_rot, epsilon, prefilter, select
+            )
+        scored = self._scan(probed, probe_mask, Qe, Q_rot, epsilon, prefilter, None)
+        return self._rerank_in_table(scored, Qe, base_df, **select)
+
+    def _scan(
         self,
         probed: np.ndarray,
         probe_mask: np.ndarray,
+        Qe: np.ndarray,
         Q_rot: np.ndarray,
         epsilon: float,
+        prefilter: DataFrame | None,
+        select: dict | None,
     ) -> DataFrame:
-        """The one RaBitQ rough-scoring kernel, shared by ``search`` (one
-        query as qid 0) and ``search_batch``: ONE scan of the probed cells'
-        codes, where each batch's sums for every query come from a single
-        ``bits @ QQᵀ`` matmul and a row is scored only for the queries
-        whose descent probed its cell (``probe_mask``, (n_leaves, nq)).
-        Returns (qid, id, lb, rough) in the index's internal distance space
-        (squared-l2 / negated-dot) with ``lb = rough − ε·err``."""
+        """The one codes scan of every IVF query (``search`` as qid 0,
+        ``search_batch``, the maxsim pool): ONE read of the probed cells'
+        codes and, when ``select`` reranks, the storage's rerank payload.
+
+        Per Arrow batch, each row is scored only for the queries whose
+        descent probed its cell (``probe_mask``, (n_leaves, nq)), every
+        query's sums from a single ``bits @ QQᵀ`` matmul, giving ``rough``
+        and ``lb = rough − ε·err`` in the index's internal distance space
+        (squared-l2 / negated-dot). ``_local_select(**select)`` then keeps
+        each query's rows of the batch that the merge can need, exact-
+        scored by ``_payload_scorer``; ``select=None`` keeps every row
+        with a null ``dist`` (the rerank-in-table input).
+        Returns (qid, id, lb, rough, dist).
+
+        mapInArrow, not mapInPandas: pandas treats NaN as the null
+        sentinel, which would turn a NaN distance (non-finite stored
+        vector) into SQL NULL and sort it FIRST instead of last (the
+        issue_427 contract)."""
         meta = self.meta
+        metric = meta["metric"]
         dim = meta["dim"]
         nq = len(Q_rot)
-        internal = "l2" if meta["metric"] == "l2" else "dot"
+        internal = "l2" if metric == "l2" else "dot"
         luts = [K.binary_lut(Q_rot[qi]) for qi in range(nq)]
         QQ = np.stack([lut["qvector"] for lut in luts]).astype(np.int64)  # (nq, d)
         residual = meta["residual_quantization"]
@@ -1242,352 +1319,230 @@ class IvfIndex(QuerySampling):
                 ).astype(np.float32)
                 norm_all = np.linalg.norm(leaf_rot, axis=1).astype(np.float32)
         else:
-            dis_f_all = None
-            norm_all = None
+            dis_f_all = norm_all = None
         eps = float(epsilon)
         rough_fn = K.rough_l2 if internal == "l2" else K.rough_dot
+        factors = ("dis_u_2", "factor_cnt", "factor_ip", "factor_err")
+        columns = ["id", "cluster_id", *factors, "delta", "code"]
+        decode = score = None
+        if select is not None and select.get("refine") != 0:
+            payload_cols, decode, score = self._payload_scorer(Qe, Q_rot)
+            columns += payload_cols
 
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                bits = K.unpack_bits(list(pdf["code"]), dim)
-                sums_all = bits.astype(np.int64) @ QQ.T  # (m, nq)
-                m = {
-                    "dis_u_2": pdf["dis_u_2"].to_numpy(np.float32),
-                    "factor_cnt": pdf["factor_cnt"].to_numpy(np.float32),
-                    "factor_ip": pdf["factor_ip"].to_numpy(np.float32),
-                    "factor_err": pdf["factor_err"].to_numpy(np.float32),
-                }
-                cids = pdf["cluster_id"].to_numpy(np.int64)
-                ids = pdf["id"].to_numpy(np.int64)
-                delta = pdf["delta"].to_numpy(np.float32) if residual else None
-                out_id, out_qid, out_lb, out_rough = [], [], [], []
-                for qi in range(nq):
-                    mask = probe_mask[cids, qi]
-                    if not mask.any():
-                        continue
-                    mm = {kk: vv[mask] for kk, vv in m.items()}
-                    kw = {}
-                    if residual:
-                        kw = {"dis_f": dis_f_all[qi][cids[mask]], "delta": delta[mask]}
-                        if internal == "dot":
-                            kw["norm"] = norm_all[cids[mask]]
-                    rough, err = rough_fn(sums_all[mask, qi], mm, luts[qi], **kw)
-                    out_id.append(ids[mask])
-                    out_qid.append(np.full(mask.sum(), qi, np.int32))
-                    out_lb.append((rough - eps * err).astype(np.float64))
-                    out_rough.append(rough.astype(np.float64))
-                if not out_id:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_qid),
-                        "id": np.concatenate(out_id),
-                        "lb": np.concatenate(out_lb),
-                        "rough": np.concatenate(out_rough),
-                    }
-                )
-
-        meta_cols = [
-            "id", "cluster_id", "dis_u_2", "factor_cnt",
-            "factor_ip", "factor_err", "delta", "code",
-        ]
-        return self._codes_df(probed, meta_cols).mapInPandas(
-            score, "qid int, id long, lb double, rough double"
-        )
-
-    def _batch_exact_dist(
-        self,
-        probed_arr: np.ndarray,
-        Qe: np.ndarray,
-        Q_rot: np.ndarray,
-        base_df: DataFrame | None = None,
-    ):
-        """Storage-dispatched rerank: returns a function mapping a
-        candidate DataFrame (qid, id) to exact (or dequantized-estimate)
-        distances (qid, id, dist) — the analogue of the reference's
-        storage-agnostic rerank heap (crates/vchordrq/src/rerank.rs:113-137).
-        The one rerank of ``search`` (a single query as qid 0),
-        ``search_batch`` and the maxsim refine stage.
-
-        ``Qe`` and ``Q_rot`` are the shared prep's output
-        (``K.prep_queries``: the (nq, dim) f64 queries normalized for cos,
-        and their rotated f32 counterpart, used by quantized storage).
-        ``base_df`` switches to rerank-in-table mode (Q5).
-
-        The numpy scorers run under mapInArrow, not mapInPandas: pandas
-        treats NaN as the null sentinel, which would turn a NaN distance
-        (non-finite stored vector) into SQL NULL and sort it FIRST instead
-        of last (the issue_427 contract)."""
-        meta = self.meta
-        metric = meta["metric"]
-        dim = meta["dim"]
-        storage = meta.get("storage", "f32")
-        nq = len(Qe)
-
-        if base_df is not None:
-            # rerank-in-table: exact distances against the caller's base
-            # table — same broadcast-candidate join shape as the in-index
-            # f32 branch, just a different vector source
-            base_src = base_df.select("id", "vec")
-            if metric == "cos":
-                base_src = base_df.select(
-                    "id", D.normalize("vec").cast("array<float>").alias("vec")
-                )
-            bq_arr = F.array(
-                *[D.vec_lit([float(x) for x in Qe[qi]]) for qi in range(nq)]
-            )
-            bqv = F.element_at(bq_arr, F.col("qid") + 1)
-            if metric == "l2":
-                b_dist = D.l2("vec", bqv)
-            elif metric == "dot":
-                b_dist = D.ip("vec", bqv)
-            else:
-                b_dist = F.lit(1.0) + D.ip("vec", bqv)
-
-            def exact_dist(cand: DataFrame) -> DataFrame:
-                return (
-                    base_src.join(F.broadcast(cand), "id")
-                    .select("qid", "id", b_dist.alias("dist"))
-                )
-
-            return exact_dist
-
-        if storage in ("rabitq8", "rabitq4"):
-            # quantized storage: the reference's rabitq8/rabitq4 rerank
-            # against the dequantized estimate (rotation-invariant distances
-            # in rotated space; one decode + row-wise dot per Arrow batch)
-            sq_bits = {"rabitq8": 8, "rabitq4": 4}[storage]
-            Qr64 = np.asarray(Q_rot, np.float64)  # (nq, dim) rotated queries
-            base_off = np.float64(-0.5 * ((1 << sq_bits) - 1))
-            q_norm2 = np.einsum("ij,ij->i", Qr64, Qr64)
-
-            def sq_score(batches):
-                import pyarrow as pa
-
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    code = _sq_code_matrix(rb, sq_bits, dim)
-                    scale = np.sqrt(_arrow_f64_np(rb, "sq_dis_u_2")) / _arrow_f64_np(
-                        rb, "sq_nol"
-                    )
-                    centered = code.astype(np.float64) + base_off
-                    qid_arr = _arrow_i32(rb, "qid")
-                    qids = np.asarray(qid_arr, dtype=np.int64)
-                    dotq = (
-                        np.einsum("ij,ij->i", centered, Qr64[qids]) * scale
-                    )
-                    if metric == "l2":
-                        deq_n2 = (
-                            np.einsum("ij,ij->i", centered, centered)
-                            * scale
-                            * scale
-                        )
-                        d = np.sqrt(
-                            np.maximum(q_norm2[qids] + deq_n2 - 2.0 * dotq, 0.0)
-                        )
-                    elif metric == "dot":
-                        d = -dotq
-                    else:
-                        d = 1.0 - dotq
-                    yield pa.record_batch(
-                        [qid_arr, _arrow_i64(rb, "id"), pa.array(d)],
-                        names=["qid", "id", "dist"],
-                    )
-
-            sq_src = self._codes_df(
-                probed_arr, ["id", "sq_dis_u_2", "sq_nol", "sq_code"]
-            )
-
-            def exact_dist(cand: DataFrame) -> DataFrame:
-                return (
-                    sq_src.join(F.broadcast(cand), "id")
-                    .mapInArrow(sq_score, "qid int, id long, dist double")
-                )
-
-            return exact_dist
-
-        if storage == "f32":
-            if not meta["rerank_in_index"]:
-                raise ValueError(
-                    "index built with rerank_in_index=False: pass base_df"
-                )
-            vec_src = self._codes_df(probed_arr, ["id", "vec"])
-            # binary-packed payload (CODES_SCHEMA): decode per batch and
-            # replicate the JVM aggregate(zip_with) left fold exactly —
-            # per-dimension f64 accumulation in index order (same IEEE
-            # ops, same order, same dtypes as D.l2/D.ip), so oracle-gated
-            # distances are unchanged by the storage layout
-            Q64 = np.asarray(Qe, np.float64)
-
-            def f32_fold_batch(batches):
-                import pyarrow as pa
-
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    mat = _binary_f32_matrix(rb, "vec", dim)
-                    qid_arr = _arrow_i32(rb, "qid")
-                    qs = Q64[np.asarray(qid_arr, np.int64)]
-                    acc = np.zeros(rb.num_rows, np.float64)
-                    if metric == "l2":
-                        for j in range(dim):
-                            t = mat[:, j] - qs[:, j]
-                            acc += t * t
-                        d = np.sqrt(acc)
-                    else:
-                        for j in range(dim):
-                            acc += mat[:, j] * qs[:, j]
-                        d = -acc if metric == "dot" else 1.0 + (-acc)
-                    yield pa.record_batch(
-                        [qid_arr, _arrow_i64(rb, "id"), pa.array(d)],
-                        names=["qid", "id", "dist"],
-                    )
-
-            def exact_dist(cand: DataFrame) -> DataFrame:
-                return (
-                    vec_src.join(F.broadcast(cand), "id")
-                    .mapInArrow(f32_fold_batch, "qid int, id long, dist double")
-                )
-
-            return exact_dist
-
-        # f16 packed binary: decode + vectorized numpy distances
-        if not meta["rerank_in_index"]:
-            raise ValueError(
-                "index built with rerank_in_index=False: pass base_df"
-            )
-        f16_src = self._codes_df(probed_arr, ["id", "vec_f16"])
-        Qmat = Qe  # (nq, dim) f64, closure-captured (tiny)
-
-        def f16_score(batches):
+        def kernel(batches):
             import pyarrow as pa
 
             for rb in batches:
                 if not rb.num_rows:
                     continue
-                mat = _binary_f16_matrix(rb, "vec_f16", dim)
-                qid_arr = _arrow_i32(rb, "qid")
-                qs = Qmat[np.asarray(qid_arr, dtype=np.int64)]
-                if metric == "l2":
-                    d = np.sqrt(((mat - qs) ** 2).sum(axis=1))
-                elif metric == "dot":
-                    d = -np.einsum("ij,ij->i", mat, qs)
-                else:
-                    d = 1.0 - np.einsum("ij,ij->i", mat, qs)
+                bits = K.unpack_bits(_binary_u8_matrix(rb, "code"), dim)
+                sums_all = bits.astype(np.int64) @ QQ.T  # (n, nq)
+                fac = {c: _arrow_np(rb, c, np.float32) for c in factors}
+                cids = _arrow_np(rb, "cluster_id", np.int64)
+                ids = _arrow_np(rb, "id", np.int64)
+                delta = _arrow_np(rb, "delta", np.float32) if residual else None
+                payload = decode(rb) if decode else None
+                out = []
+                for qi in range(nq):
+                    rows = np.flatnonzero(probe_mask[cids, qi])
+                    if not len(rows):
+                        continue
+                    kw = {}
+                    if residual:
+                        kw = {"dis_f": dis_f_all[qi][cids[rows]], "delta": delta[rows]}
+                        if internal == "dot":
+                            kw["norm"] = norm_all[cids[rows]]
+                    rough, err = rough_fn(
+                        sums_all[rows, qi],
+                        {c: v[rows] for c, v in fac.items()},
+                        luts[qi],
+                        **kw,
+                    )
+                    lb = (rough - eps * err).astype(np.float64)
+                    rough = rough.astype(np.float64)
+                    if select is None:
+                        pick, dist = np.arange(len(rows)), np.empty(0)
+                    else:
+
+                        def exact(r, rows=rows, qi=qi):
+                            return score(payload, rows[r], np.full(len(r), qi))
+
+                        pick, dist = _local_select(
+                            ids[rows], lb, rough, exact, metric, **select
+                        )
+                    n = len(pick)
+                    out.append((
+                        np.full(n, qi, np.int32),
+                        ids[rows[pick]],
+                        lb[pick],
+                        rough[pick],
+                        np.pad(dist, (0, n - len(dist))),
+                        np.arange(n) < len(dist),
+                    ))
+                if not out:
+                    continue
+                qid, rid, lb, rough, dist, has = map(np.concatenate, zip(*out))
                 yield pa.record_batch(
-                    [qid_arr, _arrow_i64(rb, "id"), pa.array(d)],
-                    names=["qid", "id", "dist"],
+                    [
+                        pa.array(qid),
+                        pa.array(rid),
+                        pa.array(lb),
+                        pa.array(rough),
+                        pa.array(dist, mask=~has),
+                    ],
+                    names=["qid", "id", "lb", "rough", "dist"],
                 )
 
-        def exact_dist(cand: DataFrame) -> DataFrame:
-            return (
-                f16_src.join(F.broadcast(cand), "id")
-                .mapInArrow(f16_score, "qid int, id long, dist double")
-            )
-
-        return exact_dist
-
-    def search_batch(
-        self,
-        queries: "list[list[float]] | np.ndarray",
-        k: int = 10,
-        probes: list[int] | int | None = None,
-        epsilon: float = 1.9,
-        rerank_factor: int | None = 4,
-        guarantee: bool = True,
-        return_rough: bool = False,
-        base_df: DataFrame | None = None,
-        prefilter: DataFrame | None = None,
-    ) -> DataFrame:
-        """Multi-query k-NN in ONE pass over the codes table.
-
-        The Spark-native serving shape, and the same front end as
-        ``search``: the queries go through the shared prep
-        (``K.prep_queries``) and descend the centroid tree, the union of
-        probed clusters is scanned once by the shared rough-scoring kernel
-        (``_rough_scored``: every query's estimates from a single
-        ``bits @ QQᵀ`` matmul), and candidates are reranked by the shared
-        storage-dispatched scorer (``_batch_exact_dist``).
-        Returns (qid, id, dist, rank) with rank ≤ k per query.
-
-        ``base_df``: rerank against this (id, vec) table instead of the
-        index-stored payload (``rerank_in_table``, Q5 — the batch analogue
-        of ``search(base_df=...)``; the reference's rerank heap works for
-        every storage, crates/vchordrq/src/rerank.rs:113-137). Required
-        when the index was built with ``rerank_in_index=False`` and
-        f32/f16 storage; quantized storage reranks on its own codes.
-
-        ``prefilter``: optional DataFrame of allowed ``id`` values applied
-        BEFORE rerank for every query in the batch (the reference's
-        prefilter semantics, Q9 — the batch analogue of
-        ``search(prefilter=...)``; one broadcast semi-join on the shared
-        scored scan).
-        """
-        Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
-        probed_arr, probe_mask = self._probe(Q_rot, probes)
-        if not len(probed_arr):
-            return self.spark.createDataFrame(
-                [], "qid int, id long, dist double, rank int"
-            )
-        scored = self._rough_scored(probed_arr, probe_mask, Q_rot, epsilon)
+        df = self._codes_df(probed, columns)
         if prefilter is not None:
-            scored = scored.join(prefilter.select("id"), "id", "left_semi")
-        from pyspark.sql import Window
-
-        if return_rough:
-            # rough-score mode (the reference's maxsim candidate pool keeps
-            # ROUGH distances, scanners/maxsim.rs — exact rerank is the
-            # separate `maxsim_refine` stage): top-k per query by the
-            # estimator value, in the index's INTERNAL distance space
-            # (squared-l2 / negated-dot)
-            w0 = Window.partitionBy("qid").orderBy("rough", "id")
-            return (
-                scored.withColumn("rank", F.row_number().over(w0))
-                .where(F.col("rank") <= k)
-                .select("qid", "id", "rough")
-            )
-
-        w2 = Window.partitionBy("qid").orderBy("dist", "id")
-        exact_dist = self._batch_exact_dist(probed_arr, Qe, Q_rot, base_df=base_df)
-
-        def rerank(cand: DataFrame) -> DataFrame:
-            return (
-                exact_dist(cand)
-                .withColumn("rank", F.row_number().over(w2))
-                .where(F.col("rank") <= k)
-                .orderBy("qid", "rank")
-            )
-
-        if rerank_factor is None:
-            return rerank(scored.select("qid", "id"))
-
-        scored = self._persist_scored(scored)
-        w = Window.partitionBy("qid").orderBy("lb", "id")
-        pass1 = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= rerank_factor * k)
-            .select("qid", "id")
+            df = df.join(prefilter.select("id"), "id", "left_semi")
+        return df.mapInArrow(
+            kernel, "qid int, id long, lb double, rough double, dist double"
         )
+
+    def _payload_scorer(self, Qe: np.ndarray, Q_rot: np.ndarray):
+        """The in-index rerank scorer for the index's storage — the analogue
+        of the reference's storage-agnostic rerank
+        (crates/vchordrq/src/rerank.rs:113-137). Returns
+        ``(columns, decode, score)``: the codes columns holding the
+        payload, ``decode(rb)`` → the Arrow batch's payload, and
+        ``score(payload, rows, qids)`` → output-space distances of batch
+        rows ``rows`` to queries ``qids``: exact for f32 and f16, against
+        the dequantized estimate for rabitq8/rabitq4.
+
+        ``Qe`` and ``Q_rot`` are the shared prep's output
+        (``K.prep_queries``: the (nq, dim) f64 queries normalized for cos,
+        and their rotated f32 counterpart, used by quantized storage)."""
+        meta = self.meta
+        metric = meta["metric"]
+        dim = meta["dim"]
+        storage = meta.get("storage", "f32")
+
+        if storage in ("rabitq8", "rabitq4"):
+            # rotation-invariant distances in rotated space: one decode per
+            # Arrow batch, a row-wise dot per scored row
+            sq_bits = {"rabitq8": 8, "rabitq4": 4}[storage]
+            Qr64 = np.asarray(Q_rot, np.float64)  # (nq, dim) rotated queries
+            base_off = np.float64(-0.5 * ((1 << sq_bits) - 1))
+            q_norm2 = np.einsum("ij,ij->i", Qr64, Qr64)
+
+            def sq_decode(rb):
+                scale = np.sqrt(_arrow_np(rb, "sq_dis_u_2", np.float64)) / _arrow_np(
+                    rb, "sq_nol", np.float64
+                )
+                return _sq_code_matrix(rb, sq_bits, dim), scale
+
+            def sq_score(payload, rows, qids):
+                code, scale = payload
+                centered = code[rows].astype(np.float64) + base_off
+                sc = scale[rows]
+                dotq = np.einsum("ij,ij->i", centered, Qr64[qids]) * sc
+                if metric == "l2":
+                    deq_n2 = np.einsum("ij,ij->i", centered, centered) * sc * sc
+                    return np.sqrt(np.maximum(q_norm2[qids] + deq_n2 - 2.0 * dotq, 0.0))
+                return -dotq if metric == "dot" else 1.0 - dotq
+
+            return ["sq_dis_u_2", "sq_nol", "sq_code"], sq_decode, sq_score
+
+        if not meta["rerank_in_index"]:
+            raise ValueError("index built with rerank_in_index=False: pass base_df")
+        # packed little-endian f32 / f16 rows, viewed without a copy;
+        # scorers widen only the rows they rerank
+        col, fp = ("vec", "<f4") if storage == "f32" else ("vec_f16", "<f2")
+
+        def decode(rb):
+            return _binary_u8_matrix(rb, col).view(fp)
+
+        if storage == "f32":
+            # replicate the JVM aggregate(zip_with) left fold exactly —
+            # per-dimension f64 accumulation in index order (same IEEE ops,
+            # same order, same dtypes as D.l2/D.ip), so oracle-gated
+            # distances are unchanged by the storage layout
+            def f32_fold(vecs, rows, qids):
+                mat = vecs[rows].astype(np.float64)
+                qs = Qe[qids]
+                acc = np.zeros(len(rows), np.float64)
+                if metric == "l2":
+                    for j in range(dim):
+                        t = mat[:, j] - qs[:, j]
+                        acc += t * t
+                    return np.sqrt(acc)
+                for j in range(dim):
+                    acc += mat[:, j] * qs[:, j]
+                return -acc if metric == "dot" else 1.0 + (-acc)
+
+            return [col], decode, f32_fold
+
+        def f16_score(vecs, rows, qids):
+            mat = vecs[rows].astype(np.float64)
+            qs = Qe[qids]
+            if metric == "l2":
+                return np.sqrt(((mat - qs) ** 2).sum(axis=1))
+            if metric == "dot":
+                return -np.einsum("ij,ij->i", mat, qs)
+            return 1.0 - np.einsum("ij,ij->i", mat, qs)
+
+        return [col], decode, f16_score
+
+    def _rerank_in_table(
+        self,
+        scored: DataFrame,
+        Qe: np.ndarray,
+        base_df: DataFrame,
+        k: int,
+        m: int | None = None,
+        guarantee: bool = False,
+        refine: int | None = None,
+    ) -> DataFrame:
+        """``_local_select``'s rules for a ``base_df`` (rerank-in-table, Q5)
+        payload, whose vectors are not in the codes scan: applied once over
+        every scored row with per-qid windows, exact distances from joins
+        that broadcast the candidates so the base table never shuffles.
+        The guarantee sweep and the refine tail read ``scored`` again,
+        which recomputes the scan. Returns (qid, id, lb, rough, dist)."""
+        metric = self.meta["metric"]
+        base_src = base_df.select("id", "vec")
+        if metric == "cos":
+            base_src = base_df.select(
+                "id", D.normalize("vec").cast("array<float>").alias("vec")
+            )
+        bq_arr = F.array(*[D.vec_lit([float(x) for x in q]) for q in Qe])
+        bqv = F.element_at(bq_arr, F.col("qid") + 1)
+        if metric == "l2":
+            b_dist = D.l2("vec", bqv)
+        elif metric == "dot":
+            b_dist = D.ip("vec", bqv)
+        else:
+            b_dist = F.lit(1.0) + D.ip("vec", bqv)
+        cols = ["qid", "id", "lb", "rough"]
+
+        def exact(cand: DataFrame) -> DataFrame:
+            return base_src.join(F.broadcast(cand.select(*cols)), "id").select(
+                *cols, b_dist.alias("dist")
+            )
+
+        if refine is not None:
+            pool = _top_per_query(scored, k, "rough", "id", rank="_rn")
+            head = exact(pool.where(F.col("_rn") <= int(refine)))
+            return head.unionByName(
+                pool.where(F.col("_rn") > int(refine)).drop("_rn")
+            )
+        if m is None:
+            return exact(scored)
+        pass1 = _top_per_query(scored, m, "lb", "id", rank="_rn").select(*cols)
         if not guarantee:
-            return rerank(pass1)
-        # per-query guarantee pass (the batch analogue of the single-query
-        # lazy-rerank contract) as ONE lazy plan: each query's k-th pass-1
-        # exact distance reaches the lb filter as a broadcast nq-row join —
-        # the same no-mid-plan-collect shape as the single-query path
-        thresh_df = _guarantee_threshold(rerank(pass1), self.meta["metric"], k, "qid")
-        final_cand = (
-            # left join: a query with NO pass-1 rows at all has no threshold
-            # row — treat as +inf (rerank everything it scored)
-            scored.join(F.broadcast(thresh_df), "qid", "left")
-            .where(F.col("lb") <= F.coalesce(F.col("_thresh"), F.lit(float("inf"))))
-            .select("qid", "id")
-            .unionAll(pass1)
-            .distinct()
+            return exact(pass1)
+        thresh = _guarantee_threshold(
+            _top_per_query(exact(pass1), k, "dist", "id"), metric, k
         )
-        return rerank(final_cand)
+        # left join: a query with NO pass-1 rows has no threshold row —
+        # treat as +inf (rerank everything it scored)
+        sweep = scored.join(F.broadcast(thresh), "qid", "left").where(
+            F.col("lb") <= F.coalesce(F.col("_thresh"), F.lit(float("inf")))
+        )
+        return exact(
+            sweep.select(*cols).unionByName(pass1).dropDuplicates(["qid", "id"])
+        )
 
     def range_search(
         self,
@@ -1646,8 +1601,8 @@ class IvfIndex(QuerySampling):
         The *previous* codes directory is kept until the next compact so
         that lazy DataFrames returned by earlier ``search()`` calls remain
         collectable (snapshot-ish semantics); only the version before that
-        is reclaimed. The cached scored DF is unpersisted since it
-        references the old files."""
+        is reclaimed. Searches cache nothing, so there is no query state
+        to release."""
         old_version = self.meta["codes_version"]
         # capture the OLD path before bumping the version (read.parquet
         # resolves the path eagerly, so the lazy plan keeps reading v_old
@@ -1660,10 +1615,6 @@ class IvfIndex(QuerySampling):
         self._write_codes(df, "overwrite")
         with open(os.path.join(self.path, "meta.json"), "w") as f:
             json.dump(self.meta, f)
-        prev = getattr(self, "_last_scored", None)
-        if prev is not None:
-            prev.unpersist()
-            self._last_scored = None
         # reclaim the version *before* the one we just superseded
         shutil.rmtree(
             os.path.join(self.path, f"codes_v{old_version - 1}"), ignore_errors=True

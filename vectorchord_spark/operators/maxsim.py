@@ -21,20 +21,17 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectorchord_spark.kernels import prep_queries
 from vectorchord_spark.operators.ivf import IvfIndex
 
 
-def _persist_bounded(index: IvfIndex, df: DataFrame, slot: str = "un") -> DataFrame:
-    """At most one outstanding persisted DF per (index, slot) (same
-    bounded-cache policy as IvfIndex._persist_scored — a serving process
-    must not accumulate one cached RDD per query)."""
-    attr = f"_last_maxsim_{slot}"
-    prev = getattr(index, attr, None)
+def _persist_bounded(index: IvfIndex, df: DataFrame) -> DataFrame:
+    """At most one outstanding persisted candidate frame per index (a
+    serving process must not accumulate one cached RDD per query)."""
+    prev = getattr(index, "_last_maxsim_un", None)
     if prev is not None:
         prev.unpersist()
-    setattr(index, attr, df.persist())
-    return getattr(index, attr)
+    index._last_maxsim_un = df.persist()
+    return index._last_maxsim_un
 
 
 def maxsim_search(
@@ -68,9 +65,11 @@ def maxsim_search(
     (src/index/vchordrq/scanners/maxsim.rs:601-692): the candidate pool
     keeps ROUGH (RaBitQ-estimated) distances and only the best
     ``maxsim_refine`` candidates per token are exact-reranked — the
-    quality/IO knob for wide candidate pools. The default 0 exact-reranks
-    every candidate (a strict quality superset of the reference's default
-    refine=0, which keeps all-rough).
+    quality/IO knob for wide candidate pools. The head is reranked inside
+    the one codes scan that builds the pool (``IvfIndex._rough_pool``), so
+    refine adds no join and no second scan for in-index payloads. The
+    default 0 exact-reranks every candidate (a strict quality superset of
+    the reference's default refine=0, which keeps all-rough).
 
     ``base_df``: rerank against this (id, vec) table instead of the
     index-stored payload (rerank-in-table, Q5) — required for refine on
@@ -87,9 +86,9 @@ def maxsim_search(
             )
         shift = IvfIndex.TOKEN_BITS
         doc_of_id = lambda c: F.shiftright(c, shift)  # noqa: E731
-    # ONE pass over the codes table for ALL tokens (search_batch computes
-    # every token's rough estimates from a single bits @ QQᵀ matmul and
-    # reranks with one broadcast join) — the reference issues one
+    # ONE pass over the codes table for ALL tokens (the index's scan kernel
+    # computes every token's rough estimates from a single bits @ QQᵀ
+    # matmul and reranks inside the same scan) — the reference issues one
     # maxsim_search per token, but they share the same index pages; the
     # Spark-native equivalent of that sharing is a batched scan, not
     # n_tokens sequential descend+scan DAGs
@@ -110,20 +109,13 @@ def maxsim_search(
                 "needs base_df (rerank-in-table); quantized storage "
                 "reranks on its own codes"
             )
-        # reference refine semantics: rough-scored candidate pool + exact
-        # rerank of only the top `maxsim_refine` per token
-        pool = index.search_batch(
-            tokens_f,
-            k=per_token_candidates,
-            probes=probes,
-            epsilon=epsilon,
-            return_rough=True,
+        # reference refine semantics: a rough-scored candidate pool whose
+        # best `maxsim_refine` rows per token carry exact distances — the
+        # scan kernel reranks them on the index's payload (every storage
+        # the single-query path reranks), or a join against base_df does
+        pool = index._rough_pool(
+            tokens_f, per_token_candidates, probes, epsilon, maxsim_refine, base_df
         )
-        # the pool feeds BOTH the head (exact rerank) and the tail (rough
-        # passthrough); persist so the scoring scan runs once, not twice
-        pool = _persist_bounded(index, pool, slot="pool")
-        from pyspark.sql import Window
-
         metric = index.meta["metric"]
         # rough is in internal space (squared-l2 / negated-dot); map to the
         # output space so refined exact distances compose with it
@@ -133,22 +125,13 @@ def maxsim_search(
             rough_out = F.col("rough") + F.lit(1.0)
         else:
             rough_out = F.col("rough")
-        w = Window.partitionBy("qid").orderBy("rough", "id")
-        pool = pool.withColumn("_rk", F.row_number().over(w))
-        head = pool.where(F.col("_rk") <= int(maxsim_refine)).select("qid", "id")
-        # storage-dispatched exact rerank of the head, pruned to the probed
-        # cells (head candidates can only come from there) — the same
-        # query prep and rerank search_batch uses, so every storage the
-        # single-query path reranks, refine reranks too
-        Qe, Q_rot = prep_queries(tokens_f, metric, index.meta["dim"])
-        exact_dist = index._batch_exact_dist(
-            index.probed_union(tokens_f, probes), Qe, Q_rot, base_df=base_df
+        batch = pool.select(
+            "qid",
+            "id",
+            F.when(F.col("rank") <= int(maxsim_refine), F.col("dist"))
+            .otherwise(rough_out)
+            .alias("dist"),
         )
-        refined = exact_dist(head)
-        tail = pool.where(F.col("_rk") > int(maxsim_refine)).select(
-            "qid", "id", rough_out.alias("dist")
-        )
-        batch = refined.unionAll(tail)
     else:
         batch = index.search_batch(
             tokens_f,
