@@ -157,7 +157,7 @@ def test_graph_shard_routing(spark, vec_df):
         assert "Scan parquet" not in txt, txt
         assert "FlatMapGroupsInPandas" not in txt, txt
         assert "MapInPandas" in txt, txt
-        assert "ExistingRDD" in txt, txt
+        assert "Range (" in txt and "ExistingRDD" not in txt, txt
 
 
 def test_graph_quantized_traversal_payload(spark, vec_df):
@@ -334,6 +334,53 @@ def test_graph_insert_delete_compact(spark, vec_df):
         )
         assert deg.max() <= 24 + 8
         assert deg.mean() <= 24
+
+
+def test_graph_seed_is_jvm_range(spark, vec_df):
+    """The per-shard seed is a JVM Range, not a parallelized Python list:
+    the search and search_batch plans have a Range leaf and no
+    ExistingRDD / PythonRDD scan (a pickled-row scan would add a Python
+    task that never imports this package). prewarm() still counts every
+    graph row, and on the insert/delete inputs of
+    test_graph_insert_delete_compact the exhaustive search and
+    search_batch still return brute force's ids and exact distances."""
+    from vectorchord_spark.functions import distances as D
+    from vectorchord_spark.plans import explain as P
+
+    rng = np.random.default_rng(9)
+    q = [float(x) for x in rng.uniform(-1, 1, 16)]
+    q2 = [float(x) for x in rng.uniform(-1, 1, 16)]
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, vec_df.where("id < 2500"), "id", "vec", os.path.join(tmp, "g"),
+            VamanaOptions(metric="l2", m=24, ef_construction=48, n_shards=3),
+        )
+        idx.insert(vec_df.where("id >= 2500"), "id", "vec")
+        idx.delete(vec_df.where(F.col("id") % 11 == 0).select("id"))
+        surviving = vec_df.where(F.col("id") % 11 != 0)
+        full = dict(ef_search=1 << 20, probe_shards=None)
+        one = idx.search(q, k=10, **full)
+        batch = idx.search_batch([q, q2], k=10, **full)
+        for res in (one, batch, idx.search(q, k=10, probe_shards=1)):
+            plan = P.explain_str(res)
+            assert "Range (" in plan, plan
+            assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+        def brute(qv):
+            d = D.output_distance("l2", "vec", D.vec_lit(qv))
+            return [
+                (r.id, r.d)
+                for r in surviving.select("id", d.alias("d"))
+                .orderBy("d", "id")
+                .limit(10)
+                .collect()
+            ]
+
+        assert [(r.id, r.dist) for r in one.collect()] == brute(q)
+        got = sorted((r.qid, r.rank, r.id, r.dist) for r in batch.collect())
+        assert [(i, d) for qi, _, i, d in got if qi == 0] == brute(q)
+        assert [(i, d) for qi, _, i, d in got if qi == 1] == brute(q2)
+        assert idx.prewarm() == spark.read.parquet(idx.graph_path).count()
 
 
 def test_graph_empty_build_then_insert(spark, vec_df):

@@ -36,11 +36,15 @@ def test_probe_scan_is_partition_pruned(spark, small_index):
     """Probe pruning reaches the parquet scan: the cluster_id IN filter is
     pushed down, so file/row-group min-max stats skip unprobed clusters
     (the codes layout is cluster-range-bucketed + sorted, giving each file
-    a tight cluster_id range)."""
+    a tight cluster_id range). The probe set is one parsed IN list, and
+    it still reaches Parquet as an In filter."""
     q = [0.0] * 8
-    res = small_index.search(q, k=5, probes=[4], guarantee=False)
-    pushed = P.pushed_filters(res)
-    assert any("cluster_id" in p for p in pushed), pushed
+    for res in (
+        small_index.search(q, k=5, probes=[4], guarantee=False),
+        small_index.search_batch([q, [0.5] * 8], k=5, probes=[4]),
+    ):
+        pushed = P.pushed_filters(res)
+        assert any("In(cluster_id" in p for p in pushed), pushed
 
 
 def test_rerank_join_is_broadcast(spark, small_index, small_source):

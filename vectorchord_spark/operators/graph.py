@@ -144,8 +144,9 @@ _TRAVERSE_COLS_2BIT = [
     "ext_dis_u_2", "ext_nol", "code",
 ]
 
-def _make_shard_reader(graph_path: str, columns: list, body):
-    """mapInPandas runner over a seed frame of probed shard ids: each
+def _make_shard_reader(graph_path: str, shards: list, columns: list, body):
+    """mapInPandas runner over a ``spark.range(len(shards))`` seed, one
+    row per partition: seed row ``i`` stands for ``shards[i]``, so each
     task reads its own shard's hive directory with pyarrow (columns
     pruned to the serve set) and hands the WHOLE shard to ``body``, so
     positional ``row_no`` indexing holds without a hash exchange. Local
@@ -156,8 +157,8 @@ def _make_shard_reader(graph_path: str, columns: list, body):
         import pyarrow.parquet as pq
 
         for b in batches:
-            for s in b["shard"]:
-                shard = int(s)
+            for i in b["id"]:
+                shard = shards[int(i)]
                 grp = pq.read_table(
                     os.path.join(graph_path, f"shard={shard}"), columns=columns
                 ).to_pandas()
@@ -1473,9 +1474,10 @@ class VamanaIndex(QuerySampling):
         """Per-shard candidate generation with NO serve-time exchange.
 
         The graph table is hive-partitioned by shard, so each probed
-        shard is its own directory. A seed frame of the probed shard ids
-        (one id per partition) is mapped through a task that reads ITS
-        shard's directory with pyarrow and runs the beam search in place
+        shard is its own directory. A ``spark.range`` seed with one row
+        per partition, row ``i`` standing for the ``i``-th live probed
+        shard, is mapped through a task that reads ITS shard's directory
+        with pyarrow and runs the beam search in place
         (guide §8 "co-locate instead of join": the task reads its own
         slice from storage) — one stage, one task per probed shard, and
         only the ≤ef candidate ids ever move. A groupBy("shard")
@@ -1487,7 +1489,10 @@ class VamanaIndex(QuerySampling):
 
         The task-side read also guarantees the whole-shard invariant
         (positional row_no indexing needs the full shard in one frame),
-        with no file-split hazard.
+        with no file-split hazard. The seed is a JVM ``Range``, not a
+        parallelized Python list: a pickled-row scan would add a Python
+        task that never imports this package (so never gets the worker
+        set-up hook in ``vectorchord_spark/__init__.py``) to every query.
 
         ``body(grp, shard) -> pdf`` is the per-shard search."""
         bits = self.meta.get("bits", 1)
@@ -1499,12 +1504,9 @@ class VamanaIndex(QuerySampling):
         ]
         if not live:
             return self.spark.createDataFrame([], out_schema)
-        sc = self.spark.sparkContext
-        seed = self.spark.createDataFrame(
-            sc.parallelize([(s,) for s in live], len(live)), "shard int"
-        )
+        seed = self.spark.range(len(live), numPartitions=len(live))
         return seed.mapInPandas(
-            _make_shard_reader(self.graph_path, cols, body), out_schema
+            _make_shard_reader(self.graph_path, live, cols, body), out_schema
         )
 
     def _candidates(

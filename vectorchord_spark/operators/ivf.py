@@ -1087,7 +1087,11 @@ class IvfIndex(QuerySampling):
     def _codes_df(self, probed: np.ndarray, columns: list[str]) -> DataFrame:
         df = self._codes_base()
         if len(probed) < self.meta["n_leaves"]:
-            df = df.where(F.col("cluster_id").isin([int(c) for c in probed]))
+            # one parsed IN list: Column.isin makes a py4j lit() round
+            # trip per probed cell (~5x slower at 48 probes); both push
+            # down to Parquet as In(cluster_id, ...)
+            cells = ", ".join(str(int(c)) for c in probed)
+            df = df.where(F.expr(f"cluster_id IN ({cells})"))
         return df.select(*columns)
 
     def search(
