@@ -804,6 +804,61 @@ def test_search_batch_rerank_in_table(spark, clustered_df):
             assert by_q[qi] == brute_topk(clustered_df, q, 10)
 
 
+def test_rerank_in_table_bad_rows(spark, clustered_df):
+    """base_df rows that cannot be reranked never reach the answer, with
+    exhaustive probes: a NULL vector is skipped (as at build), ids missing
+    from base_df are not candidates — so search (guarantee on, and
+    rerank_factor=None) and search_batch return k rows equal to brute
+    force over the valid base rows, and search(guarantee=False) k rows
+    with distances — and a vector whose length is not the index
+    dimension fails the query with an error naming base_df."""
+    rng = np.random.default_rng(43)
+    qs = [[float(x) for x in rng.uniform(-1, 1, 8)] for _ in range(2)]
+    kept = clustered_df.where(F.col("id") % 3 != 0).select("id", "vec")
+    nearest = [brute_topk(kept, q, 1)[0] for q in qs]
+    base = kept.select(
+        "id",
+        F.when(F.col("id").isin(nearest), F.lit(None))
+        .otherwise(F.col("vec"))
+        .alias("vec"),
+    )
+    valid = base.where(F.col("vec").isNotNull())
+    want = [brute_topk(valid, q, 5) for q in qs]
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = IvfIndex.build(
+            spark, clustered_df, "id", "vec", os.path.join(tmp, "idx"),
+            IvfOptions(metric="l2", lists=[33], rerank_in_index=False),
+        )
+        for qi, q in enumerate(qs):
+            for opt in ({}, {"rerank_factor": None}):
+                got = idx.search(q, k=5, probes=None, base_df=base, **opt).collect()
+                assert [r.id for r in got] == want[qi], opt
+                assert all(r.dist is not None for r in got), got
+            got = idx.search(q, k=5, probes=None, guarantee=False, base_df=base)
+            got = got.collect()
+            assert len(got) == 5 and all(r.dist is not None for r in got), got
+            assert not {r.id for r in got} & set(nearest), got
+        res = idx.search_batch(qs, k=5, probes=None, base_df=base).collect()
+        by_q = {}
+        for r in sorted(res, key=lambda r: (r.qid, r.rank)):
+            assert r.dist is not None, r
+            by_q.setdefault(r.qid, []).append(r.id)
+        assert [by_q.get(qi) for qi in range(len(qs))] == want
+
+        short = base.select(
+            "id",
+            F.when(F.col("id") == 1, F.slice("vec", 1, 5))
+            .otherwise(F.col("vec"))
+            .alias("vec"),
+        )
+        for call in (
+            lambda: idx.search(qs[0], k=5, probes=None, base_df=short),
+            lambda: idx.search_batch(qs, k=5, probes=None, base_df=short),
+        ):
+            with pytest.raises(Exception, match="base_df vector of length 5"):
+                call().collect()
+
+
 def test_search_batch_prefilter(spark, clustered_df):
     """search_batch(prefilter=...) restricts every query's candidates to
     the allowed ids before rerank (Q9 batch parity): exhaustive config

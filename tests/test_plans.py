@@ -4,6 +4,7 @@ per query, broadcast rerank-in-table joins, predicate pushdown on relational
 queries."""
 
 import os
+import re
 import tempfile
 
 import numpy as np
@@ -47,10 +48,16 @@ def test_probe_scan_is_partition_pruned(spark, small_index):
         assert any("In(cluster_id" in p for p in pushed), pushed
 
 
+def _nodes(plan: str, name: str) -> int:
+    """Physical operators whose name starts with ``name`` in a formatted
+    plan (each operator has one ``(n) Name`` detail header)."""
+    return len(re.findall(rf"^\(\d+\) {name}", plan, re.M))
+
+
 def test_rerank_join_is_broadcast(spark, small_index, small_source):
-    """Rerank-in-table keeps the candidate join: the candidate ids are
-    broadcast to the base table (guarantee on and off), so the base table
-    never shuffles."""
+    """Rerank-in-table joins the base table into the codes scan: the
+    probed codes are broadcast to the base table (guarantee on and off),
+    so the base table never shuffles."""
     q = [0.0] * 8
     base = small_source.select("id", "vec")
     for guarantee in (True, False):
@@ -80,31 +87,49 @@ def test_scoring_scan_prunes_vec_column(spark, small_index, small_source):
         assert scoring and all("vec" not in s for s in scoring), schemas
 
 
-@pytest.mark.parametrize("storage", ["f32", "f16", "rabitq8"])
+@pytest.mark.parametrize("storage", ["f32", "f16", "rabitq8", "base_df"])
 def test_search_scans_codes_once(spark, small_source, storage):
     """One-stage query: search (guarantee on and off) and search_batch
     read the codes table exactly once — codes and rerank payload in the
-    same scan — with no threshold cross join (BroadcastNestedLoopJoin) and
-    no persisted scored scan (InMemoryTableScan)."""
+    same scan — and run one kernel (MapInArrow), with no threshold cross
+    join (BroadcastNestedLoopJoin), no persisted scored scan
+    (InMemoryTableScan) and no Union; search has no Window. Rerank-in-
+    table (``base_df``, an uncached Parquet table so its scan shows)
+    reads the base table once too, joined into that one scan."""
     tmp = tempfile.mkdtemp(prefix="vc_plan_once_")
+    opts = {"rerank_in_index": False} if storage == "base_df" else {"storage": storage}
     idx = IvfIndex.build(
         spark, small_source, "id", "vec", os.path.join(tmp, "idx"),
-        IvfOptions(metric="l2", lists=[16], storage=storage),
+        IvfOptions(metric="l2", lists=[16], **opts),
     )
     payload = {"f32": "vec:binary", "f16": "vec_f16:binary"}.get(
         storage, "sq_code:binary"
     )
+    kw = {}
+    if storage == "base_df":
+        small_source.write.parquet(os.path.join(tmp, "base"))
+        kw["base_df"] = spark.read.parquet(os.path.join(tmp, "base"))
     q = [0.0] * 8
-    for res in (
-        idx.search(q, k=5, probes=[4]),
-        idx.search(q, k=5, probes=[4], guarantee=False),
-        idx.search_batch([q, [0.5] * 8], k=5, probes=[4]),
+    for name, res in (
+        ("search", idx.search(q, k=5, probes=[4], **kw)),
+        ("search", idx.search(q, k=5, probes=[4], guarantee=False, **kw)),
+        ("search_batch", idx.search_batch([q, [0.5] * 8], k=5, probes=[4], **kw)),
     ):
-        codes = [s for s in P.read_schemas(res) if "code:binary" in s]
-        assert len(codes) == 1 and payload in codes[0], codes
+        schemas = P.read_schemas(res)
+        codes = [s for s in schemas if "code:binary" in s]
+        assert len(codes) == 1, schemas
+        if storage == "base_df":
+            assert "vec" not in codes[0], codes
+            assert len([s for s in schemas if "vec:array" in s]) == 1, schemas
+        else:
+            assert payload in codes[0], codes
         plan = P.explain_str(res)
         assert "BroadcastNestedLoopJoin" not in plan, plan
         assert "InMemoryTableScan" not in plan, plan
+        assert _nodes(plan, "MapInArrow") == 1, plan
+        assert _nodes(plan, "Union") == 0, plan
+        if name == "search":
+            assert _nodes(plan, "Window") == 0, plan
 
 
 def test_batch_prefilter_and_rerank_table_plan_shape(
@@ -112,9 +137,9 @@ def test_batch_prefilter_and_rerank_table_plan_shape(
 ):
     """The round-5 batch paths keep the serving plan shape: the prefilter
     id set joins the scored scan as a BROADCAST semi-join (no sort-merge
-    shuffle of candidates), and the base_df rerank-in-table join is a
-    broadcast of the candidate ids — at 100 TB the base table must never
-    shuffle to meet k·rerank_factor candidate rows."""
+    shuffle of candidates), and the base_df rerank-in-table join
+    broadcasts the probed codes to the base table — at 100 TB the base
+    table must never shuffle to meet the probed rows."""
     from pyspark.sql import functions as F
 
     qs = [[0.0] * 8, [0.5] * 8]

@@ -51,11 +51,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectorchord_spark import kernels as K
-from vectorchord_spark.functions import distances as D
 from vectorchord_spark.operators import kmeans as KM
 from vectorchord_spark.operators.sampling import (
     QuerySampling,
     bounded_sample_vectors,
+    source_vectors,
 )
 
 # LPT task layout (longest shard first): the mechanism lives in
@@ -800,18 +800,6 @@ def _make_dist_fn(metric: str, bits: int, grp: pd.DataFrame, dim: int, q_rot: np
     return fn2
 
 
-def _source_vectors(df: DataFrame, id_col: str, vec_col: str, metric: str) -> DataFrame:
-    """(id long, vec) rows to index: NULL vectors are skipped (reference
-    null.fail / issue_427 contract) and cos vectors are stored
-    normalized."""
-    src = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-    )
-    if metric == "cos":
-        src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
-    return src
-
-
 #: output of :func:`_make_assign_fn`, before the subshard split
 _ASSIGNED_SCHEMA = "id long, vec binary, shard int, is_primary boolean"
 
@@ -1022,7 +1010,7 @@ class VamanaIndex(QuerySampling):
         opts.validate()
         os.makedirs(path, exist_ok=True)
 
-        src = _source_vectors(df, id_col, vec_col, opts.metric)
+        src = source_vectors(df, id_col, vec_col, opts.metric)
         n_shards = opts.n_shards
         if n_shards is None:
             total = src.count()
@@ -1235,7 +1223,7 @@ class VamanaIndex(QuerySampling):
         meta = self.meta
         opts = _options_from_meta(meta)
         dim = int(meta["dim"])
-        src = _source_vectors(df, id_col, vec_col, opts.metric)
+        src = source_vectors(df, id_col, vec_col, opts.metric)
         bc_cents = self.spark.sparkContext.broadcast(
             np.asarray(self.centroids, np.float32)
         )

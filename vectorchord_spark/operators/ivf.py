@@ -10,7 +10,8 @@ Spark-first re-expression of the reference's index lifecycle:
   (am_build.rs:611-789).
 - search = driver tree descent over the (small, broadcast) centroid tree →
   ONE partition-pruned scan of the probed clusters' codes and rerank
-  payload → per Arrow batch, rough scoring with ε lower bounds
+  payload (in the index, or a caller's base table joined to the scan by
+  id: rerank-in-table) → per Arrow batch, rough scoring with ε lower bounds
   (search.rs:95-196) and the lazy rerank applied to the batch's rows
   (rerank.rs:53-137: rerank by lower bound until no bound can beat the
   k-th exact distance) → ``ORDER BY dist LIMIT k`` over the batches'
@@ -44,11 +45,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vectorchord_spark import kernels as K
-from vectorchord_spark.functions import distances as D
 from vectorchord_spark.operators import kmeans as KM
 from vectorchord_spark.operators.sampling import (
     QuerySampling,
     bounded_sample_vectors,
+    source_vectors,
 )
 
 #: ``vec`` is the f32 rerank payload PACKED AS BINARY (little-endian f32,
@@ -171,23 +172,6 @@ def _top_per_query(df: DataFrame, n: int, *order: str, rank: str = "rank") -> Da
     ``rank``."""
     w = Window.partitionBy("qid").orderBy(*order)
     return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= int(n))
-
-
-def _guarantee_threshold(top: DataFrame, metric: str, k: int) -> DataFrame:
-    """The guarantee sweep's lb threshold per qid for the rerank-in-table
-    plan: the k-th pass-1 exact distance ``d_k`` mapped from the output
-    space to the internal lb space, or +inf when pass 1 produced fewer
-    than k rows (``_local_select``'s rule as a DataFrame)."""
-    return (
-        top.groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("n_top"), F.max("dist").alias("d_k"))
-        .select(
-            "qid",
-            F.when(F.col("n_top") < int(k), F.lit(float("inf")))
-            .otherwise(_internal_dist(F.col("d_k"), metric).cast("double"))
-            .alias("_thresh"),
-        )
-    )
 
 
 #: hard per-cell sample bound for the distributed leaf k-means stage —
@@ -437,17 +421,7 @@ class IvfIndex(QuerySampling):
         opts.validate()
         os.makedirs(path, exist_ok=True)
 
-        # NULL vectors are skipped, matching the reference index behavior
-        # (tests/fail/null.fail, tests/general/issue_427.slt: NULL rows are
-        # absent from index results; NaN/Inf rows index fine and sort after
-        # every finite distance)
-        src = df.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-        )
-        if opts.metric == "cos":
-            # cosine opclasses L2-normalize at store time and work in dot
-            # space (/root/reference/src/index/vchordrq/opclass.rs:49-68)
-            src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
+        src = source_vectors(df, id_col, vec_col, opts.metric)
 
         n_leaves = opts.lists[-1]
         use_distkm = (
@@ -691,11 +665,7 @@ class IvfIndex(QuerySampling):
         with open(os.path.join(path, "meta.json"), "w") as f:
             json.dump(meta, f)
         index = cls(spark, path)
-        src = df.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-        )
-        if opts.metric == "cos":
-            src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
+        src = source_vectors(df, id_col, vec_col, opts.metric)
         index._encode_and_write(src, mode="overwrite")
         return index
 
@@ -1137,7 +1107,11 @@ class IvfIndex(QuerySampling):
         ``prefilter``: optional DataFrame of allowed ``id`` values applied
         BEFORE rerank (the reference's prefilter semantics, Q9).
         ``base_df``: rerank against this (id, vec) table instead of the
-        index-stored vectors (``rerank_in_table`` mode, Q5).
+        index-stored vectors (``rerank_in_table`` mode, Q5). Its vectors
+        join the one codes scan by id, with the probed codes broadcast:
+        NULL vectors are skipped (as at build), a vector whose length is
+        not the index dimension fails the query with a ``ValueError``,
+        and an index row whose id has no base vector is not a candidate.
         """
         Qe, Q_rot = K.prep_queries(
             np.asarray(query, np.float64)[None], self.meta["metric"], self.meta["dim"]
@@ -1189,10 +1163,12 @@ class IvfIndex(QuerySampling):
 
         ``base_df``: rerank against this (id, vec) table instead of the
         index-stored payload (``rerank_in_table``, Q5 — the batch analogue
-        of ``search(base_df=...)``; the reference's rerank heap works for
-        every storage, crates/vchordrq/src/rerank.rs:113-137). Required
-        when the index was built with ``rerank_in_index=False`` and
-        f32/f16 storage; quantized storage reranks on its own codes.
+        of ``search(base_df=...)``, with the same join into the one scan
+        and the same NULL, wrong-length and missing-id rules; the
+        reference's rerank heap works for every storage,
+        crates/vchordrq/src/rerank.rs:113-137). Required when the index
+        was built with ``rerank_in_index=False`` and f32/f16 storage;
+        quantized storage reranks on its own codes.
 
         ``prefilter``: optional DataFrame of allowed ``id`` values applied
         BEFORE rerank for every query in the batch (the reference's
@@ -1234,8 +1210,8 @@ class IvfIndex(QuerySampling):
         """The maxsim candidate pool: each query's top-k rows by
         (rough, id) as (qid, id, rough, dist, rank). ``dist`` is the exact
         distance of the rows with rank ≤ ``refine`` (the refine head,
-        reranked inside the scan, or through ``base_df``) and null for the
-        rest."""
+        reranked inside the scan on the index payload or on ``base_df``'s
+        vectors) and null for the rest."""
         Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
         rows = self._selected_rows(
             Qe, Q_rot, probes, epsilon, prefilter, base_df, k=k, refine=refine
@@ -1258,18 +1234,14 @@ class IvfIndex(QuerySampling):
         **select,
     ) -> DataFrame | None:
         """(qid, id, lb, rough, dist): the descent's probed rows that
-        ``_local_select`` keeps under ``select``, from the scan kernel —
-        or, for a ``base_df`` that must rerank, from the rerank-in-table
-        plan. None when the descent probes no cell."""
+        ``_local_select`` keeps under ``select``, from the scan kernel.
+        None when the descent probes no cell."""
         probed, probe_mask = self._probe(Q_rot, probes, lazy=lazy, epsilon=epsilon)
         if not len(probed):
             return None
-        if base_df is None or select.get("refine") == 0:
-            return self._scan(
-                probed, probe_mask, Qe, Q_rot, epsilon, prefilter, select
-            )
-        scored = self._scan(probed, probe_mask, Qe, Q_rot, epsilon, prefilter, None)
-        return self._rerank_in_table(scored, Qe, base_df, **select)
+        return self._scan(
+            probed, probe_mask, Qe, Q_rot, epsilon, prefilter, base_df, select
+        )
 
     def _scan(
         self,
@@ -1279,11 +1251,16 @@ class IvfIndex(QuerySampling):
         Q_rot: np.ndarray,
         epsilon: float,
         prefilter: DataFrame | None,
-        select: dict | None,
+        base_df: DataFrame | None,
+        select: dict,
     ) -> DataFrame:
         """The one codes scan of every IVF query (``search`` as qid 0,
         ``search_batch``, the maxsim pool): ONE read of the probed cells'
-        codes and, when ``select`` reranks, the storage's rerank payload.
+        codes and, when ``select`` reranks, the rerank payload — the
+        storage's, or a ``base_df``'s vectors (rerank-in-table), which
+        join the probed codes by id before the kernel. The probed codes
+        are the broadcast side, so the base table never shuffles, and a
+        probed row without a base vector is not a candidate.
 
         Per Arrow batch, each row is scored only for the queries whose
         descent probed its cell (``probe_mask``, (n_leaves, nq)), every
@@ -1291,9 +1268,7 @@ class IvfIndex(QuerySampling):
         and ``lb = rough − ε·err`` in the index's internal distance space
         (squared-l2 / negated-dot). ``_local_select(**select)`` then keeps
         each query's rows of the batch that the merge can need, exact-
-        scored by ``_payload_scorer``; ``select=None`` keeps every row
-        with a null ``dist`` (the rerank-in-table input).
-        Returns (qid, id, lb, rough, dist).
+        scored by ``_payload_scorer``. Returns (qid, id, lb, rough, dist).
 
         mapInArrow, not mapInPandas: pandas treats NaN as the null
         sentinel, which would turn a NaN distance (non-finite stored
@@ -1329,8 +1304,10 @@ class IvfIndex(QuerySampling):
         factors = ("dis_u_2", "factor_cnt", "factor_ip", "factor_err")
         columns = ["id", "cluster_id", *factors, "delta", "code"]
         decode = score = None
-        if select is not None and select.get("refine") != 0:
-            payload_cols, decode, score = self._payload_scorer(Qe, Q_rot)
+        if select.get("refine") != 0:
+            payload_cols, decode, score = self._payload_scorer(
+                Qe, Q_rot, base_df is not None
+            )
             columns += payload_cols
 
         def kernel(batches):
@@ -1364,16 +1341,13 @@ class IvfIndex(QuerySampling):
                     )
                     lb = (rough - eps * err).astype(np.float64)
                     rough = rough.astype(np.float64)
-                    if select is None:
-                        pick, dist = np.arange(len(rows)), np.empty(0)
-                    else:
 
-                        def exact(r, rows=rows, qi=qi):
-                            return score(payload, rows[r], np.full(len(r), qi))
+                    def exact(r, rows=rows, qi=qi):
+                        return score(payload, rows[r], np.full(len(r), qi))
 
-                        pick, dist = _local_select(
-                            ids[rows], lb, rough, exact, metric, **select
-                        )
+                    pick, dist = _local_select(
+                        ids[rows], lb, rough, exact, metric, **select
+                    )
                     n = len(pick)
                     out.append((
                         np.full(n, qi, np.int32),
@@ -1400,19 +1374,27 @@ class IvfIndex(QuerySampling):
         df = self._codes_df(probed, columns)
         if prefilter is not None:
             df = df.join(prefilter.select("id"), "id", "left_semi")
+        if base_df is not None and decode:
+            base = source_vectors(base_df, "id", "vec", metric)
+            df = base.select("id", F.col("vec").alias("_base_vec")).join(
+                F.broadcast(df), "id"
+            )
         return df.mapInArrow(
             kernel, "qid int, id long, lb double, rough double, dist double"
         )
 
-    def _payload_scorer(self, Qe: np.ndarray, Q_rot: np.ndarray):
-        """The in-index rerank scorer for the index's storage — the analogue
-        of the reference's storage-agnostic rerank
+    def _payload_scorer(self, Qe: np.ndarray, Q_rot: np.ndarray, base: bool):
+        """The rerank scorer for the index's storage, or for a ``base_df``
+        joined into the scan (``base``, whatever the storage) — the
+        analogue of the reference's storage-agnostic rerank, which fetches
+        each vector from wherever it lives
         (crates/vchordrq/src/rerank.rs:113-137). Returns
         ``(columns, decode, score)``: the codes columns holding the
-        payload, ``decode(rb)`` → the Arrow batch's payload, and
-        ``score(payload, rows, qids)`` → output-space distances of batch
-        rows ``rows`` to queries ``qids``: exact for f32 and f16, against
-        the dequantized estimate for rabitq8/rabitq4.
+        payload (none for ``base``), ``decode(rb)`` → the Arrow batch's
+        payload, and ``score(payload, rows, qids)`` → output-space
+        distances of batch rows ``rows`` to queries ``qids``: exact for
+        f32, f16 and ``base``, against the dequantized estimate for
+        rabitq8/rabitq4.
 
         ``Qe`` and ``Q_rot`` are the shared prep's output
         (``K.prep_queries``: the (nq, dim) f64 queries normalized for cos,
@@ -1421,6 +1403,40 @@ class IvfIndex(QuerySampling):
         metric = meta["metric"]
         dim = meta["dim"]
         storage = meta.get("storage", "f32")
+
+        # replicate the JVM aggregate(zip_with) left fold exactly —
+        # per-dimension f64 accumulation in index order (same IEEE ops,
+        # same order, same dtypes as D.l2/D.ip in functions/distances.py),
+        # so oracle-gated distances are unchanged by the storage layout
+        def fold(vecs, rows, qids):
+            mat = vecs[rows].astype(np.float64, copy=False)
+            qs = Qe[qids]
+            acc = np.zeros(len(rows), np.float64)
+            if metric == "l2":
+                for j in range(dim):
+                    t = mat[:, j] - qs[:, j]
+                    acc += t * t
+                return np.sqrt(acc)
+            for j in range(dim):
+                acc += mat[:, j] * qs[:, j]
+            return -acc if metric == "dot" else 1.0 + (-acc)
+
+        if base:
+            # the base table's vectors (``source_vectors``: NULLs skipped,
+            # cos normalized), widened to f64 as the JVM fold widens them
+            import pyarrow.compute as pc
+
+            def base_decode(rb):
+                col = rb.column(rb.schema.get_field_index("_base_vec"))
+                lens = np.asarray(pc.list_value_length(col))
+                if (lens != dim).any():
+                    raise ValueError(
+                        f"base_df vector of length {int(lens[lens != dim][0])} "
+                        f"in an index of dimension {dim}"
+                    )
+                return np.asarray(col.flatten(), np.float64).reshape(-1, dim)
+
+            return [], base_decode, fold
 
         if storage in ("rabitq8", "rabitq4"):
             # rotation-invariant distances in rotated space: one decode per
@@ -1458,24 +1474,7 @@ class IvfIndex(QuerySampling):
             return _binary_u8_matrix(rb, col).view(fp)
 
         if storage == "f32":
-            # replicate the JVM aggregate(zip_with) left fold exactly —
-            # per-dimension f64 accumulation in index order (same IEEE ops,
-            # same order, same dtypes as D.l2/D.ip), so oracle-gated
-            # distances are unchanged by the storage layout
-            def f32_fold(vecs, rows, qids):
-                mat = vecs[rows].astype(np.float64)
-                qs = Qe[qids]
-                acc = np.zeros(len(rows), np.float64)
-                if metric == "l2":
-                    for j in range(dim):
-                        t = mat[:, j] - qs[:, j]
-                        acc += t * t
-                    return np.sqrt(acc)
-                for j in range(dim):
-                    acc += mat[:, j] * qs[:, j]
-                return -acc if metric == "dot" else 1.0 + (-acc)
-
-            return [col], decode, f32_fold
+            return [col], decode, fold
 
         def f16_score(vecs, rows, qids):
             mat = vecs[rows].astype(np.float64)
@@ -1487,66 +1486,6 @@ class IvfIndex(QuerySampling):
             return 1.0 - np.einsum("ij,ij->i", mat, qs)
 
         return [col], decode, f16_score
-
-    def _rerank_in_table(
-        self,
-        scored: DataFrame,
-        Qe: np.ndarray,
-        base_df: DataFrame,
-        k: int,
-        m: int | None = None,
-        guarantee: bool = False,
-        refine: int | None = None,
-    ) -> DataFrame:
-        """``_local_select``'s rules for a ``base_df`` (rerank-in-table, Q5)
-        payload, whose vectors are not in the codes scan: applied once over
-        every scored row with per-qid windows, exact distances from joins
-        that broadcast the candidates so the base table never shuffles.
-        The guarantee sweep and the refine tail read ``scored`` again,
-        which recomputes the scan. Returns (qid, id, lb, rough, dist)."""
-        metric = self.meta["metric"]
-        base_src = base_df.select("id", "vec")
-        if metric == "cos":
-            base_src = base_df.select(
-                "id", D.normalize("vec").cast("array<float>").alias("vec")
-            )
-        bq_arr = F.array(*[D.vec_lit([float(x) for x in q]) for q in Qe])
-        bqv = F.element_at(bq_arr, F.col("qid") + 1)
-        if metric == "l2":
-            b_dist = D.l2("vec", bqv)
-        elif metric == "dot":
-            b_dist = D.ip("vec", bqv)
-        else:
-            b_dist = F.lit(1.0) + D.ip("vec", bqv)
-        cols = ["qid", "id", "lb", "rough"]
-
-        def exact(cand: DataFrame) -> DataFrame:
-            return base_src.join(F.broadcast(cand.select(*cols)), "id").select(
-                *cols, b_dist.alias("dist")
-            )
-
-        if refine is not None:
-            pool = _top_per_query(scored, k, "rough", "id", rank="_rn")
-            head = exact(pool.where(F.col("_rn") <= int(refine)))
-            return head.unionByName(
-                pool.where(F.col("_rn") > int(refine)).drop("_rn")
-            )
-        if m is None:
-            return exact(scored)
-        pass1 = _top_per_query(scored, m, "lb", "id", rank="_rn").select(*cols)
-        if not guarantee:
-            return exact(pass1)
-        thresh = _guarantee_threshold(
-            _top_per_query(exact(pass1), k, "dist", "id"), metric, k
-        )
-        # left join: a query with NO pass-1 rows has no threshold row —
-        # treat as +inf (rerank everything it scored)
-        sweep = scored.join(F.broadcast(thresh), "qid", "left").where(
-            F.col("lb") <= F.coalesce(F.col("_thresh"), F.lit(float("inf")))
-        )
-        return exact(
-            sweep.select(*cols).unionByName(pass1).dropDuplicates(["qid", "id"])
-        )
 
     def range_search(
         self,
@@ -1579,11 +1518,7 @@ class IvfIndex(QuerySampling):
     def insert(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> None:
         """Append new rows (encode with the existing centroid tree — the
         batch analogue of the appendable-tape insert path)."""
-        src = df.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-        )
-        if self.meta["metric"] == "cos":
-            src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
+        src = source_vectors(df, id_col, vec_col, self.meta["metric"])
         self._encode_and_write(src, mode="append")
         self._cluster_sizes = None
         self._codes_base_cache = None
@@ -1608,13 +1543,10 @@ class IvfIndex(QuerySampling):
         is reclaimed. Searches cache nothing, so there is no query state
         to release."""
         old_version = self.meta["codes_version"]
-        # capture the OLD path before bumping the version (read.parquet
-        # resolves the path eagerly, so the lazy plan keeps reading v_old
-        # while _write_codes targets v_new)
-        df = self.spark.read.parquet(self.codes_path)
-        if os.path.exists(self._tombstones_path):
-            tomb = self.spark.read.parquet(self._tombstones_path)
-            df = df.join(F.broadcast(tomb), "id", "left_anti")
+        # read the OLD version before bumping it (read.parquet resolves
+        # the path eagerly, so the lazy plan keeps reading v_old while
+        # _write_codes targets v_new)
+        df = self._codes_base()
         self.meta["codes_version"] = old_version + 1
         self._write_codes(df, "overwrite")
         with open(os.path.join(self.path, "meta.json"), "w") as f:
@@ -1639,11 +1571,7 @@ class IvfIndex(QuerySampling):
         rows are excluded — after delete() the estimation counts stay
         accurate without waiting for compact()."""
         if getattr(self, "_cluster_sizes", None) is None:
-            df = self.spark.read.parquet(self.codes_path)
-            if os.path.exists(self._tombstones_path):
-                tomb = self.spark.read.parquet(self._tombstones_path)
-                df = df.join(F.broadcast(tomb), "id", "left_anti")
-            rows = df.groupBy("cluster_id").count().collect()
+            rows = self._codes_base().groupBy("cluster_id").count().collect()
             self._cluster_sizes = {int(r.cluster_id): int(r["count"]) for r in rows}
         return self._cluster_sizes
 

@@ -67,12 +67,14 @@ def maxsim_search(
     ``maxsim_refine`` candidates per token are exact-reranked — the
     quality/IO knob for wide candidate pools. The head is reranked inside
     the one codes scan that builds the pool (``IvfIndex._rough_pool``), so
-    refine adds no join and no second scan for in-index payloads. The
+    refine adds no second scan, whether the payload is in the index or in
+    ``base_df``. The
     default 0 exact-reranks every candidate (a strict quality superset of
     the reference's default refine=0, which keeps all-rough).
 
     ``base_df``: rerank against this (id, vec) table instead of the
-    index-stored payload (rerank-in-table, Q5) — required for refine on
+    index-stored payload (rerank-in-table, Q5; its vectors join the one
+    codes scan, as in ``IvfIndex.search``) — required for refine on
     f32/f16 indexes built with ``rerank_in_index=False``, matching
     single-query and batch KNN (the reference's rerank heap fetches from
     the heap for every storage, crates/vchordrq/src/rerank.rs:113-137).
@@ -112,7 +114,8 @@ def maxsim_search(
         # reference refine semantics: a rough-scored candidate pool whose
         # best `maxsim_refine` rows per token carry exact distances — the
         # scan kernel reranks them on the index's payload (every storage
-        # the single-query path reranks), or a join against base_df does
+        # the single-query path reranks) or on base_df's vectors, joined
+        # into the same scan
         pool = index._rough_pool(
             tokens_f, per_token_candidates, probes, epsilon, maxsim_refine, base_df
         )

@@ -1,4 +1,5 @@
-"""Bounded distributed sampling shared by the index builds.
+"""Source-vector prep and bounded distributed sampling shared by the
+index builds.
 
 Single-pass per-partition bounded sample, no preliminary full-table sort:
 each partition keeps its cap/n_parts smallest rows by a seeded random key,
@@ -28,6 +29,24 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from vectorchord_spark.functions import distances as D
+
+
+def source_vectors(df: DataFrame, id_col: str, vec_col: str, metric: str) -> DataFrame:
+    """(id long, vec) rows of a vector table, as every index build and
+    insert reads them and as rerank-in-table reads ``base_df``: NULL
+    vectors are skipped (reference null.fail / issue_427 contract: NULL
+    rows are absent from index results; NaN/Inf rows index fine and sort
+    after every finite distance) and cos vectors are L2-normalized to
+    f32, as cosine opclasses store them
+    (/root/reference/src/index/vchordrq/opclass.rs:49-68)."""
+    src = df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
+    )
+    if metric == "cos":
+        src = src.select("id", D.normalize("vec").cast("array<float>").alias("vec"))
+    return src
 
 
 def bounded_sample_vectors(df: DataFrame, cap: int, seed: int) -> pd.DataFrame:
