@@ -412,6 +412,31 @@ def test_graph_empty_build_then_insert(spark, vec_df):
         assert [r.id for r in idx.search(q, k=10).collect()] == exact
 
 
+def test_graph_missing_shard_raises(spark, vec_df):
+    """A shard that meta ``shard_rows`` lists but whose directory is gone
+    fails search, search_batch and prewarm instead of being skipped (a
+    skipped shard answers from the other shards without saying so).
+    Shards with no rows are not listed and stay skipped: see
+    test_graph_empty_build_then_insert."""
+    import shutil
+
+    rng = np.random.default_rng(41)
+    q = [float(x) for x in rng.uniform(-1, 1, 16)]
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, vec_df.where("id < 600"), "id", "vec", os.path.join(tmp, "g"),
+            VamanaOptions(metric="l2", m=16, ef_construction=32, n_shards=2),
+        )
+        assert set(idx.meta["shard_rows"]) == {"0", "1"}
+        shutil.rmtree(os.path.join(idx.graph_path, "shard=1"))
+        with pytest.raises(Exception, match="shard=1"):
+            idx.search(q, k=10, probe_shards=None).collect()
+        with pytest.raises(Exception, match="shard=1"):
+            idx.search_batch([q, q], k=10).collect()
+        with pytest.raises(Exception, match="shard=1"):
+            idx.prewarm()
+
+
 def test_graph_dml_write_has_no_second_shuffle(spark, vec_df, monkeypatch):
     """insert and compact write the rebuilt shards straight out of their
     groupBy("shard") stage: the written plan repartitions by no column,
@@ -544,7 +569,7 @@ def test_graph_cluster_subsharding(spark, vec_df, monkeypatch):
 
 
 def test_graph_query_sampling_and_recall(spark, vec_df):
-    """S13/S14 parity for the graph index (shared QuerySampling mixin):
+    """S13/S14 parity for the graph index (shared StoredIndex base):
     served queries are recorded under the Bernoulli/cap contract and
     replay through evaluate_query_recall; exhaustive config reports 1.0."""
     rng = np.random.default_rng(31)

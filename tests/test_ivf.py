@@ -396,6 +396,34 @@ def test_query_sampling(spark, clustered_df):
         assert len(got) == 8
 
 
+def test_meta_write_is_atomic(spark, clustered_df, monkeypatch):
+    """A meta.json write that fails partway (here inside
+    enable_query_sampling) leaves the previous meta in place and no temp
+    file behind, so the index reopens as it was."""
+    import json
+
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "idx")
+        idx = IvfIndex.build(
+            spark, clustered_df.limit(200), "id", "vec", path,
+            IvfOptions(metric="l2", lists=[4]),
+        )
+        before = dict(idx.meta)
+
+        def torn_dump(obj, f, **kwargs):
+            f.write(json.dumps(obj)[:20])
+            raise OSError("no space left on device")
+
+        monkeypatch.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="no space left"):
+            idx.enable_query_sampling(rate=1.0, max_records=5)
+        monkeypatch.undo()
+        assert IvfIndex(spark, path).meta == before
+        assert sorted(f for f in os.listdir(path) if f.startswith("meta")) == [
+            "meta.json"
+        ]
+
+
 def test_guarantee_contract(spark, clustered_df):
     """The precise lazy-rerank contract: a probed search must equal brute
     force restricted to the rows of the probed clusters."""

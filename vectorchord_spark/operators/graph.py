@@ -39,9 +39,7 @@ only dedupes and orders the ≤ probe_shards·ef·rescore_factor candidates.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from dataclasses import asdict, dataclass, field
 from typing import Iterator
 
@@ -52,11 +50,8 @@ from pyspark.sql import functions as F
 
 from vectorchord_spark import kernels as K
 from vectorchord_spark.operators import kmeans as KM
-from vectorchord_spark.operators.sampling import (
-    QuerySampling,
-    bounded_sample_vectors,
-    source_vectors,
-)
+from vectorchord_spark.operators.sampling import bounded_sample_vectors, source_vectors
+from vectorchord_spark.operators.store import StoredIndex, link_shards, write_meta
 
 # LPT task layout (longest shard first): the mechanism lives in
 # operators/scheduling.py; the graph build was its first user and its
@@ -958,6 +953,26 @@ def _bulk_shard_frame(
     return _shard_frame(shard, rows, vecs, adj, medoid, opts.bits)
 
 
+def _read_graph(spark: SparkSession, graph_path: str) -> DataFrame:
+    """A graph version's rows. The schema is pinned to GRAPH_SCHEMA, so
+    a graph with no rows (an empty or all-NULL build) reads as an empty
+    frame instead of failing schema inference."""
+    return spark.read.schema(GRAPH_SCHEMA).parquet(graph_path)
+
+
+def _count_shard_rows(spark: SparkSession, graph_path: str) -> dict[str, int]:
+    """Rows per shard of a graph version (replicas included: they are
+    vertices), recorded as meta ``shard_rows``. Serving probes only the
+    shards listed there and sizes ``ef_search`` from them."""
+    return {
+        str(r["shard"]): int(r["cnt"])
+        for r in _read_graph(spark, graph_path)
+        .groupBy("shard")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    }
+
+
 def _options_from_meta(meta: dict) -> VamanaOptions:
     """The options a graph's shards were built with, read back from its
     meta.json: ``insert`` and ``compact`` build with exactly these."""
@@ -968,25 +983,15 @@ def _options_from_meta(meta: dict) -> VamanaOptions:
     return VamanaOptions(**{k: meta[k] for k in keys})
 
 
-class VamanaIndex(QuerySampling):
+class VamanaIndex(StoredIndex):
     def __init__(self, spark: SparkSession, path: str):
-        from vectorchord_spark.session import ensure_worker_imports
-
-        ensure_worker_imports(spark)
-        self.spark = spark
-        self.path = path
-        with open(os.path.join(path, "meta.json")) as f:
-            self.meta = json.load(f)
+        super().__init__(spark, path)
         self.centroids = np.asarray(self.meta["centroids"], np.float64)
 
     @property
     def graph_path(self) -> str:
         v = self.meta.get("graph_version", 0)
         return os.path.join(self.path, "graph" if v == 0 else f"graph_v{v}")
-
-    @property
-    def _tombstones_path(self) -> str:
-        return os.path.join(self.path, "tombstones")
 
     @classmethod
     def build(
@@ -1134,9 +1139,8 @@ class VamanaIndex(QuerySampling):
         # repartition(shard) pushed the FAT built graph (vecs + neighbors
         # + codes, ~1 GB at 1M rows) through a second full shuffle for an
         # identical one-dir-per-shard layout
-        graph.write.mode("overwrite").partitionBy("shard").parquet(
-            os.path.join(path, "graph")
-        )
+        graph_dir = os.path.join(path, "graph")
+        graph.write.mode("overwrite").partitionBy("shard").parquet(graph_dir)
 
         meta = {
             **asdict(opts),
@@ -1148,31 +1152,25 @@ class VamanaIndex(QuerySampling):
             "cluster_subshards": subs,
             "dim": int(dim),
             "centroids": [[float(x) for x in c] for c in cents],
+            "shard_rows": _count_shard_rows(spark, graph_dir),
         }
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
-        idx = cls(spark, path)
-        idx._record_shard_rows()
-        return idx
+        write_meta(path, meta)
+        return cls(spark, path)
 
     # ------------------------------------------------------------------
-    # DML: insert / delete / compact (the vchordg incremental lifecycle,
+    # DML: insert / compact, and StoredIndex.delete (the vchordg incremental lifecycle,
     # /root/reference/crates/vchordg/src/insert.rs:34-395 + bulkdelete)
     # ------------------------------------------------------------------
 
-    def _write_version(self, updated: DataFrame, affected: list[int]) -> None:
+    def _write_version(
+        self, updated: DataFrame, affected: list[int], vacuum: bool = False
+    ) -> None:
         """Write ``updated`` (the full new content of the affected shards)
-        to the next graph version dir; unaffected shard partitions are
-        hardlinked from the previous version (locally — on a real
-        deployment this is a metastore partition-pointer swap).
-
-        Retention window: only the two newest versions are kept (older
-        dirs are rmtree'd below), so a lazy search DataFrame stays
-        materializable for exactly ONE subsequent DML operation; a
-        DataFrame captured two or more DML operations ago fails at
-        materialization when its files are garbage-collected. Mirrors
-        IvfIndex.compact's snapshot-ish policy."""
-        old_path = self.graph_path
+        as the next graph version, link the unaffected shards in from the
+        current one, and commit it (``StoredIndex._commit``; ``vacuum``
+        drops the tombstones). Its shard row counts go into that one meta
+        write: serving takes live shards from them, so a meta naming the
+        new version with the old counts would hide a just-filled shard."""
         old_v = self.meta.get("graph_version", 0)
         new_v = old_v + 1
         new_path = os.path.join(self.path, f"graph_v{new_v}")
@@ -1180,35 +1178,11 @@ class VamanaIndex(QuerySampling):
         # is whole in one task and the partitionBy write lays out one file
         # per shard directory without a second shuffle
         updated.write.mode("overwrite").partitionBy("shard").parquet(new_path)
-        aff = {int(s) for s in affected}
-        for entry in os.listdir(old_path):
-            if not entry.startswith("shard="):
-                continue
-            if int(entry.split("=", 1)[1]) in aff:
-                continue
-            src_dir = os.path.join(old_path, entry)
-            dst_dir = os.path.join(new_path, entry)
-            os.makedirs(dst_dir, exist_ok=True)
-            for f_name in os.listdir(src_dir):
-                try:
-                    os.link(
-                        os.path.join(src_dir, f_name),
-                        os.path.join(dst_dir, f_name),
-                    )
-                except OSError:
-                    shutil.copy2(
-                        os.path.join(src_dir, f_name),
-                        os.path.join(dst_dir, f_name),
-                    )
+        link_shards(self.graph_path, new_path, {int(s) for s in affected})
+        self.meta["shard_rows"] = _count_shard_rows(self.spark, new_path)
         self.meta["graph_version"] = new_v
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(self.meta, f)
-        # refresh per-shard counts so ef_search auto-scaling tracks DML
-        self._record_shard_rows()
-        # reclaim the version *before* the one we just superseded
-        if old_v >= 1:
-            stale = "graph" if old_v == 1 else f"graph_v{old_v - 1}"
-            shutil.rmtree(os.path.join(self.path, stale), ignore_errors=True)
+        stale = None if old_v == 0 else "graph" if old_v == 1 else f"graph_v{old_v - 1}"
+        self._commit(stale, vacuum)
 
     def insert(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> None:
         """Insert rows, rewriting only the shards they land in. Rows route
@@ -1227,7 +1201,7 @@ class VamanaIndex(QuerySampling):
         bc_cents = self.spark.sparkContext.broadcast(
             np.asarray(self.centroids, np.float32)
         )
-        n_clusters = int(meta.get("n_clusters", meta["n_shards"]))
+        n_clusters = int(meta["n_clusters"])
         repl = min(int(opts.replication), n_clusters)
         assigned = _subshard(
             src.mapInPandas(
@@ -1236,7 +1210,7 @@ class VamanaIndex(QuerySampling):
                 ),
                 _ASSIGNED_SCHEMA,
             ),
-            meta.get("cluster_subshards") or [],
+            meta["cluster_subshards"],
         )
         assigned = assigned.persist()  # pin ONE evaluation: the affected-shard set and the
         # rewrite job must see identical routing, or _write_version would
@@ -1250,7 +1224,7 @@ class VamanaIndex(QuerySampling):
             assigned.unpersist()
             return
         old = (
-            self._graph_df()
+            _read_graph(self.spark, self.graph_path)
             .where(F.col("shard").isin(affected))
             .withColumn("_new", F.lit(False))
         )
@@ -1314,27 +1288,17 @@ class VamanaIndex(QuerySampling):
         self._write_version(updated, affected)
         assigned.unpersist()
 
-    def delete(self, ids: "list[int] | DataFrame") -> None:
-        """Logical delete via tombstones: the vertex stays a traversal
-        waypoint but is excluded from results (the reference's
-        payload-nulled vertices pending vacuum); compact() rebuilds."""
-        if isinstance(ids, DataFrame):
-            tomb = ids.select(F.col(ids.columns[0]).cast("long").alias("id"))
-        else:
-            tomb = self.spark.createDataFrame([(int(i),) for i in ids], "id long")
-        tomb.write.mode("append").parquet(self._tombstones_path)
-        self._tombstones_cache = None
-
     def compact(self) -> None:
         """Vacuum: rebuild every shard containing tombstoned vertices
         without them (a whole-shard build over the survivors in id order —
         adjacency is positional, so removal requires a rebuild; the
         reference's vacuum similarly rewrites vertex pages), then drop the
-        tombstones."""
-        if not os.path.exists(self._tombstones_path):
+        tombstones. Deleted vertices stay traversal waypoints until then
+        (the reference's payload-nulled vertices pending vacuum)."""
+        tomb = self._tombstones_df()
+        if tomb is None:
             return
-        tomb = self.spark.read.parquet(self._tombstones_path)
-        g = self._graph_df()
+        g = _read_graph(self.spark, self.graph_path)
         affected = [
             int(r.shard)
             for r in g.join(F.broadcast(tomb), "id", "left_semi")
@@ -1358,35 +1322,11 @@ class VamanaIndex(QuerySampling):
             updated = survivors.groupBy("shard").applyInPandas(
                 rebuild_shard, GRAPH_SCHEMA
             )
-            self._write_version(updated, affected)
-        shutil.rmtree(self._tombstones_path, ignore_errors=True)
+            self._write_version(updated, affected, vacuum=True)
+        else:
+            self._commit(None, vacuum=True)
 
     # ------------------------------------------------------------------
-
-    def _graph_df(self) -> DataFrame:
-        """The current graph version. The schema is pinned to
-        GRAPH_SCHEMA, so a graph with no rows (an empty or all-NULL
-        build) reads as an empty frame instead of failing schema
-        inference."""
-        return self.spark.read.schema(GRAPH_SCHEMA).parquet(self.graph_path)
-
-    def _record_shard_rows(self) -> dict[str, int]:
-        """Count rows per shard in the current graph version (replicas
-        included — they are traversal vertices) and persist the counts
-        into ``meta.json``. Serving reads these to auto-scale
-        ``ef_search`` with shard size; build and DML refresh them per
-        version."""
-        shard_rows = {
-            str(r["shard"]): int(r["cnt"])
-            for r in self._graph_df()
-            .groupBy("shard")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        self.meta["shard_rows"] = shard_rows
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(self.meta, f)
-        return shard_rows
 
     #: reference serving default (`/root/reference/src/index/gucs.rs:337-360`)
     #: — tuned for ONE global graph; used here as the FLOOR of the
@@ -1411,19 +1351,15 @@ class VamanaIndex(QuerySampling):
         ``ef_search`` (never overridden) is the latency-first path and
         `tools/tune_probes.py --graph` finds the cheapest setting for a
         recall target from recorded queries."""
-        rows = self.meta.get("shard_rows")
-        if rows is None:  # index built before shard_rows existed
-            rows = self._record_shard_rows()
+        rows = self.meta["shard_rows"]
         mx = max((int(rows.get(str(s), 0)) for s in shards), default=0)
         return max(self._EF_SEARCH_FLOOR, int(k), -(-mx // 50))
 
     def _expand_shards(self, clusters: list[int]) -> list[int]:
         """Cluster ids → physical shard ids (a cluster subsharded at
         build expands to ALL its subshards, so probing a cluster scans
-        its full contents; pre-subsharding indexes map identity)."""
-        subs = self.meta.get("cluster_subshards")
-        if not subs:
-            return clusters
+        its full contents)."""
+        subs = self.meta["cluster_subshards"]
         out: list[int] = []
         for c in clusters:
             b, n = subs[c]
@@ -1445,27 +1381,17 @@ class VamanaIndex(QuerySampling):
             order = order[: int(probe_shards)]
         return [int(s) for s in order]
 
-    def _tombstones_df(self) -> "DataFrame | None":
-        """Tombstones as a cached lazy DataFrame (None when there are
-        none). delete() invalidates — an appended tombstone file would be
-        invisible to a plan whose file list was already resolved."""
-        if not os.path.exists(self._tombstones_path):
-            return None
-        cached = getattr(self, "_tombstones_cache", None)
-        if cached is not None:
-            return cached
-        tomb = self.spark.read.parquet(self._tombstones_path)
-        self._tombstones_cache = tomb
-        return tomb
-
     def _shard_candidates(self, shards: list[int], body, out_schema: str) -> DataFrame:
         """Per-shard candidate generation with NO serve-time exchange.
 
         The graph table is hive-partitioned by shard, so each probed
-        shard is its own directory. A ``spark.range`` seed with one row
-        per partition, row ``i`` standing for the ``i``-th live probed
-        shard, is mapped through a task that reads ITS shard's directory
-        with pyarrow and runs the beam search in place
+        shard is its own directory. The live shards are the probed ones
+        that meta ``shard_rows`` lists (an empty shard has no directory);
+        a listed shard whose directory is missing fails the query. A
+        ``spark.range`` seed with one row per partition, row ``i``
+        standing for the ``i``-th live shard, is mapped through a task
+        that reads ITS shard's directory with pyarrow and runs the beam
+        search in place
         (guide §8 "co-locate instead of join": the task reads its own
         slice from storage) — one stage, one task per probed shard, and
         only the ≤ef candidate ids ever move. A groupBy("shard")
@@ -1483,13 +1409,8 @@ class VamanaIndex(QuerySampling):
         set-up hook in ``vectorchord_spark/__init__.py``) to every query.
 
         ``body(grp, shard) -> pdf`` is the per-shard search."""
-        bits = self.meta.get("bits", 1)
-        cols = _TRAVERSE_COLS_1BIT if bits == 1 else _TRAVERSE_COLS_2BIT
-        live = [
-            int(s)
-            for s in shards
-            if os.path.isdir(os.path.join(self.graph_path, f"shard={int(s)}"))
-        ]
+        cols = _TRAVERSE_COLS_1BIT if self.meta["bits"] == 1 else _TRAVERSE_COLS_2BIT
+        live = [int(s) for s in shards if str(int(s)) in self.meta["shard_rows"]]
         if not live:
             return self.spark.createDataFrame([], out_schema)
         seed = self.spark.range(len(live), numPartitions=len(live))
@@ -1515,7 +1436,7 @@ class VamanaIndex(QuerySampling):
         meta = self.meta
         metric = meta["metric"]
         dim = meta["dim"]
-        bits = meta.get("bits", 1)
+        bits = meta["bits"]
         shard_qids: dict[int, list[int]] = {}
         for qi in range(len(Qe)):
             for s in self._expand_shards(self._route(Qe[qi], probe_shards)):
@@ -1635,19 +1556,16 @@ class VamanaIndex(QuerySampling):
         evaluate_query_recall, sql/install/vchord--1.1.1.sql:1021-1092;
         the exhaustive baseline routes to every shard with an unbounded
         beam). Returns NaN when the exhaustive result is empty."""
-        ann = self.search(
-            query,
-            k=k,
-            ef_search=ef_search,
-            probe_shards=probe_shards,
-            rescore_factor=rescore_factor,
+        return self._recall(
+            self.search(
+                query,
+                k=k,
+                ef_search=ef_search,
+                probe_shards=probe_shards,
+                rescore_factor=rescore_factor,
+            ),
+            self.search(query, k=k, ef_search=1 << 20, probe_shards=None),
         )
-        accu = self.search(query, k=k, ef_search=1 << 20, probe_shards=None)
-        ann_ids = {r.id for r in ann.collect()}
-        accu_ids = {r.id for r in accu.collect()}
-        if not accu_ids:
-            return float("nan")
-        return len(ann_ids & accu_ids) / float(len(accu_ids))
 
     def prewarm(self) -> int:
         """Warm the serve path (S11/S12 vchordg_prewarm) and return the

@@ -33,9 +33,7 @@ TakeOrderedAndProject does with per-partition heaps.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from dataclasses import asdict, dataclass, field
 from typing import Iterator
 
@@ -46,11 +44,8 @@ from pyspark.sql import functions as F
 
 from vectorchord_spark import kernels as K
 from vectorchord_spark.operators import kmeans as KM
-from vectorchord_spark.operators.sampling import (
-    QuerySampling,
-    bounded_sample_vectors,
-    source_vectors,
-)
+from vectorchord_spark.operators.sampling import bounded_sample_vectors, source_vectors
+from vectorchord_spark.operators.store import StoredIndex, write_meta
 
 #: ``vec`` is the f32 rerank payload PACKED AS BINARY (little-endian f32,
 #: like the f16/quantized payloads): Spark's parquet LIST<FLOAT> writer
@@ -382,15 +377,9 @@ class IvfOptions:
             )
 
 
-class IvfIndex(QuerySampling):
+class IvfIndex(StoredIndex):
     def __init__(self, spark: SparkSession, path: str):
-        from vectorchord_spark.session import ensure_worker_imports
-
-        ensure_worker_imports(spark)
-        self.spark = spark
-        self.path = path
-        with open(os.path.join(path, "meta.json")) as f:
-            self.meta = json.load(f)
+        super().__init__(spark, path)
         cdf = pd.read_parquet(os.path.join(path, "centroids.parquet"))
         self.levels: list[dict] = []
         for lvl in sorted(cdf["level"].unique()):
@@ -526,8 +515,7 @@ class IvfIndex(QuerySampling):
             "codes_version": 1,
             "n_leaves": int(n_leaves),
         }
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
+        write_meta(path, meta)
 
         index = cls(spark, path)
         index._encode_and_write(src, mode="overwrite")
@@ -577,8 +565,7 @@ class IvfIndex(QuerySampling):
         )
         index = cls.build(spark, ex, "id", "vec", path, options)
         index.meta["multivector"] = True
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(index.meta, f)
+        write_meta(path, index.meta)
         return index
 
     @classmethod
@@ -662,8 +649,7 @@ class IvfIndex(QuerySampling):
             "codes_version": 1,
             "n_leaves": len(per_level[-1]),
         }
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
+        write_meta(path, meta)
         index = cls(spark, path)
         src = source_vectors(df, id_col, vec_col, opts.metric)
         index._encode_and_write(src, mode="overwrite")
@@ -675,16 +661,12 @@ class IvfIndex(QuerySampling):
     def codes_path(self) -> str:
         return os.path.join(self.path, f"codes_v{self.meta['codes_version']}")
 
-    @property
-    def _tombstones_path(self) -> str:
-        return os.path.join(self.path, "tombstones")
-
     def _encode_and_write(self, src: DataFrame, mode: str) -> None:
         meta = self.meta
         leaf_rot = self.levels[-1]["vec_rot"]
         metric = meta["metric"]
         residual = meta["residual_quantization"]
-        storage = meta.get("storage", "f32")
+        storage = meta["storage"]
         keep_vec = meta["rerank_in_index"] and storage == "f32"
         # true halfvec storage: 2-byte little-endian f16 packed binary — the
         # rerank payload is half the f32 bytes (reference halfvec semantics,
@@ -1036,20 +1018,18 @@ class IvfIndex(QuerySampling):
         return self._probe(Q_rot, probes)[0]
 
     def _codes_base(self) -> DataFrame:
-        """The codes table as an ANALYZED lazy DataFrame, cached per codes
-        version (DataFrames are immutable, so sharing one across searches
-        is safe). spark.read.parquet costs a driver→JVM file listing +
-        footer read per call, which uncached would be plan-construction
-        wall on every serving call. Invalidated by insert/delete/compact
-        (they bump the version or change the tombstone set — the cached
-        plan's file list is resolved at analysis time and would go stale)."""
-        key = (self.meta["codes_version"], os.path.exists(self._tombstones_path))
-        cached = getattr(self, "_codes_base_cache", None)
+        """The codes table minus the tombstones as an ANALYZED lazy
+        DataFrame, cached until ``_invalidate`` (DataFrames are immutable,
+        so sharing one across searches is safe). spark.read.parquet costs
+        a JVM file listing + footer read per call, which uncached would be
+        plan-construction wall on every serving call."""
+        tomb = self._tombstones_df()
+        key = (self.meta["codes_version"], tomb is not None)
+        cached = self._codes_base_cache
         if cached is not None and cached[0] == key:
             return cached[1]
         df = self.spark.read.parquet(self.codes_path)
-        if key[1]:
-            tomb = self.spark.read.parquet(self._tombstones_path)
+        if tomb is not None:
             df = df.join(F.broadcast(tomb), "id", "left_anti")
         self._codes_base_cache = (key, df)
         return df
@@ -1402,7 +1382,7 @@ class IvfIndex(QuerySampling):
         meta = self.meta
         metric = meta["metric"]
         dim = meta["dim"]
-        storage = meta.get("storage", "f32")
+        storage = meta["storage"]
 
         # replicate the JVM aggregate(zip_with) left fold exactly —
         # per-dimension f64 accumulation in index order (same IEEE ops,
@@ -1512,7 +1492,7 @@ class IvfIndex(QuerySampling):
         return self.spark.createDataFrame([], "id long, dist double")
 
     # ------------------------------------------------------------------
-    # Lifecycle (insert / delete / compact / prewarm / recall)
+    # Lifecycle (insert / compact / prewarm / recall; StoredIndex deletes)
     # ------------------------------------------------------------------
 
     def insert(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> None:
@@ -1520,16 +1500,10 @@ class IvfIndex(QuerySampling):
         batch analogue of the appendable-tape insert path)."""
         src = source_vectors(df, id_col, vec_col, self.meta["metric"])
         self._encode_and_write(src, mode="append")
-        self._cluster_sizes = None
-        self._codes_base_cache = None
+        self._invalidate()
 
-    def delete(self, ids: "list[int] | DataFrame") -> None:
-        """Logical delete via tombstones (vacuum happens in compact())."""
-        if isinstance(ids, DataFrame):
-            tomb = ids.select(F.col(ids.columns[0]).cast("long").alias("id"))
-        else:
-            tomb = self.spark.createDataFrame([(int(i),) for i in ids], "id long")
-        tomb.write.mode("append").parquet(self._tombstones_path)
+    def _invalidate(self) -> None:
+        super()._invalidate()
         self._cluster_sizes = None
         self._codes_base_cache = None
 
@@ -1549,15 +1523,7 @@ class IvfIndex(QuerySampling):
         df = self._codes_base()
         self.meta["codes_version"] = old_version + 1
         self._write_codes(df, "overwrite")
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(self.meta, f)
-        # reclaim the version *before* the one we just superseded
-        shutil.rmtree(
-            os.path.join(self.path, f"codes_v{old_version - 1}"), ignore_errors=True
-        )
-        shutil.rmtree(self._tombstones_path, ignore_errors=True)
-        self._cluster_sizes = None
-        self._codes_base_cache = None
+        self._commit(f"codes_v{old_version - 1}", vacuum=True)
 
     def prewarm(self) -> int:
         """Cache the codes table in executor memory (S11)."""
@@ -1570,7 +1536,7 @@ class IvfIndex(QuerySampling):
         tuples' counts used by maxsim threshold estimation). Tombstoned
         rows are excluded — after delete() the estimation counts stay
         accurate without waiting for compact()."""
-        if getattr(self, "_cluster_sizes", None) is None:
+        if self._cluster_sizes is None:
             rows = self._codes_base().groupBy("cluster_id").count().collect()
             self._cluster_sizes = {int(r.cluster_id): int(r["count"]) for r in rows}
         return self._cluster_sizes
@@ -1620,13 +1586,6 @@ class IvfIndex(QuerySampling):
             return est + 1.0
         return est
 
-    # ------------------------------------------------------------------
-    # Query sampling / monitoring (S14): enable_query_sampling /
-    # _maybe_record_query / sampled_queries come from the shared
-    # QuerySampling mixin (operators/sampling.py) — one implementation
-    # for the IVF and graph indexes
-    # ------------------------------------------------------------------
-
     def evaluate_query_recall(
         self,
         query: "np.ndarray | list[float]",
@@ -1638,12 +1597,9 @@ class IvfIndex(QuerySampling):
         """recall@k of the ANN configuration vs exhaustive search (S13,
         /root/reference/sql/install/vchord--1.1.1.sql:1021-1092). Returns
         NaN when the exhaustive result is empty (reference edge case)."""
-        ann = self.search(
-            query, k=k, probes=probes, epsilon=epsilon, rerank_factor=rerank_factor
+        return self._recall(
+            self.search(
+                query, k=k, probes=probes, epsilon=epsilon, rerank_factor=rerank_factor
+            ),
+            self.search(query, k=k, probes=None, epsilon=1.9, rerank_factor=None),
         )
-        accu = self.search(query, k=k, probes=None, epsilon=1.9, rerank_factor=None)
-        ann_ids = {r.id for r in ann.collect()}
-        accu_ids = {r.id for r in accu.collect()}
-        if not accu_ids:
-            return float("nan")
-        return len(ann_ids & accu_ids) / float(len(accu_ids))

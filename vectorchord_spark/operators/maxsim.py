@@ -102,7 +102,7 @@ def maxsim_search(
         # (the reference's rerank heap works for every storage,
         # crates/vchordrq/src/rerank.rs:113-137)
         if (
-            index.meta.get("storage", "f32") in ("f32", "f16")
+            index.meta["storage"] in ("f32", "f16")
             and not index.meta["rerank_in_index"]
             and base_df is None
         ):

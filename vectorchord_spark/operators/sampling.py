@@ -25,7 +25,6 @@ toPandas.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -104,62 +103,3 @@ def bounded_sample_plan(df: DataFrame, cap: int, seed: int) -> DataFrame:
         .select("vec")
         .limit(cap)
     )
-
-
-class QuerySampling:
-    """Query sampling + replay shared by the index classes (S14 —
-    vchordrq_sampled_queries, /root/reference/sql/install/
-    vchord--1.1.1.sql:936-1013; Bernoulli rate + max_records cap per
-    src/index/gucs.rs:30-34). Host classes provide ``spark``, ``path``
-    and ``meta`` (persisted as meta.json) and call
-    ``_maybe_record_query`` on each single-query search; the recorded
-    workload feeds recall evaluation and probe/beam tuning
-    (tools/tune_probes.py)."""
-
-    def enable_query_sampling(self, rate: float = 1.0, max_records: int = 1000) -> None:
-        import json
-        import os
-
-        self.meta["sampling_rate"] = float(rate)
-        self.meta["sampling_max_records"] = int(max_records)
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(self.meta, f)
-
-    @property
-    def _queries_log_path(self) -> str:
-        import os
-
-        return os.path.join(self.path, "sampled_queries")
-
-    def _maybe_record_query(self, q: np.ndarray) -> None:
-        import os
-
-        rate = self.meta.get("sampling_rate")
-        if not rate:
-            return
-        # per-execution Bernoulli draw (matches the reference's sampling
-        # semantics; a hot repeated query is sampled at the same rate as
-        # any other execution)
-        if np.random.random() >= rate:
-            return
-        if getattr(self, "_sampled_count", None) is None:
-            self._sampled_count = (
-                self.spark.read.parquet(self._queries_log_path).count()
-                if os.path.exists(self._queries_log_path)
-                else 0
-            )
-        if self._sampled_count >= self.meta.get("sampling_max_records", 1000):
-            return
-        row = [([float(x) for x in q],)]
-        self.spark.createDataFrame(row, "query array<float>").write.mode(
-            "append"
-        ).parquet(self._queries_log_path)
-        self._sampled_count += 1
-
-    def sampled_queries(self) -> DataFrame:
-        """The recorded query vectors (empty DataFrame when none logged)."""
-        import os
-
-        if not os.path.exists(self._queries_log_path):
-            return self.spark.createDataFrame([], "query array<float>")
-        return self.spark.read.parquet(self._queries_log_path)

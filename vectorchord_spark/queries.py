@@ -2418,7 +2418,7 @@ _IVF_RECALL_SQL = "SELECT CAST(1.0 AS DOUBLE) AS recall"
 
 
 def _graph_recall_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S13 for the graph index (QuerySampling mixin parity): the
+    """S13 for the graph index (recall shared with IVF via StoredIndex): the
     exhaustive configuration — all shards routed, unbounded beam — must
     report recall exactly 1.0, gating evaluate_query_recall's baseline
     and the routed-vs-exhaustive comparison machinery end-to-end."""

@@ -64,14 +64,11 @@ def streaming_index_insert(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        marker_dir = os.path.join(index.path, "_stream_epochs")
-        os.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"{stream_key}-epoch-{int(epoch_id)}")
-        if os.path.exists(marker):
+        marker = f"{stream_key}-epoch-{int(epoch_id)}"
+        if index._epoch_done(marker):
             return  # this epoch already appended fully; replay is a no-op
         index.insert(batch_df, id_col, vec_col)
-        with open(marker, "w") as f:
-            f.write("done")
+        index._mark_epoch_done(marker)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_path
