@@ -5,9 +5,12 @@ import os
 import tempfile
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import vectorchord_spark.operators.graph as G
+from vectorchord_spark import kernels as K
 from vectorchord_spark.operators.graph import (
     VamanaIndex,
     VamanaOptions,
@@ -174,13 +177,12 @@ def test_graph_quantized_traversal_payload(spark, vec_df):
 
 def test_graph_serve_path_equivalence(spark, vec_df):
     """The per-shard reader hands each task the WHOLE shard, which
-    positional row_no indexing needs: every task sees row_no 0..n-1 of
-    its shard, and every (id, dist) that search and search_batch return
+    positional row_no indexing needs: every task's decoded shard holds
+    the stored row count, its vertices in row_no order 0..n-1, and every
+    (id, dist) that search and search_batch return
     is the exact distance of that id in vec_df (a split shard corrupts
     row_no indexing). search(q) equals search_batch([q]) (one shard
     kernel), and results stay identical after prewarm()."""
-    import pandas as pd
-
     from vectorchord_spark.functions import distances as D
 
     rng = np.random.default_rng(17)
@@ -192,23 +194,33 @@ def test_graph_serve_path_equivalence(spark, vec_df):
             VamanaOptions(metric="l2", m=24, ef_construction=48, n_shards=4),
         )
 
-        def task_view(grp, shard):
-            rows = np.sort(grp["row_no"].to_numpy())
-            whole = bool(np.array_equal(rows, np.arange(len(rows))))
-            return pd.DataFrame({"shard": [shard], "n": [len(rows)], "whole": [whole]})
+        def task_view(state, shard):
+            # the decoded shard, in vertex order
+            n = len(state.ids)
+            return pd.DataFrame(
+                {"shard": [shard], "n": [n], "ids": [state.ids.tobytes()]}
+            )
 
         seen = {
-            r.shard: (r.n, r.whole)
+            r.shard: (r.n, np.frombuffer(r.ids, np.int64).tolist())
             for r in idx._shard_candidates(
                 list(range(idx.meta["n_shards"])),
                 task_view,
-                "shard int, n long, whole boolean",
+                "shard int, n long, ids binary",
             ).collect()
         }
-        stored = (
-            spark.read.parquet(idx.graph_path).groupBy("shard").count().collect()
-        )
-        assert seen == {r["shard"]: (r["count"], True) for r in stored}
+        stored = spark.read.parquet(idx.graph_path).select("shard", "row_no", "id")
+        by_shard: dict = {}
+        for r in stored.collect():
+            by_shard.setdefault(r.shard, []).append((r.row_no, r.id))
+        want = {}
+        for s, rows in by_shard.items():
+            rows.sort()
+            # the stored row_no of every shard is 0..n-1 ...
+            assert [rn for rn, _ in rows] == list(range(len(rows)))
+            want[s] = (len(rows), [i for _, i in rows])
+        # ... and every task got its whole shard, vertices in row_no order
+        assert seen == want
 
         def exact(qv):
             d = D.output_distance("l2", "vec", D.vec_lit(qv))
@@ -412,10 +424,11 @@ def test_graph_empty_build_then_insert(spark, vec_df):
         assert [r.id for r in idx.search(q, k=10).collect()] == exact
 
 
-def test_graph_missing_shard_raises(spark, vec_df):
+def test_graph_missing_shard_raises(spark, vec_df, monkeypatch):
     """A shard that meta ``shard_rows`` lists but whose directory is gone
     fails search, search_batch and prewarm instead of being skipped (a
-    skipped shard answers from the other shards without saying so).
+    skipped shard answers from the other shards without saying so), also
+    after the shard was decoded into a cache.
     Shards with no rows are not listed and stay skipped: see
     test_graph_empty_build_then_insert."""
     import shutil
@@ -428,13 +441,257 @@ def test_graph_missing_shard_raises(spark, vec_df):
             VamanaOptions(metric="l2", m=16, ef_construction=32, n_shards=2),
         )
         assert set(idx.meta["shard_rows"]) == {"0", "1"}
+        # decode both shards into the workers' caches and this process's
+        # cache first: a cached shard must not outlive its directory
+        assert idx.prewarm() == sum(idx.meta["shard_rows"].values())
+        assert len(idx.search(q, k=10, probe_shards=None).collect()) == 10
+        cache = G._ShardCache(1 << 30)
+        monkeypatch.setattr(G, "_SHARD_CACHE", cache)
+        _serve(idx, [0, 1], lambda st, s: pd.DataFrame({"n": [len(st.ids)]}))
+        assert len(cache._entries) == 2
         shutil.rmtree(os.path.join(idx.graph_path, "shard=1"))
+        with pytest.raises(FileNotFoundError, match="shard=1"):
+            _serve(idx, [0, 1], lambda st, s: pd.DataFrame({"n": [len(st.ids)]}))
         with pytest.raises(Exception, match="shard=1"):
             idx.search(q, k=10, probe_shards=None).collect()
         with pytest.raises(Exception, match="shard=1"):
             idx.search_batch([q, q], k=10).collect()
         with pytest.raises(Exception, match="shard=1"):
             idx.prewarm()
+
+
+def _serve(idx, shards, body):
+    """Run the per-shard reader in this process, as one Spark task
+    would, over ``shards`` of the index's current version."""
+    run = G._make_shard_reader(
+        idx.graph_path, shards, int(idx.meta["bits"]), int(idx.meta["dim"]), body
+    )
+    return list(run(iter([pd.DataFrame({"id": np.arange(len(shards))})])))
+
+
+def _count_reads(monkeypatch) -> list:
+    """Patch ``pyarrow.parquet.read_table`` to record each call's source."""
+    import pyarrow.parquet as pq
+
+    calls = []
+    read_table = pq.read_table
+
+    def counting(source, *args, **kwargs):
+        calls.append(source)
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    return calls
+
+
+def _stored_ids(spark, idx) -> dict:
+    """{shard: ids in row_no order} of the index's current version."""
+    out: dict = {}
+    for r in spark.read.parquet(idx.graph_path).select("shard", "row_no", "id").collect():
+        out.setdefault(r.shard, []).append((r.row_no, r.id))
+    return {s: [i for _, i in sorted(rows)] for s, rows in out.items()}
+
+
+def _ids_body(st, shard):
+    return pd.DataFrame({"shard": [shard], "ids": [st.ids.tobytes()]})
+
+
+def _as_ids(frames) -> dict:
+    return {
+        int(f["shard"].iloc[0]): np.frombuffer(f["ids"].iloc[0], np.int64).tolist()
+        for f in frames
+    }
+
+
+def test_shard_cache_reuses_rebuilt_and_inserted_shards(spark, vec_df, monkeypatch):
+    """The reader serves a shard it has decoded before without reading
+    Parquet again; a rebuild at the same path and an insert each miss on
+    exactly the shards they rewrote, and the reader then returns the new
+    rows, while shards an insert carried over by hardlink stay cached."""
+    cache = G._ShardCache(1 << 30)
+    monkeypatch.setattr(G, "_SHARD_CACHE", cache)
+    reads = _count_reads(monkeypatch)
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "g")
+        opts = VamanaOptions(metric="l2", m=16, ef_construction=32, n_shards=3)
+        idx = VamanaIndex.build(spark, vec_df.where("id < 1200"), "id", "vec", path, opts)
+        live = sorted(int(s) for s in idx.meta["shard_rows"])
+        assert len(live) == 3
+        first = _as_ids(_serve(idx, live, _ids_body))
+        assert first == _stored_ids(spark, idx)
+        assert len(reads) == 3
+        assert _as_ids(_serve(idx, live, _ids_body)) == first
+        assert len(reads) == 3  # the second task per shard reads nothing
+
+        # a rebuild at the same path, over other rows, misses everywhere
+        idx = VamanaIndex.build(
+            spark, vec_df.where("id >= 1200 AND id < 2000"), "id", "vec", path, opts
+        )
+        rebuilt = _as_ids(_serve(idx, live, _ids_body))
+        assert rebuilt == _stored_ids(spark, idx)
+        assert all(i >= 1200 for ids in rebuilt.values() for i in ids)
+        assert len(reads) == 6
+
+        # an insert rewrites some shards and hardlinks the others
+        old_path = idx.graph_path
+        _serve(idx, live, _ids_body)
+        assert len(reads) == 6
+        idx.insert(vec_df.where("id >= 2000 AND id % 20 = 0"), "id", "vec")
+        rewritten = {
+            s for s in live
+            if sorted(os.listdir(os.path.join(old_path, f"shard={s}")))
+            != sorted(os.listdir(os.path.join(idx.graph_path, f"shard={s}")))
+        }
+        assert 0 < len(rewritten) < len(live)
+        reads.clear()
+        assert _as_ids(_serve(idx, live, _ids_body)) == _stored_ids(spark, idx)
+        assert sorted(os.path.basename(os.path.dirname(r[0])) for r in reads) == sorted(
+            f"shard={s}" for s in rewritten
+        )
+
+
+def test_shard_cache_holds_its_budget(spark, vec_df, monkeypatch):
+    """A cache budget smaller than two shards keeps the resident bytes
+    within the budget through repeated passes over more shards than fit,
+    and the search body's answers equal those served from a cache that
+    holds every shard."""
+    rng = np.random.default_rng(29)
+    Q = rng.uniform(-1, 1, (4, 16))
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, vec_df.where("id < 1500"), "id", "vec", os.path.join(tmp, "g"),
+            VamanaOptions(metric="l2", m=16, ef_construction=32, n_shards=4, bits=1),
+        )
+        live = sorted(int(s) for s in idx.meta["shard_rows"])
+        assert len(live) == 4
+        Qe, Q_rot = K.prep_queries(Q, "l2", 16)
+        body = G._make_shard_search("l2", Qe, Q_rot, {s: [0, 1, 2, 3] for s in live}, 40)
+
+        def answers(frames):
+            return [f.to_dict("list") for f in frames]
+
+        big = G._ShardCache(1 << 30)
+        monkeypatch.setattr(G, "_SHARD_CACHE", big)
+        want = answers(_serve(idx, live, body))
+        sizes = [st.nbytes for st in big._entries.values()]
+        assert big.used == sum(sizes)
+
+        small = G._ShardCache(int(1.5 * min(sizes)))
+        monkeypatch.setattr(G, "_SHARD_CACHE", small)
+        for _ in range(3):
+            got = []
+            for s in live:
+                got.extend(answers(_serve(idx, [s], body)))
+                assert small.used == sum(st.nbytes for st in small._entries.values())
+                assert small.used <= small.budget
+                assert len(small._entries) <= 1
+            assert got == want
+
+
+@pytest.mark.parametrize("bits", [1, 2])
+def test_whole_shard_scores_equal_row_lookups(spark, vec_df, bits):
+    """The beam's whole-shard score arrays equal per-row scoring: the
+    1-bit estimate (integer code sums, then elementwise float ops) and
+    the l2 exact distance are equal bit for bit to scoring each row on
+    its own, and the 2-bit estimate agrees to a few ulps (a matrix-vector
+    product over more rows may round differently)."""
+    rng = np.random.default_rng(31)
+    Q = rng.uniform(-1, 1, (3, 16))
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, vec_df.where("id < 800"), "id", "vec", os.path.join(tmp, "g"),
+            VamanaOptions(metric="l2", m=16, ef_construction=32, n_shards=1, bits=bits),
+        )
+        st = G._ShardCache(1 << 30).load(os.path.join(idx.graph_path, "shard=0"), bits, 16)
+        Qe, Q_rot = K.prep_queries(Q, "l2", 16)
+        c = st.codes
+        for qe, qr in zip(Qe, Q_rot):
+            est = G._estimates(st, "l2", qr)
+            exact = G._dists("l2", st.v64, qe)
+            rows = [G._dists("l2", st.v64[[i]], qe)[0] for i in range(len(st.ids))]
+            assert exact.tolist() == rows
+            if bits == 1:
+                lut = K.binary_lut(qr)
+                qv = lut["qvector"].astype(np.int64)
+                one = []
+                for i in range(len(st.ids)):
+                    sub = {k: v[[i]] for k, v in c.items() if k != "bits"}
+                    rough, _ = K.rough_l2(c["bits"][[i]] @ qv, sub, lut)
+                    one.append(float(rough.astype(np.float64)[0]))
+                assert est.tolist() == one
+            else:
+                q64 = np.asarray(qr, np.float64)
+                one = [
+                    c["du2"][i] + float(q64 @ q64) - 2.0 * float(c["code"][i] @ q64) * c["scale"][i]
+                    for i in range(len(st.ids))
+                ]
+                np.testing.assert_allclose(est, one, rtol=1e-12, atol=1e-12)
+
+
+def test_graph_first_insert_splits_by_size(spark, vec_df, monkeypatch):
+    """A first insert of 2 × ``_MAX_SHARD_ROWS`` rows into an empty index
+    splits the empty cluster by size, as build does: every shard stays
+    within the limit, and top-10 equals brute force."""
+    monkeypatch.setattr(G, "_MAX_SHARD_ROWS", 300)
+    rng = np.random.default_rng(37)
+    q = [float(x) for x in rng.uniform(-1, 1, 16)]
+    nulls = spark.createDataFrame(
+        [(i, None) for i in range(10)], "id long, vec array<float>"
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = VamanaIndex.build(
+            spark, nulls, "id", "vec", os.path.join(tmp, "g"), VamanaOptions(dim=16)
+        )
+        assert idx.meta["cluster_subshards"] == [[0, 1]]
+        part = vec_df.where("id < 600")
+        idx.insert(part, "id", "vec")
+        rows = idx.meta["shard_rows"]
+        assert len(rows) >= 2 and sum(rows.values()) == 600
+        assert max(rows.values()) <= 300
+        assert idx.meta["cluster_subshards"] == [[0, idx.meta["n_shards"]]]
+        exact = brute_topk(part, q, 10)
+        assert [r.id for r in idx.search(q, k=10, ef_search=1 << 20).collect()] == exact
+        assert [r.id for r in idx.search(q, k=10).collect()] == exact
+
+
+def test_graph_insert_into_emptied_cluster_splits_by_size(spark, vec_df, monkeypatch):
+    """A cluster that compact emptied, and that is not the last shard
+    range, moves to new shard ids when an insert refills it past
+    ``_MAX_SHARD_ROWS``; searches stay exact."""
+    rng = np.random.default_rng(43)
+    q = [float(x) for x in rng.uniform(-1, 1, 16)]
+    with tempfile.TemporaryDirectory() as tmp:
+        base = vec_df.where("id < 1000")
+        idx = VamanaIndex.build(
+            spark, base, "id", "vec", os.path.join(tmp, "g"),
+            VamanaOptions(metric="l2", m=16, ef_construction=32, n_shards=2),
+        )
+        assert idx.meta["cluster_subshards"] == [[0, 1], [1, 1]]
+        in0 = spark.createDataFrame(
+            [
+                (r.id,)
+                for r in spark.read.parquet(idx.graph_path)
+                .where("shard = 0").select("id").distinct().collect()
+            ],
+            "id long",
+        )
+        idx.delete(in0)
+        idx.compact()
+        assert "0" not in idx.meta["shard_rows"]
+        back = base.join(in0, "id", "left_semi")
+        monkeypatch.setattr(G, "_MAX_SHARD_ROWS", max(50, back.count() // 3))
+        idx.insert(back, "id", "vec")
+        subs = idx.meta["cluster_subshards"]
+        assert subs[1] == [1, 1] and subs[0][0] == 2 and subs[0][1] >= 3
+        assert idx.meta["n_shards"] == 2 + subs[0][1]
+        assert "0" not in idx.meta["shard_rows"]
+        assert max(
+            n for s, n in idx.meta["shard_rows"].items() if int(s) >= 2
+        ) <= G._MAX_SHARD_ROWS
+        survivors = base.join(in0, "id", "left_anti").unionByName(back)
+        exact = brute_topk(survivors, q, 10)
+        got = [r.id for r in idx.search(q, k=10, ef_search=1 << 20).collect()]
+        assert got == exact
 
 
 def test_graph_dml_write_has_no_second_shuffle(spark, vec_df, monkeypatch):

@@ -40,6 +40,7 @@ only dedupes and orders the ≤ probe_shards·ef·rescore_factor candidates.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 from dataclasses import asdict, dataclass, field
 from typing import Iterator
 
@@ -51,7 +52,12 @@ from pyspark.sql import functions as F
 from vectorchord_spark import kernels as K
 from vectorchord_spark.operators import kmeans as KM
 from vectorchord_spark.operators.sampling import bounded_sample_vectors, source_vectors
-from vectorchord_spark.operators.store import StoredIndex, link_shards, write_meta
+from vectorchord_spark.operators.store import (
+    StoredIndex,
+    link_shards,
+    shard_fingerprint,
+    write_meta,
+)
 
 # LPT task layout (longest shard first): the mechanism lives in
 # operators/scheduling.py; the graph build was its first user and its
@@ -77,9 +83,9 @@ GRAPH_SCHEMA = (
 
 
 def _f32_matrix(col, dim: int) -> np.ndarray:
-    """(n, dim) f32 matrix from a pandas column of packed little-endian
-    f32 row bytes (one join + one frombuffer — no per-row array
-    conversion)."""
+    """(n, dim) f32 matrix from a sequence (pandas column or list) of
+    packed little-endian f32 row bytes (one join + one frombuffer — no
+    per-row array conversion)."""
     n = len(col)
     if n == 0:
         return np.zeros((0, dim), np.float32)
@@ -95,9 +101,12 @@ def _f32_row_bytes(mat: np.ndarray) -> list:
 
 
 def _adj_from_bin(col) -> "list[list[int]]":
-    """Adjacency lists from a pandas column of packed little-endian
-    int32 edge bytes."""
-    return [np.frombuffer(b, "<i4").tolist() for b in col]
+    """Adjacency lists from a sequence of packed little-endian int32
+    edge bytes (one ``tolist`` over all edges, then one slice per
+    vertex)."""
+    ends = np.cumsum([len(b) // 4 for b in col]).tolist()
+    flat = np.frombuffer(b"".join(col), "<i4").tolist()
+    return [flat[s:e] for s, e in zip([0] + ends, ends)]
 
 
 def _adj_to_bin(adj) -> list:
@@ -125,40 +134,153 @@ def _output_dist_leftfold(metric: str, v64: np.ndarray, q: np.ndarray) -> np.nda
         return -s
     return 1.0 - s  # cos: stored vectors are normalized; 1 + (-dot)
 
-#: columns the per-shard reader hands to traversal: quantized code
+#: columns the per-shard reader decodes for traversal: quantized code
 #: columns for frontier scoring + ``vec`` for the reference's
 #: exact-rescore-on-pop (the reference likewise reads full vectors of
 #: visited vertices, search.rs:34-140; shard routing is what prunes the
 #: IO). ``shard`` is the hive directory, not a stored column.
-_TRAVERSE_COLS_1BIT = [
-    "id", "row_no", "medoid_row", "neighbors", "vec",
-    "dis_u_2", "factor_cnt", "factor_ip", "factor_err", "code",
-]
-_TRAVERSE_COLS_2BIT = [
-    "id", "row_no", "medoid_row", "neighbors", "vec",
-    "ext_dis_u_2", "ext_nol", "code",
-]
+_TRAVERSE_COLS = {
+    1: [
+        "id", "row_no", "medoid_row", "neighbors", "vec",
+        "dis_u_2", "factor_cnt", "factor_ip", "factor_err", "code",
+    ],
+    2: ["id", "row_no", "medoid_row", "neighbors", "vec", "ext_dis_u_2", "ext_nol", "code"],
+}
 
-def _make_shard_reader(graph_path: str, shards: list, columns: list, body):
-    """mapInPandas runner over a ``spark.range(len(shards))`` seed, one
-    row per partition: seed row ``i`` stands for ``shards[i]``, so each
-    task reads its own shard's hive directory with pyarrow (columns
-    pruned to the serve set) and hands the WHOLE shard to ``body``, so
-    positional ``row_no`` indexing holds without a hash exchange. Local
-    paths here; a distributed deployment points pyarrow at the same
-    store through its filesystem layer (HDFS/S3)."""
+#: byte budget of the decoded-shard cache that each Python worker keeps
+#: between tasks (:class:`_ShardCache`): a 5k-row 64d 2-bit shard decodes
+#: to 11.9 MB, so the budget holds ~20 such shards but only one 10k-row
+#: shard at 768d (f64 vectors and f64 codes, 136 MB); a shard over the
+#: budget is decoded for its task and not kept
+_SHARD_CACHE_BYTES = 256 << 20
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+
+@dataclass(frozen=True)
+class _Shard:
+    """One graph shard decoded for search, in vertex (``row_no``) order:
+    ``adj`` and ``medoid`` index rows of ``ids`` and ``v64``. ``codes``
+    holds the quantized arrays the traversal estimate reads
+    (:func:`_decode_codes`); ``nbytes`` is what the shard costs the
+    cache. Read-only: the cache hands the same object to every task."""
+
+    bits: int
+    ids: np.ndarray
+    adj: "list[list[int]]"
+    medoid: int
+    v64: np.ndarray
+    codes: dict
+    nbytes: int
+
+
+def _decode_codes(bits: int, table, dim: int) -> dict:
+    """The query-independent half of the traversal estimate: the shard's
+    quantized code arrays (:func:`_estimates` is the per-query half)."""
+    col = lambda c: table.column(c).to_numpy()  # noqa: E731
+    code = table.column("code").to_pylist()
+    if bits == 1:
+        return {
+            "bits": K.unpack_bits(code, dim).astype(np.int64),
+            **{c: col(c) for c in ("dis_u_2", "factor_cnt", "factor_ip", "factor_err")},
+        }
+    # 2-bit extended codes (nibble-packed): dequantized-estimate distance
+    du2 = col("ext_dis_u_2").astype(np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        scale = np.sqrt(du2) / col("ext_nol").astype(np.float64)
+    return {
+        "code": K.unpack_nibbles(code, dim).astype(np.float64) - 1.5,
+        "scale": np.nan_to_num(scale, nan=0.0, posinf=0.0),
+        "du2": du2,
+    }
+
+
+def _decode_shard(table, bits: int, dim: int) -> _Shard:
+    """Decode one whole shard's Arrow table (the ``_TRAVERSE_COLS``) into
+    the arrays and adjacency lists the beam search reads."""
+    if table.num_rows == 0:
+        return _Shard(bits, np.zeros(0, np.int64), [], 0, np.zeros((0, dim)), {}, 0)
+    table = table.sort_by("row_no")
+    adj = _adj_from_bin(table.column("neighbors").to_pylist())
+    v64 = _f32_matrix(table.column("vec").to_pylist(), dim).astype(np.float64)
+    ids = table.column("id").to_numpy()
+    codes = _decode_codes(bits, table, dim)
+    for a in (ids, v64, *codes.values()):
+        a.flags.writeable = False  # shared by every task the cache serves
+    # adjacency: one list object per vertex plus a pointer and an int
+    # object per edge
+    n, edges = len(adj), sum(len(a) for a in adj)
+    nbytes = (
+        ids.nbytes + v64.nbytes + sum(a.nbytes for a in codes.values())
+        + 56 * n + 40 * edges
+    )
+    medoid = int(table.column("medoid_row")[0].as_py())
+    return _Shard(bits, ids, adj, medoid, v64, codes, nbytes)
+
+
+class _ShardCache:
+    """LRU of decoded shards within a byte budget, kept by each Python
+    worker between tasks. An entry is keyed on the identity of the
+    shard's files (``store.shard_fingerprint``), read again on every
+    load: a shard rewritten by a rebuild, ``insert`` or ``compact`` has
+    new files and misses, a shard those carried over by hardlink keeps
+    its files and hits, and a deleted shard directory fails the load. A
+    shard larger than the whole budget is decoded but not kept."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.used = 0
+        self._entries: "OrderedDict[tuple, _Shard]" = OrderedDict()
+
+    def load(self, shard_dir: str, bits: int, dim: int) -> _Shard:
         import pyarrow.parquet as pq
 
+        files = shard_fingerprint(shard_dir)
+        key = (bits, dim, files)
+        hit = self._entries.get(key)
+        if hit is not None:
+            self._entries.move_to_end(key)
+            return hit
+        if not files:
+            raise FileNotFoundError(f"no data files in {shard_dir}")
+        table = pq.read_table(
+            [os.path.join(shard_dir, f[0]) for f in files], columns=_TRAVERSE_COLS[bits]
+        )
+        shard = _decode_shard(table, bits, dim)
+        if shard.nbytes <= self.budget:
+            self._entries[key] = shard
+            self.used += shard.nbytes
+            while self.used > self.budget:
+                _, old = self._entries.popitem(last=False)
+                self.used -= old.nbytes
+        return shard
+
+
+_SHARD_CACHE = _ShardCache(_SHARD_CACHE_BYTES)
+
+
+def _load_shard(shard_dir: str, bits: int, dim: int) -> _Shard:
+    """A shard through this process's cache. Module-level on purpose:
+    Spark pickles the reader closure by value, and only a function it
+    pickles by reference reaches the worker's own (persistent) cache."""
+    return _SHARD_CACHE.load(shard_dir, bits, dim)
+
+
+def _make_shard_reader(graph_path: str, shards: list, bits: int, dim: int, body):
+    """mapInPandas runner over a ``spark.range(len(shards))`` seed, one
+    row per partition: seed row ``i`` stands for ``shards[i]``, so each
+    task loads its own shard's hive directory and hands the WHOLE shard,
+    decoded (:class:`_Shard`), to ``body(shard_state, shard) -> pdf``.
+    The load goes through the Python worker's decoded-shard cache
+    (:class:`_ShardCache`): a warm worker reads no Parquet and decodes
+    nothing. Local paths here; a distributed deployment points pyarrow
+    at the same store through its filesystem layer (HDFS/S3)."""
+
+    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for b in batches:
             for i in b["id"]:
                 shard = shards[int(i)]
-                grp = pq.read_table(
-                    os.path.join(graph_path, f"shard={shard}"), columns=columns
-                ).to_pandas()
-                if len(grp):
-                    yield body(grp, shard)
+                state = _load_shard(os.path.join(graph_path, f"shard={shard}"), bits, dim)
+                if len(state.ids):
+                    yield body(state, shard)
 
     return run
 
@@ -749,50 +871,57 @@ def _build_vamana_bulk(
 _MAX_SHARD_ROWS = 20_000
 
 
-def _make_dist_fn(metric: str, bits: int, grp: pd.DataFrame, dim: int, q_rot: np.ndarray):
-    """Quantized-estimate scoring callback over one shard's code columns
-    (the traversal analogue of the reference's quantized vertex scoring)."""
-    internal = "l2" if metric == "l2" else "dot"
-    if bits == 1:
-        bits_mat = K.unpack_bits(list(grp["code"]), dim).astype(np.int64)
+def _estimates(shard: _Shard, internal: str, q_rot: np.ndarray) -> np.ndarray:
+    """Quantized-estimate distances of every vertex of ``shard`` to one
+    query (the traversal analogue of the reference's quantized vertex
+    scoring; :func:`_decode_codes` is the query-independent half)."""
+    c = shard.codes
+    if shard.bits == 1:
         lut = K.binary_lut(q_rot)
-        qv = lut["qvector"].astype(np.int64)
-        meta = {
-            "dis_u_2": grp["dis_u_2"].to_numpy(np.float32),
-            "factor_cnt": grp["factor_cnt"].to_numpy(np.float32),
-            "factor_ip": grp["factor_ip"].to_numpy(np.float32),
-            "factor_err": grp["factor_err"].to_numpy(np.float32),
-        }
-
-        def fn(idx: np.ndarray) -> np.ndarray:
-            sums = bits_mat[idx] @ qv
-            sub = {k: v[idx] for k, v in meta.items()}
-            if internal == "l2":
-                rough, _ = K.rough_l2(sums, sub, lut)
-            else:
-                rough, _ = K.rough_dot(sums, sub, lut)
-            return rough.astype(np.float64)
-
-        return fn
-
-    # 2-bit extended codes (nibble-packed): dequantized-estimate distance
-    code = K.unpack_nibbles(list(grp["code"]), dim).astype(np.float64) - 1.5
-    with np.errstate(divide="ignore", invalid="ignore"):
-        scale = np.sqrt(grp["ext_dis_u_2"].to_numpy(np.float64)) / grp[
-            "ext_nol"
-        ].to_numpy(np.float64)
-    scale = np.nan_to_num(scale, nan=0.0, posinf=0.0)
-    du2 = grp["ext_dis_u_2"].to_numpy(np.float64)
+        sums = c["bits"] @ lut["qvector"].astype(np.int64)
+        rough, _ = (K.rough_l2 if internal == "l2" else K.rough_dot)(sums, c, lut)
+        return rough.astype(np.float64)
     q64 = np.asarray(q_rot, np.float64)
-    qn2 = float(q64 @ q64)
+    dotq = (c["code"] @ q64) * c["scale"]
+    if internal == "l2":
+        return c["du2"] + float(q64 @ q64) - 2.0 * dotq
+    return -dotq
 
-    def fn2(idx: np.ndarray) -> np.ndarray:
-        dotq = (code[idx] @ q64) * scale[idx]
-        if internal == "l2":
-            return du2[idx] + qn2 - 2.0 * dotq
-        return -dotq
 
-    return fn2
+def _make_shard_search(metric: str, Qe: np.ndarray, Q_rot: np.ndarray, shard_qids: dict, ef: int):
+    """The per-shard search body: beam-search ``shard`` once for each
+    query routed to it, returning (qid, id, dist) rows. For each query it
+    computes one estimate array and one exact array over the whole shard,
+    and the beam looks vertices up in them (a beam of auto ``ef`` pops
+    ≥ 4·n/50 vertices and expands up to m neighbours each, so it touches
+    about every row anyway)."""
+    internal = "l2" if metric == "l2" else "dot"
+
+    def shard_search(shard: _Shard, sid: int) -> pd.DataFrame:
+        out_qid, out_id, out_dist = [], [], []
+        for qi in shard_qids[sid]:
+            qx = Qe[qi]
+            est = _estimates(shard, internal, Q_rot[qi])
+            exact = _dists(internal, shard.v64, qx)
+            best = _beam_search(
+                est.__getitem__, shard.adj, shard.medoid, ef, exact.__getitem__
+            )
+            sel = np.asarray([u for _, u in best], np.int64)
+            out_qid.append(np.full(len(sel), qi, np.int32))
+            out_id.append(shard.ids[sel])
+            # output distances with the JVM-fold-exact accumulation (the
+            # candidates' exact vectors are already in memory), so no
+            # rescore join or second graph scan is needed
+            out_dist.append(_output_dist_leftfold(metric, shard.v64[sel], qx))
+        return pd.DataFrame(
+            {
+                "qid": np.concatenate(out_qid),
+                "id": np.concatenate(out_id),
+                "dist": np.concatenate(out_dist),
+            }
+        )
+
+    return shard_search
 
 
 #: output of :func:`_make_assign_fn`, before the subshard split
@@ -1193,7 +1322,9 @@ class VamanaIndex(StoredIndex):
         neighbors → RobustPrune with the ascending alpha schedule →
         bidirectional edge insert with re-prune of overflowing neighbors.
         A shard with no vertices yet is built whole over its new rows,
-        like ``build``. Each affected shard is one executor-local task."""
+        like ``build``, and a cluster with none yet is first split by size
+        (:meth:`_split_empty_clusters`). Each affected shard is one
+        executor-local task."""
         meta = self.meta
         opts = _options_from_meta(meta)
         dim = int(meta["dim"])
@@ -1203,25 +1334,21 @@ class VamanaIndex(StoredIndex):
         )
         n_clusters = int(meta["n_clusters"])
         repl = min(int(opts.replication), n_clusters)
-        assigned = _subshard(
-            src.mapInPandas(
-                _make_assign_fn(
-                    bc_cents, opts.metric, repl, float(opts.closure_epsilon)
-                ),
-                _ASSIGNED_SCHEMA,
-            ),
-            meta["cluster_subshards"],
-        )
-        assigned = assigned.persist()  # pin ONE evaluation: the affected-shard set and the
-        # rewrite job must see identical routing, or _write_version would
-        # hardlink an old partition over a freshly written one (a
-        # nondeterministic source df — rand()/limit() — could otherwise
-        # route differently between the two jobs)
+        clustered = src.mapInPandas(
+            _make_assign_fn(bc_cents, opts.metric, repl, float(opts.closure_epsilon)),
+            _ASSIGNED_SCHEMA,
+        ).persist()  # pin ONE evaluation: the split sizes, the affected-shard
+        # set and the rewrite job must see identical routing, or
+        # _write_version would hardlink an old partition over a freshly
+        # written one (a nondeterministic source df — rand()/limit() —
+        # could otherwise route differently between the jobs)
+        subs, n_shards = self._split_empty_clusters(clustered)
+        assigned = _subshard(clustered, subs)
         affected = [
             int(r.shard) for r in assigned.select("shard").distinct().collect()
         ]
         if not affected:
-            assigned.unpersist()
+            clustered.unpersist()
             return
         old = (
             _read_graph(self.spark, self.graph_path)
@@ -1285,8 +1412,61 @@ class VamanaIndex(StoredIndex):
             .groupBy("shard")
             .applyInPandas(insert_shard, GRAPH_SCHEMA)
         )
+        self.meta["cluster_subshards"], self.meta["n_shards"] = subs, n_shards
         self._write_version(updated, affected)
-        assigned.unpersist()
+        clustered.unpersist()
+
+    def _split_empty_clusters(self, clustered: DataFrame) -> "tuple[list[list[int]], int]":
+        """The subshard layout (``cluster_subshards``, ``n_shards``) for
+        an insert whose closure-assigned rows are ``clustered`` (``shard``
+        = cluster id). A cluster with no vertices yet is built whole over
+        its new rows, so when they exceed ``_MAX_SHARD_ROWS`` it is split
+        by size, as ``build`` splits, with subshards added (in at most
+        four rounds) until the uneven hash split puts at most
+        ``_MAX_SHARD_ROWS`` rows in each.
+        The split cluster keeps its shard ids when its range is the last
+        one, and otherwise moves to new ids after the current ones (its
+        old id, which has no rows, stays unused)."""
+        subs = [[int(b), int(n)] for b, n in self.meta["cluster_subshards"]]
+        total = int(self.meta["n_shards"])
+        rows = self.meta["shard_rows"]
+        empty = [
+            c for c, (b, n) in enumerate(subs)
+            if not any(str(s) in rows for s in range(b, b + n))
+        ]
+        if not empty:
+            return subs, total
+        new_rows = clustered.where(F.col("shard").isin(empty))
+        n_sub = {
+            int(r["shard"]): -(-int(r["count"]) // _MAX_SHARD_ROWS)
+            for r in new_rows.groupBy("shard").count().collect()
+        }
+        n_sub = {c: n for c, n in n_sub.items() if n > subs[c][1]}
+        for _ in range(4):  # one round is the usual case
+            n_of = F.element_at(
+                F.array(*[F.lit(n_sub.get(c, 1)) for c in range(len(subs))]),
+                F.col("shard") + 1,
+            )
+            largest = {
+                int(r["shard"]): int(r["rows"])
+                for r in new_rows.where(F.col("shard").isin(list(n_sub)))
+                .groupBy("shard", F.pmod(F.xxhash64("id"), n_of))
+                .count()
+                .groupBy("shard")
+                .agg(F.max("count").alias("rows"))
+                .collect()
+            }
+            over = {c: r for c, r in largest.items() if r > _MAX_SHARD_ROWS}
+            if not over:
+                break
+            for c, r in over.items():
+                n_sub[c] = -(-n_sub[c] * r // _MAX_SHARD_ROWS)
+        for c in sorted(n_sub):
+            b, n = subs[c]
+            base = b if b + n == total else total
+            subs[c] = [base, n_sub[c]]
+            total = base + n_sub[c]
+        return subs, total
 
     def compact(self) -> None:
         """Vacuum: rebuild every shard containing tombstoned vertices
@@ -1390,33 +1570,37 @@ class VamanaIndex(StoredIndex):
         a listed shard whose directory is missing fails the query. A
         ``spark.range`` seed with one row per partition, row ``i``
         standing for the ``i``-th live shard, is mapped through a task
-        that reads ITS shard's directory with pyarrow and runs the beam
-        search in place
-        (guide §8 "co-locate instead of join": the task reads its own
-        slice from storage) — one stage, one task per probed shard, and
-        only the ≤ef candidate ids ever move. A groupBy("shard")
-        .applyInPandas would ship every probed graph row — vec +
-        neighbors + codes — through a hash exchange per cold query.
-        (A union of per-directory coalesce(1) scans was measured first
-        and rejected: the optimizer hoists the Coalesce above the Union,
-        collapsing all probed shards into ONE serial task.)
+        that loads ITS shard's directory and runs the beam search in
+        place (:func:`_make_shard_reader`; guide §8 "co-locate instead of
+        join": the task reads its own slice from storage) — one stage,
+        one task per probed shard, and only the ≤ef candidate ids ever
+        move. A groupBy("shard").applyInPandas would ship every probed
+        graph row — vec + neighbors + codes — through a hash exchange per
+        cold query. (A union of per-directory coalesce(1) scans was
+        measured first and rejected: the optimizer hoists the Coalesce
+        above the Union, collapsing all probed shards into ONE serial
+        task.)
 
-        The task-side read also guarantees the whole-shard invariant
-        (positional row_no indexing needs the full shard in one frame),
-        with no file-split hazard. The seed is a JVM ``Range``, not a
-        parallelized Python list: a pickled-row scan would add a Python
-        task that never imports this package (so never gets the worker
-        set-up hook in ``vectorchord_spark/__init__.py``) to every query.
+        The load decodes the whole shard (positional ``row_no`` indexing
+        needs every row, with no file-split hazard) and keeps it in the
+        Python worker's decoded-shard cache (:class:`_ShardCache`), so a
+        shard that worker has served before costs no Parquet read; memory
+        is bounded by Python workers × ``_SHARD_CACHE_BYTES``. The seed is
+        a JVM ``Range``, not a parallelized Python list: a pickled-row
+        scan would add a Python task that never imports this package (so
+        never gets the worker set-up hook in
+        ``vectorchord_spark/__init__.py``) to every query.
 
-        ``body(grp, shard) -> pdf`` is the per-shard search."""
-        cols = _TRAVERSE_COLS_1BIT if self.meta["bits"] == 1 else _TRAVERSE_COLS_2BIT
+        ``body(shard_state, shard) -> pdf`` is the per-shard search, over
+        the decoded :class:`_Shard`."""
         live = [int(s) for s in shards if str(int(s)) in self.meta["shard_rows"]]
         if not live:
             return self.spark.createDataFrame([], out_schema)
         seed = self.spark.range(len(live), numPartitions=len(live))
-        return seed.mapInPandas(
-            _make_shard_reader(self.graph_path, live, cols, body), out_schema
+        reader = _make_shard_reader(
+            self.graph_path, live, int(self.meta["bits"]), int(self.meta["dim"]), body
         )
+        return seed.mapInPandas(reader, out_schema)
 
     def _candidates(
         self,
@@ -1428,15 +1612,12 @@ class VamanaIndex(StoredIndex):
         rescore_factor: int,
     ) -> DataFrame:
         """Route every query, then beam-search each probed shard once for
-        all the queries routed to it. Returns (qid, id, dist) candidates
-        with tombstoned ids removed; replica rows are exact duplicates
-        (identical bytes in, identical fold out) for the caller to
-        dedupe. ``ef_search=None`` auto-scales with the largest probed
-        shard (see ``_auto_ef_search``)."""
-        meta = self.meta
-        metric = meta["metric"]
-        dim = meta["dim"]
-        bits = meta["bits"]
+        all the queries routed to it (:func:`_make_shard_search`).
+        Returns (qid, id, dist) candidates with tombstoned ids removed;
+        replica rows are exact duplicates (identical bytes in, identical
+        fold out) for the caller to dedupe. ``ef_search=None``
+        auto-scales with the largest probed shard (see
+        ``_auto_ef_search``)."""
         shard_qids: dict[int, list[int]] = {}
         for qi in range(len(Qe)):
             for s in self._expand_shards(self._route(Qe[qi], probe_shards)):
@@ -1444,40 +1625,8 @@ class VamanaIndex(StoredIndex):
         if ef_search is None:
             ef_search = self._auto_ef_search(list(shard_qids), k)
         ef = int(max(ef_search, k)) * max(1, int(rescore_factor))
-        internal = "l2" if metric == "l2" else "dot"
-
-        def shard_search(grp: pd.DataFrame, shard: int) -> pd.DataFrame:
-            # grp is the WHOLE shard (see _shard_candidates): row_no is
-            # the positional vertex index the adjacency lists refer to
-            grp = grp.sort_values("row_no")
-            adj = _adj_from_bin(grp["neighbors"])
-            medoid = int(grp["medoid_row"].iloc[0])
-            ids = grp["id"].to_numpy(np.int64)
-            v64 = _f32_matrix(grp["vec"], dim).astype(np.float64)
-            out_qid, out_id, out_dist = [], [], []
-            for qi in shard_qids[shard]:
-                est_fn = _make_dist_fn(metric, bits, grp, dim, Q_rot[qi])
-                qx = Qe[qi]
-                exact_fn = lambda idx: _dists(internal, v64[idx], qx)  # noqa: B023,E731
-                best = _beam_search(est_fn, adj, medoid, ef, exact_fn)
-                sel = np.asarray([u for _, u in best], np.int64)
-                out_qid.append(np.full(len(sel), qi, np.int32))
-                out_id.append(ids[sel])
-                # output distances with the JVM-fold-exact accumulation
-                # (the candidates' exact vectors are already in memory),
-                # so no rescore join or second graph scan is needed
-                out_dist.append(_output_dist_leftfold(metric, v64[sel], qx))
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_qid),
-                    "id": np.concatenate(out_id),
-                    "dist": np.concatenate(out_dist),
-                }
-            )
-
-        cand = self._shard_candidates(
-            sorted(shard_qids), shard_search, "qid int, id long, dist double"
-        )
+        body = _make_shard_search(self.meta["metric"], Qe, Q_rot, shard_qids, ef)
+        cand = self._shard_candidates(sorted(shard_qids), body, "qid int, id long, dist double")
         # tombstoned ids are filtered from the RESULT, not the traversal
         # (the reference keeps the vertex as a waypoint until vacuum)
         tomb = self._tombstones_df()
@@ -1569,15 +1718,15 @@ class VamanaIndex(StoredIndex):
 
     def prewarm(self) -> int:
         """Warm the serve path (S11/S12 vchordg_prewarm) and return the
-        total graph row count: one task per shard reads its directory's
-        serve columns through the SAME per-shard reader the search uses,
-        pulling the shard bytes into the executors' page cache (the
-        zero-exchange serve no longer scans through Spark's block
-        cache, so a whole-table ``.cache()`` would warm nothing it
-        reads)."""
+        total graph row count: one task per shard loads its directory
+        through the SAME per-shard reader the search uses, so the shard
+        is decoded into the decoded-shard cache of the Python worker that
+        ran the task (:class:`_ShardCache`). Spark does not pin a shard
+        to a worker, so a later query may still land on a worker that
+        has not decoded it yet."""
 
-        def count_body(grp: pd.DataFrame, shard: int) -> pd.DataFrame:
-            return pd.DataFrame({"n": [len(grp)]})
+        def count_body(shard: _Shard, sid: int) -> pd.DataFrame:
+            return pd.DataFrame({"n": [len(shard.ids)]})
 
         shards = list(range(int(self.meta["n_shards"])))
         rows = self._shard_candidates(shards, count_body, "n long").collect()

@@ -61,6 +61,21 @@ def link_shards(old: str, new: str, skip: set[int]) -> None:
                 shutil.copy2(src, dst)
 
 
+def shard_fingerprint(shard_dir: str) -> tuple:
+    """The identity of a shard directory's data files: ``(name, device,
+    inode, size, mtime_ns)`` per file, sorted by name (hidden ``.`` and
+    ``_`` files, which Parquet readers skip, are left out). A rewrite
+    changes it; a hardlinked carry-over into a later version keeps it. A
+    missing directory raises ``FileNotFoundError``."""
+    out = []
+    for name in sorted(os.listdir(shard_dir)):
+        if name.startswith((".", "_")):
+            continue
+        st = os.stat(os.path.join(shard_dir, name))
+        out.append((name, st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
 class StoredIndex:
     """An index opened from its directory: meta, version commits,
     tombstones, the query log and streaming epoch markers, shared by

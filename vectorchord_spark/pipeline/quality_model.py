@@ -1,5 +1,6 @@
 """Learned quality filtering: a fastText-style linear classifier over
-hashed bag-of-words features, trained on the driver and scored in the JVM.
+hashed bag-of-words features, trained on the driver and scored in one
+vectorized Arrow pass.
 
 Real pre-training pipelines (the CCNet / GPT-3 / RefinedWeb lineage)
 filter web text with a small linear classifier trained to separate a
