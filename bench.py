@@ -234,8 +234,8 @@ def main() -> None:
     # index-build throughput on synthetic clustered data (the regime of the
     # reference's 100M-rows-in-20-min claim, README.md:37-39 → ~83k rows/s;
     # tracked per round so the vs-baseline ratio is visible). 250k x 64d by
-    # default — big enough that per-job overhead is amortized; the full 1M
-    # experiment lives in tools/scale_experiment.py / docs/SCALE.md.
+    # default — big enough that per-job overhead is amortized; the 1M-row
+    # and 4M-row build measurements are in docs/SCALE.md.
     build_rows = int(os.environ.get("SPARK_GRAFT_BUILD_ROWS", "250000"))
     build = _bench_build(spark, build_rows)
 

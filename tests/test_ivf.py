@@ -1119,14 +1119,32 @@ def test_null_and_nonfinite_vectors(spark):
 
 
 def test_null_vectors_graph(spark):
-    """Graph twin of the null contract (issue_427 builds BOTH access
-    methods over the all-NULL column)."""
+    """Graph twin of the null and non-finite contract (issue_427 builds
+    BOTH access methods over the all-NULL column): NULL rows are absent,
+    and NaN/Inf rows rank after every finite row in ``search`` and
+    ``search_batch``, with NaN distances, never SQL NULL (which sorts
+    first)."""
+    import math
+
     from vectorchord_spark.operators.graph import VamanaIndex, VamanaOptions
 
     rows = [(i, [0.001 * i, 0.001 * i, 0.001 * i]) for i in range(1, 101)]
+    rows += [(1000 + i, [float("nan"), float("inf"), float("-inf")]) for i in range(100)]
     rows += [(2000 + i, None) for i in range(50)]
     df = spark.createDataFrame(rows, "id long, vec array<float>")
+    q = [0.0031, 0.0031, 0.0031]
     with tempfile.TemporaryDirectory() as tmp:
         gidx = VamanaIndex.build(spark, df, "id", "vec", os.path.join(tmp, "g"))
-        got = gidx.search([0.0031, 0.0031, 0.0031], k=10).collect()
-        assert len(got) == 10 and all(r.id < 1000 for r in got)
+        got = gidx.search(q, k=10).collect()
+        assert len(got) == 10 and all(r.id < 1000 for r in got), got
+        assert all(r.dist is not None and math.isfinite(r.dist) for r in got), got
+        assert got[0].id == 3  # nearest to 0.0031 on the 0.001-grid
+        batch = gidx.search_batch([q, q], k=10).collect()
+        assert len(batch) == 20 and all(r.id < 1000 for r in batch), batch
+        assert all(r.dist is not None and math.isfinite(r.dist) for r in batch), batch
+        # past the finite rows: the non-finite ones, NaN and not NULL
+        full = gidx.search(q, k=150).collect()
+        assert len(full) == 150
+        assert {r.id for r in full[:100]} == set(range(1, 101))
+        assert all(r.id >= 1000 and r.dist is not None and math.isnan(r.dist)
+                   for r in full[100:]), full[100:]

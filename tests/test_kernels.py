@@ -183,3 +183,32 @@ def test_limit_blas_threads():
     assert K.limit_blas_threads(1) is True  # idempotent fast path
     after = K.rotate(np.arange(768, dtype=np.float32))
     assert np.array_equal(before, after)
+
+
+def test_fold_distances_is_the_left_fold_from_zero():
+    """``fold_distances`` equals a strict left fold that starts at 0.0,
+    bit for bit, for one query and for one query per row; a sum of -0.0
+    products comes out +0.0, as the JVM ``aggregate`` start value makes it."""
+    rng = np.random.default_rng(11)
+    mat = rng.normal(size=(50, 13)).astype(np.float32)
+    qs = rng.normal(size=(50, 13))
+
+    def left_fold(metric, row, q):
+        acc = 0.0
+        for x, y in zip(row.astype(np.float64).tolist(), q.tolist()):
+            acc = acc + ((x - y) * (x - y) if metric == "l2" else x * y)
+        if metric == "l2":
+            return float(np.sqrt(acc))
+        return -acc if metric == "dot" else 1.0 - acc
+
+    for metric in ("l2", "dot", "cos"):
+        got = K.fold_distances(metric, mat, qs).tolist()
+        assert [x.hex() for x in got] == [
+            left_fold(metric, r, q).hex() for r, q in zip(mat, qs)
+        ]
+        one = K.fold_distances(metric, mat, qs[0]).tolist()
+        assert [x.hex() for x in one] == [
+            left_fold(metric, r, qs[0]).hex() for r in mat
+        ]
+    zero = K.fold_distances("dot", np.zeros((1, 3)), np.array([-1.0, -2.0, -3.0]))
+    assert np.signbit(zero[0])  # -(+0.0): the sum itself is +0.0

@@ -131,6 +131,7 @@ __all__ = [
     "extended_distance",
     "extended_dequantize",
     "exact_distances",
+    "fold_distances",
 ]
 
 # ---------------------------------------------------------------------------
@@ -661,7 +662,8 @@ def unpack_nibbles(codes: list[bytes], d: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Exact distances (numpy; used by oracles/tests and driver-side descent)
+# Exact distances (numpy): the internal distances of graph traversal and
+# routing, and the output-space fold every index emits
 # ---------------------------------------------------------------------------
 
 
@@ -685,3 +687,26 @@ def exact_distances(metric: str, mat: np.ndarray, q: np.ndarray) -> np.ndarray:
         with np.errstate(divide="ignore", invalid="ignore"):
             return 1.0 - num / den
     raise ValueError(f"unknown metric {metric}")
+
+
+def fold_distances(metric: str, mat: np.ndarray, qs: np.ndarray) -> np.ndarray:
+    """Output-space distances of each row of ``mat`` to ``qs`` (one query,
+    or one query per row), bit-identical to the JVM column fold of
+    ``functions/distances.py`` (``aggregate`` over ``zip_with``) and to
+    the DuckDB oracles' left-chained SQL: the per-dimension f64 terms are
+    summed in a strict left fold that starts at 0.0, ((0+a0)+a1)+…
+    ``cumsum`` is sequential by definition, and adding 0.0 to the first
+    term first turns a -0.0 into +0.0, as the fold's start value does.
+    ``l2`` is the root of the squared sum, ``dot`` the negated sum and
+    ``cos`` 1 minus it (stored vectors and queries are normalized)."""
+    mat = np.asarray(mat, np.float64)
+    if metric == "l2":
+        terms = mat - qs
+        terms *= terms
+    else:
+        terms = mat * qs
+    terms[:, 0] += 0.0
+    s = np.cumsum(terms, axis=1)[:, -1]
+    if metric == "l2":
+        return np.sqrt(s)
+    return -s if metric == "dot" else 1.0 - s

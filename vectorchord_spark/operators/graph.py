@@ -24,17 +24,20 @@ Semantics re-expressed from the reference (formulas/algorithms only):
 Spark architecture (the 100 TB shape): pointer-chasing traversal is
 executor-local work, so rows are sharded by *k-means cluster* (not hash) and
 each shard builds an independent Vamana graph inside one ``applyInPandas``
-group, with SPANN-style closure replication of boundary vectors into
-neighboring shards. Because shards are spatial clusters, a query routes to
-the ``probe_shards`` nearest shards by centroid distance (driver-side
-argmin over the small centroid table) and the graph scan is
-partition-pruned to those shards only — the same pruning shape as IVF
+group (``build``, ``insert`` and ``compact``), with SPANN-style closure
+replication of boundary vectors into neighboring shards. Because shards
+are spatial clusters, a query routes to the ``probe_shards`` nearest
+shards by centroid distance (driver-side argmin over the small centroid
+table) and only those shards are read — the same pruning shape as IVF
 probes; routing misses are the same failure mode as unprobed IVF cells,
-mitigated by the closure replicas. Within a probed shard, the beam expands
-neighbors on the quantized codes and exact-rescores each popped vertex
-(the reference's scan shape — it too reads full vectors of visited
-vertices) and emits fold-exact output distances, so the cross-shard merge
-only dedupes and orders the ≤ probe_shards·ef·rescore_factor candidates.
+mitigated by the closure replicas. Each probed shard is one ``mapInArrow``
+task under the same kernel contract as IVF's codes scan (Arrow batches in,
+``(qid, id, dist)`` Arrow batches out, so a NaN distance stays NaN and
+sorts last): the beam expands neighbors on the quantized codes and
+exact-rescores each popped vertex (the reference's scan shape — it too
+reads full vectors of visited vertices), and the task emits output
+distances with IVF's fold (``kernels.fold_distances``), so the cross-shard
+merge only dedupes and orders the ≤ probe_shards·4·ef candidates.
 """
 
 from __future__ import annotations
@@ -46,6 +49,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -113,26 +117,6 @@ def _adj_to_bin(adj) -> list:
     """Packed int32 edge bytes per adjacency list (order-preserving)."""
     return [np.asarray(a, np.int32).tobytes() for a in adj]
 
-
-def _output_dist_leftfold(metric: str, v64: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Output-surface distances with STRICT left-fold accumulation —
-    bit-identical to the JVM column fold the former rescore join used
-    (functions/distances.py: aggregate over zip_with starting at 0.0)
-    and to the DuckDB oracles' left-chained SQL. ``cumsum`` is
-    sequential by definition, so ((0+a0)+a1)+... is reproduced exactly;
-    every element op (f32→f64 widening, subtract, square, sqrt) is the
-    same IEEE double op both engines execute. Emitting these from the
-    shard task makes the search answer-identical to the former
-    rescore-join plan while removing its second graph scan."""
-    if len(v64) == 0:
-        return np.zeros(0, np.float64)
-    if metric == "l2":
-        d = v64 - q
-        return np.sqrt((d * d).cumsum(axis=1)[:, -1])
-    s = (v64 * q).cumsum(axis=1)[:, -1]
-    if metric == "dot":
-        return -s
-    return 1.0 - s  # cos: stored vectors are normalized; 1 + (-dot)
 
 #: columns the per-shard reader decodes for traversal: quantized code
 #: columns for frontier scoring + ``vec`` for the reference's
@@ -265,19 +249,21 @@ def _load_shard(shard_dir: str, bits: int, dim: int) -> _Shard:
 
 
 def _make_shard_reader(graph_path: str, shards: list, bits: int, dim: int, body):
-    """mapInPandas runner over a ``spark.range(len(shards))`` seed, one
+    """mapInArrow kernel over a ``spark.range(len(shards))`` seed, one
     row per partition: seed row ``i`` stands for ``shards[i]``, so each
     task loads its own shard's hive directory and hands the WHOLE shard,
-    decoded (:class:`_Shard`), to ``body(shard_state, shard) -> pdf``.
-    The load goes through the Python worker's decoded-shard cache
+    decoded (:class:`_Shard`), to ``body(shard_state, shard)``, which
+    returns a ``pa.RecordBatch`` — the ``Iterator[RecordBatch] →
+    Iterator[RecordBatch]`` contract of IVF's scan kernel. The load goes
+    through the Python worker's decoded-shard cache
     (:class:`_ShardCache`): a warm worker reads no Parquet and decodes
     nothing. Local paths here; a distributed deployment points pyarrow
     at the same store through its filesystem layer (HDFS/S3)."""
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         for b in batches:
-            for i in b["id"]:
-                shard = shards[int(i)]
+            for i in b.column(0).to_pylist():
+                shard = shards[i]
                 state = _load_shard(os.path.join(graph_path, f"shard={shard}"), bits, dim)
                 if len(state.ids):
                     yield body(state, shard)
@@ -312,13 +298,6 @@ class VamanaOptions:
         assert self.bits in (1, 2)
         assert sorted(self.alpha) == list(self.alpha) and self.alpha[0] == 1.0
         assert all(1.0 <= a < 2.0 for a in self.alpha)
-
-
-def _dists(metric: str, mat: np.ndarray, q: np.ndarray) -> np.ndarray:
-    if metric == "l2":
-        diff = mat - q
-        return np.einsum("ij,ij->i", diff, diff)
-    return -(mat @ q)
 
 
 def _beam_search(
@@ -654,7 +633,7 @@ def _build_vamana_bulk(
     if n == 0:
         return [], 0
     v64 = vecs.astype(np.float64)
-    medoid = int(np.argmin(_dists("l2", v64, v64.mean(axis=0))))
+    medoid = int(np.argmin(K.exact_distances("l2", v64, v64.mean(axis=0))))
     if n == 1:
         return [[]], medoid
     # candidate pool = 2·ef_construction nearest + a handful of RANDOM
@@ -670,9 +649,9 @@ def _build_vamana_bulk(
     nr = min(32, n - 1)
     v32 = np.ascontiguousarray(vecs.astype(np.float32))
     sq32 = np.einsum("ij,ij->i", v32, v32)
-    K = k + nr
-    knn_idx = np.empty((n, K), np.int64)
-    knn_d = np.empty((n, K), np.float32)
+    width = k + nr
+    knn_idx = np.empty((n, width), np.int64)
+    knn_d = np.empty((n, width), np.float32)
     rand_idx = rng.integers(0, n, size=(n, nr))
     # Streaming tiled top-k: the build runs ~32 concurrent shard tasks per
     # node, so the candidate pass must be CACHE-resident, not just
@@ -763,7 +742,7 @@ def _build_vamana_bulk(
         knn_d[s:e] = np.take_along_axis(alld, order, axis=1)
     # A random candidate may duplicate a kNN slot (a rand draw of the row
     # itself is already masked to ∞ above). No explicit dedup pass is
-    # needed (the per-row (n, K) id-argsort it took cost ~150 CPU-s at 1M
+    # needed (the per-row (n, width) id-argsort it took cost ~150 CPU-s at 1M
     # rows — 9% of the kernel): the greedy prune CANNOT keep both copies
     # of a duplicated candidate — picking one sets the other's running
     # minD to (numerically) its self-distance ≈ 0, failing the strict
@@ -775,7 +754,7 @@ def _build_vamana_bulk(
     # blockwise vectorized alpha-prune of every vertex's candidates
     adj: list[list[int]] = []
     dim = v32.shape[1]
-    PB = max(1, _PRUNE_BLOCK_BYTES // max(1, _prune_row_bytes(K, dim)))
+    PB = max(1, _PRUNE_BLOCK_BYTES // max(1, _prune_row_bytes(width, dim)))
     for s in range(0, n, PB):
         e = min(n, s + PB)
         adj.extend(
@@ -808,7 +787,7 @@ def _build_vamana_bulk(
     # in-degree tail is long: measured 33..348 at n=10k, m=32), and the
     # prune's pairwise matrix costs O(k²) per row — padding every row to
     # the GLOBAL max length did ~48x the needed work and overran the
-    # _PRUNE_BLOCK_BYTES budget (sized for the main pass's K) ~5x. Sort by adjacency
+    # _PRUNE_BLOCK_BYTES budget (sized for the main pass's width) ~5x. Sort by adjacency
     # length and cut blocks at a LOCAL kmax under the same byte budget:
     # padding never exceeds one block's length spread. Measured: the
     # re-prune pass drops 17.3s -> ~1s at n=10k (same output — row order
@@ -890,35 +869,39 @@ def _estimates(shard: _Shard, internal: str, q_rot: np.ndarray) -> np.ndarray:
 
 def _make_shard_search(metric: str, Qe: np.ndarray, Q_rot: np.ndarray, shard_qids: dict, ef: int):
     """The per-shard search body: beam-search ``shard`` once for each
-    query routed to it, returning (qid, id, dist) rows. For each query it
-    computes one estimate array and one exact array over the whole shard,
-    and the beam looks vertices up in them (a beam of auto ``ef`` pops
-    ≥ 4·n/50 vertices and expands up to m neighbours each, so it touches
-    about every row anyway)."""
+    query routed to it, returning a (qid int32, id int64, dist float64)
+    record batch. For each query it computes one estimate array and one
+    exact array over the whole shard, and the beam looks vertices up in
+    them (a beam of auto ``ef`` pops ≥ 4·n/50 vertices and expands up to
+    m neighbours each, so it touches about every row anyway).
+
+    A NaN estimate or exact distance (a non-finite stored vector) is
+    keyed ``+inf`` for the beam, so the vertex sorts after every finite
+    one instead of blocking the window heap (NaN compares false both
+    ways); its output distance stays NaN."""
     internal = "l2" if metric == "l2" else "dot"
 
-    def shard_search(shard: _Shard, sid: int) -> pd.DataFrame:
+    def shard_search(shard: _Shard, sid: int) -> pa.RecordBatch:
         out_qid, out_id, out_dist = [], [], []
         for qi in shard_qids[sid]:
             qx = Qe[qi]
             est = _estimates(shard, internal, Q_rot[qi])
-            exact = _dists(internal, shard.v64, qx)
+            exact = K.exact_distances(internal, shard.v64, qx)
+            for key in (est, exact):
+                key[np.isnan(key)] = np.inf
             best = _beam_search(
                 est.__getitem__, shard.adj, shard.medoid, ef, exact.__getitem__
             )
             sel = np.asarray([u for _, u in best], np.int64)
             out_qid.append(np.full(len(sel), qi, np.int32))
             out_id.append(shard.ids[sel])
-            # output distances with the JVM-fold-exact accumulation (the
-            # candidates' exact vectors are already in memory), so no
-            # rescore join or second graph scan is needed
-            out_dist.append(_output_dist_leftfold(metric, shard.v64[sel], qx))
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_qid),
-                "id": np.concatenate(out_id),
-                "dist": np.concatenate(out_dist),
-            }
+            # output distances with the JVM fold (the candidates' exact
+            # vectors are already in memory), so no rescore join or
+            # second graph scan is needed
+            out_dist.append(K.fold_distances(metric, shard.v64[sel], qx))
+        return pa.record_batch(
+            [pa.array(np.concatenate(c)) for c in (out_qid, out_id, out_dist)],
+            names=["qid", "id", "dist"],
         )
 
     return shard_search
@@ -1389,7 +1372,7 @@ class VamanaIndex(StoredIndex):
             alphas = opts.alpha if internal == "l2" else [1.0]
             m = opts.m
             for i in range(len(olds), len(rows)):
-                exact_fn = lambda idx: _dists(internal, v64[idx], v64[i])  # noqa: B023,E731
+                exact_fn = lambda idx: K.exact_distances(internal, v64[idx], v64[i])  # noqa: B023,E731
                 cand = _beam_search(
                     exact_fn, adj, medoid, opts.ef_construction, prune_frontier=True
                 )
@@ -1400,7 +1383,7 @@ class VamanaIndex(StoredIndex):
                     if i not in adj[nb]:
                         adj[nb].append(i)
                         if len(adj[nb]) > m:
-                            nd = _dists(internal, v64[adj[nb]], v64[nb])
+                            nd = K.exact_distances(internal, v64[adj[nb]], v64[nb])
                             adj[nb] = _robust_prune(
                                 v64, internal, alphas, m, nb,
                                 list(zip(nd.tolist(), adj[nb])),
@@ -1513,6 +1496,10 @@ class VamanaIndex(StoredIndex):
     #: auto-scaled per-shard beam width
     _EF_SEARCH_FLOOR = 64
 
+    #: the per-shard result window is this many times max(ef_search, k):
+    #: the exact-ranked window the cross-shard merge cuts to k
+    _EF_WINDOW_FACTOR = 4
+
     def _auto_ef_search(self, shards: list[int], k: int) -> int:
         """Compute the default beam width from the probed shards' sizes.
 
@@ -1550,19 +1537,17 @@ class VamanaIndex(StoredIndex):
         """Driver-side CLUSTER routing: nearest clusters by centroid
         distance (L2 for l2/cos — cos vectors are stored normalized — dot
         for ip). Callers expand to physical shards via _expand_shards."""
-        metric = self.meta["metric"]
-        if metric == "dot":
-            d = -(self.centroids @ q)
-        else:
-            diff = self.centroids - q
-            d = np.einsum("ij,ij->i", diff, diff)
+        internal = "dot" if self.meta["metric"] == "dot" else "l2"
+        d = K.exact_distances(internal, self.centroids, q)
         order = np.argsort(d, kind="stable")
         if probe_shards is not None:
             order = order[: int(probe_shards)]
         return [int(s) for s in order]
 
     def _shard_candidates(self, shards: list[int], body, out_schema: str) -> DataFrame:
-        """Per-shard candidate generation with NO serve-time exchange.
+        """Per-shard candidate generation with NO serve-time exchange:
+        one ``mapInArrow`` task per live shard, under the same kernel
+        contract as IVF's scan (``IvfIndex._scan``).
 
         The graph table is hive-partitioned by shard, so each probed
         shard is its own directory. The live shards are the probed ones
@@ -1591,8 +1576,11 @@ class VamanaIndex(StoredIndex):
         never gets the worker set-up hook in
         ``vectorchord_spark/__init__.py``) to every query.
 
-        ``body(shard_state, shard) -> pdf`` is the per-shard search, over
-        the decoded :class:`_Shard`."""
+        ``body(shard_state, shard) -> pa.RecordBatch`` is the per-shard
+        search (or ``prewarm``'s count) over the decoded :class:`_Shard`;
+        its batch has the fields of ``out_schema``. Arrow, not pandas, so
+        that a NaN distance stays NaN (pandas would turn it into SQL NULL,
+        which sorts first)."""
         live = [int(s) for s in shards if str(int(s)) in self.meta["shard_rows"]]
         if not live:
             return self.spark.createDataFrame([], out_schema)
@@ -1600,7 +1588,7 @@ class VamanaIndex(StoredIndex):
         reader = _make_shard_reader(
             self.graph_path, live, int(self.meta["bits"]), int(self.meta["dim"]), body
         )
-        return seed.mapInPandas(reader, out_schema)
+        return seed.mapInArrow(reader, out_schema)
 
     def _candidates(
         self,
@@ -1609,7 +1597,6 @@ class VamanaIndex(StoredIndex):
         k: int,
         ef_search: int | None,
         probe_shards: int | None,
-        rescore_factor: int,
     ) -> DataFrame:
         """Route every query, then beam-search each probed shard once for
         all the queries routed to it (:func:`_make_shard_search`).
@@ -1624,7 +1611,7 @@ class VamanaIndex(StoredIndex):
                 shard_qids.setdefault(int(s), []).append(qi)
         if ef_search is None:
             ef_search = self._auto_ef_search(list(shard_qids), k)
-        ef = int(max(ef_search, k)) * max(1, int(rescore_factor))
+        ef = int(max(ef_search, k)) * self._EF_WINDOW_FACTOR
         body = _make_shard_search(self.meta["metric"], Qe, Q_rot, shard_qids, ef)
         cand = self._shard_candidates(sorted(shard_qids), body, "qid int, id long, dist double")
         # tombstoned ids are filtered from the RESULT, not the traversal
@@ -1640,7 +1627,6 @@ class VamanaIndex(StoredIndex):
         k: int = 10,
         ef_search: int | None = None,
         probe_shards: int | None = None,
-        rescore_factor: int = 4,
     ) -> DataFrame:
         """Routed per-shard quantized-frontier beam search → exact top-k.
 
@@ -1650,8 +1636,8 @@ class VamanaIndex(StoredIndex):
         subshards, so the probed content is the same regardless of how
         build tasks were split. Traversal expands neighbors on quantized estimates
         and rescores each popped vertex exactly (reference
-        search.rs:34-140), so the per-shard ef window is already
-        exact-ranked; ``rescore_factor`` optionally widens it.
+        search.rs:34-140), so the per-shard window (4 × ``ef_search``)
+        is already exact-ranked.
 
         ``ef_search=None`` (the default) auto-scales the beam width with
         the probed shards' sizes (see ``_auto_ef_search``); pass an int to
@@ -1660,7 +1646,7 @@ class VamanaIndex(StoredIndex):
             np.asarray(query, np.float64)[None], self.meta["metric"], self.meta["dim"]
         )
         self._maybe_record_query(Qe[0].astype(np.float32))
-        cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards, rescore_factor)
+        cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards)
         return (
             cand.select("id", "dist").distinct().orderBy("dist", "id").limit(int(k))
         )
@@ -1671,7 +1657,6 @@ class VamanaIndex(StoredIndex):
         k: int = 10,
         ef_search: int | None = None,
         probe_shards: int | None = None,
-        rescore_factor: int = 4,
     ) -> DataFrame:
         """Multi-query routed search in ONE pass over the probed shards.
 
@@ -1680,17 +1665,9 @@ class VamanaIndex(StoredIndex):
         (qid, id, dist, rank) with rank ≤ k per query.
         ``ef_search=None`` auto-scales with probed shard size (one shared
         value over the batch's union of probed shards — see ``search``)."""
-        from pyspark.sql import Window
-
         Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
-        cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards, rescore_factor)
-        w = Window.partitionBy("qid").orderBy("dist", "id")
-        return (
-            cand.distinct()
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .orderBy("qid", "rank")
-        )
+        cand = self._candidates(Qe, Q_rot, k, ef_search, probe_shards)
+        return self._top_per_query(cand.distinct(), k, "dist", "id").orderBy("qid", "rank")
 
     def evaluate_query_recall(
         self,
@@ -1698,7 +1675,6 @@ class VamanaIndex(StoredIndex):
         k: int = 10,
         ef_search: int | None = None,
         probe_shards: int | None = None,
-        rescore_factor: int = 4,
     ) -> float:
         """recall@k of a routed configuration vs the exhaustive search
         (S13 for the graph index — the vchordg analogue of
@@ -1711,7 +1687,6 @@ class VamanaIndex(StoredIndex):
                 k=k,
                 ef_search=ef_search,
                 probe_shards=probe_shards,
-                rescore_factor=rescore_factor,
             ),
             self.search(query, k=k, ef_search=1 << 20, probe_shards=None),
         )
@@ -1725,8 +1700,8 @@ class VamanaIndex(StoredIndex):
         to a worker, so a later query may still land on a worker that
         has not decoded it yet."""
 
-        def count_body(shard: _Shard, sid: int) -> pd.DataFrame:
-            return pd.DataFrame({"n": [len(shard.ids)]})
+        def count_body(shard: _Shard, sid: int) -> pa.RecordBatch:
+            return pa.record_batch([pa.array([len(shard.ids)], pa.int64())], names=["n"])
 
         shards = list(range(int(self.meta["n_shards"])))
         rows = self._shard_candidates(shards, count_body, "n long").collect()

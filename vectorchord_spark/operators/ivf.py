@@ -39,7 +39,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectorchord_spark import kernels as K
@@ -51,8 +51,8 @@ from vectorchord_spark.operators.store import StoredIndex, write_meta
 #: like the f16/quantized payloads): Spark's parquet LIST<FLOAT> writer
 #: emits per-element definition/repetition levels and measured only
 #: 0.1-0.3 GB/s, the single largest term of the 768d encode stage
-#: (tools/profile_encode.py: parquet 3.98s vs feed+compute 1.63s +
-#: shuffle 0.42s best-of-5 at 250k); the binary blob writes ~3x faster
+#: (encode stage split at 250k rows, best of 5: parquet 3.98s vs
+#: feed+compute 1.63s + shuffle 0.42s; docs/SCALE.md); the binary blob writes ~3x faster
 #: and decodes to numpy with one frombuffer per batch at rerank time.
 CODES_SCHEMA = (
     "id long, cluster_id int, dis_u_2 float, factor_cnt float, factor_ip float, "
@@ -160,13 +160,6 @@ def _local_select(
         dist = np.concatenate([dist, exact(extra)])
     top = np.lexsort((ids[rows], dist))[:k]
     return rows[top], dist[top]
-
-
-def _top_per_query(df: DataFrame, n: int, *order: str, rank: str = "rank") -> DataFrame:
-    """Each qid's first ``n`` rows by ``order``, numbered in column
-    ``rank``."""
-    w = Window.partitionBy("qid").orderBy(*order)
-    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= int(n))
 
 
 #: hard per-cell sample bound for the distributed leaf k-means stage —
@@ -1119,7 +1112,6 @@ class IvfIndex(StoredIndex):
         epsilon: float = 1.9,
         rerank_factor: int | None = 4,
         guarantee: bool = True,
-        return_rough: bool = False,
         base_df: DataFrame | None = None,
         prefilter: DataFrame | None = None,
     ) -> DataFrame:
@@ -1136,11 +1128,6 @@ class IvfIndex(StoredIndex):
         comes before the top-k cut when ``guarantee=False``).
         Returns (qid, id, dist, rank) with rank ≤ k per query.
 
-        ``return_rough``: return (qid, id, rough) instead — each query's
-        top-k by the RaBitQ estimate, in the index's INTERNAL distance
-        space (squared-l2 / negated-dot), with no rerank (the reference's
-        maxsim candidate pool keeps rough distances, scanners/maxsim.rs).
-
         ``base_df``: rerank against this (id, vec) table instead of the
         index-stored payload (``rerank_in_table``, Q5 — the batch analogue
         of ``search(base_df=...)``, with the same join into the one scan
@@ -1155,10 +1142,6 @@ class IvfIndex(StoredIndex):
         prefilter semantics, Q9 — the batch analogue of
         ``search(prefilter=...)``; one semi-join on the codes scan).
         """
-        if return_rough:
-            return self._rough_pool(
-                queries, k, probes, epsilon, 0, prefilter=prefilter
-            ).select("qid", "id", "rough")
         Qe, Q_rot = K.prep_queries(queries, self.meta["metric"], self.meta["dim"])
         m = rerank_factor * k if rerank_factor is not None else None
         rows = self._selected_rows(
@@ -1170,9 +1153,9 @@ class IvfIndex(StoredIndex):
                 [], "qid int, id long, dist double, rank int"
             )
         if m is not None and not guarantee:
-            rows = _top_per_query(rows, m, "lb", "id", rank="_rn")
+            rows = self._top_per_query(rows, m, "lb", "id", rank="_rn")
         return (
-            _top_per_query(rows, k, "dist", "id")
+            self._top_per_query(rows, k, "dist", "id")
             .select("qid", "id", "dist", "rank")
             .orderBy("qid", "rank")
         )
@@ -1200,7 +1183,7 @@ class IvfIndex(StoredIndex):
             return self.spark.createDataFrame(
                 [], "qid int, id long, rough double, dist double, rank int"
             )
-        return _top_per_query(rows, k, "rough", "id")
+        return self._top_per_query(rows, k, "rough", "id")
 
     def _selected_rows(
         self,
@@ -1384,22 +1367,10 @@ class IvfIndex(StoredIndex):
         dim = meta["dim"]
         storage = meta["storage"]
 
-        # replicate the JVM aggregate(zip_with) left fold exactly —
-        # per-dimension f64 accumulation in index order (same IEEE ops,
-        # same order, same dtypes as D.l2/D.ip in functions/distances.py),
-        # so oracle-gated distances are unchanged by the storage layout
+        # the JVM aggregate(zip_with) left fold, so oracle-gated
+        # distances are unchanged by the storage layout
         def fold(vecs, rows, qids):
-            mat = vecs[rows].astype(np.float64, copy=False)
-            qs = Qe[qids]
-            acc = np.zeros(len(rows), np.float64)
-            if metric == "l2":
-                for j in range(dim):
-                    t = mat[:, j] - qs[:, j]
-                    acc += t * t
-                return np.sqrt(acc)
-            for j in range(dim):
-                acc += mat[:, j] * qs[:, j]
-            return -acc if metric == "dot" else 1.0 + (-acc)
+            return K.fold_distances(metric, vecs[rows], Qe[qids])
 
         if base:
             # the base table's vectors (``source_vectors``: NULLs skipped,

@@ -20,7 +20,7 @@ import os
 import shutil
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -174,6 +174,13 @@ class StoredIndex:
         if not os.path.exists(self._queries_log_path):
             return self.spark.createDataFrame([], "query array<float>")
         return self.spark.read.parquet(self._queries_log_path)
+
+    @staticmethod
+    def _top_per_query(df: DataFrame, n: int, *order: str, rank: str = "rank") -> DataFrame:
+        """Each qid's first ``n`` rows by ``order``, numbered in column
+        ``rank``: the per-query merge of every ``search_batch``."""
+        w = Window.partitionBy("qid").orderBy(*order)
+        return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= int(n))
 
     @staticmethod
     def _recall(ann: DataFrame, exact: DataFrame) -> float:

@@ -350,7 +350,7 @@ def curate(docs: DataFrame, config: CurateConfig | None = None) -> CurateResult:
         # the top-ranked id for every cluster member, so one WindowExec
         # computes rank and keeper together and the former rn==1
         # self-join is gone (A/B at sf0.1, identical rows asserted:
-        # 0.648 → 0.448s — tools/profile_keepbest_r13.py)
+        # 0.648 → 0.448s median, OPTIMIZATION_r13.md)
         _w6 = Window.partitionBy("component").orderBy(F.desc("_q"), "id")
         ranked = (
             comp.join(

@@ -1923,7 +1923,7 @@ def _dedup_keep_best_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the top-ranked id for every member, so one WindowExec answers both
     # and the former rn==1 self-join (an extra exchange + join of the
     # ranked frame against itself) is gone. A/B at sf0.1, identical rows
-    # asserted: 0.648 → 0.448s median (tools/profile_keepbest_r13.py).
+    # asserted: 0.648 → 0.448s median (OPTIMIZATION_r13.md).
     w = Window.partitionBy("component").orderBy(F.desc("quality"), "id")
     ranked = (
         comp.join(docs.select(F.col("doc_id").alias("id"), "text"), "id")
