@@ -565,7 +565,12 @@ def test_shard_cache_holds_its_budget(spark, vec_df, monkeypatch):
     """A cache budget smaller than two shards keeps the resident bytes
     within the budget through repeated passes over more shards than fit,
     and the search body's answers equal those served from a cache that
-    holds every shard."""
+    holds every shard. The budget holds the same way when IVF cells
+    share it with graph shards (one cache per worker for both index
+    families), and the cells read equal those of a cache that holds
+    every cell."""
+    import vectorchord_spark.operators.ivf as I
+
     rng = np.random.default_rng(29)
     Q = rng.uniform(-1, 1, (4, 16))
     with tempfile.TemporaryDirectory() as tmp:
@@ -597,6 +602,32 @@ def test_shard_cache_holds_its_budget(spark, vec_df, monkeypatch):
                 assert small.used <= small.budget
                 assert len(small._entries) <= 1
             assert got == want
+
+        ivf = I.IvfIndex.build(
+            spark, vec_df.where("id < 1500"), "id", "vec", os.path.join(tmp, "ivf"),
+            I.IvfOptions(metric="l2", lists=[8]),
+        )
+        names, _ = ivf._codes_snapshot()
+        cols = I._SCAN_COLS + I._PAYLOAD_COLS["f32"]
+        monkeypatch.setattr(G, "_SHARD_CACHE", big)
+        cells = [ivf_cells.to_pydict() for ivf_cells in (
+            I._read_cells(ivf.codes_path, names, [c], cols) for c in range(8)
+        )]
+        assert sum(len(c["id"]) for c in cells) == 1500
+        mixed = G._ShardCache(int(1.5 * min(sizes)))
+        monkeypatch.setattr(G, "_SHARD_CACHE", mixed)
+        for _ in range(2):
+            got = []
+            for i, s in enumerate(live):
+                got.extend(answers(_serve(idx, [s], body)))
+                for c in (2 * i, 2 * i + 1):
+                    rb = I._read_cells(ivf.codes_path, names, [c], cols)
+                    assert rb.to_pydict() == cells[c]
+                    assert mixed.used == sum(e.nbytes for e in mixed._entries.values())
+                    assert mixed.used <= mixed.budget
+            assert got == want
+        kinds = {key[0] for key in mixed._entries}
+        assert kinds <= {"graph", "ivf"} and "ivf" in kinds
 
 
 @pytest.mark.parametrize("bits", [1, 2])

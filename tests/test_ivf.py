@@ -1148,3 +1148,150 @@ def test_null_vectors_graph(spark):
         assert {r.id for r in full[:100]} == set(range(1, 101))
         assert all(r.id >= 1000 and r.dist is not None and math.isnan(r.dist)
                    for r in full[100:]), full[100:]
+
+
+_DRIFT_CASES = {
+    f"{storage}-{metric}": {"storage": storage, "metric": metric}
+    for storage in ("f32", "f16", "rabitq8", "rabitq4")
+    for metric in ("l2", "dot", "cos")
+}
+_DRIFT_CASES["residual"] = {"residual_quantization": True}
+
+
+def _hex_rows(rows) -> list:
+    """Collected rows as tuples, floats as ``float.hex`` (bit-exact)."""
+    return [
+        tuple(v.hex() if isinstance(v, float) else v for v in r) for r in rows
+    ]
+
+
+@pytest.mark.parametrize("case", list(_DRIFT_CASES))
+def test_cell_reader_matches_codes_scan(spark, clustered_df, case):
+    """The plain path (each task reads its probed cells through the
+    Python worker's cell cache) returns the same ids and bit-identical
+    distances as the Spark codes scan, reached by a ``prefilter`` that
+    holds every id: ``search`` with the guarantee on and off, under
+    ``max_scan_tuples`` and with ``rerank_factor=None``, ``search_batch``,
+    ``range_search`` and the maxsim pool (``_rough_pool``), after build,
+    after ``delete``, after ``insert`` and after ``compact``."""
+    rng = np.random.default_rng(83)
+    Q = rng.uniform(-1, 1, (3, 8)).tolist()
+    everyone = spark.range(0, 5000).select(F.col("id"))
+    opts = IvfOptions(**{"metric": "l2", "lists": [33], **_DRIFT_CASES[case]})
+    probes = [8]
+
+    def answers(idx, **pf) -> list:
+        out = []
+        for mode in (
+            {"rerank_factor": None},
+            {"guarantee": True},
+            {"guarantee": False},
+            {"max_scan_tuples": 25},
+        ):
+            out.append(idx.search(Q[0], k=10, probes=probes, **mode, **pf))
+        for mode in ({"rerank_factor": None}, {"guarantee": True}, {"guarantee": False}):
+            out.append(idx.search_batch(Q, k=10, probes=probes, **mode, **pf))
+        # the pool's exact head: maxsim reads ``dist`` only for rank ≤ refine
+        pool = idx._rough_pool(Q, 20, probes, 1.9, refine=5, **pf)
+        out.append(
+            pool.withColumn("dist", F.when(F.col("rank") <= 5, F.col("dist")))
+            .orderBy("qid", "rank")
+        )
+        radius = idx.search(Q[1], k=30, probes=probes, rerank_factor=None).collect()[-1].dist
+        if pf:
+            full = idx.search(
+                Q[1], k=2**31 - 1, probes=probes, rerank_factor=None, **pf
+            )
+            out.append(full.where(F.col("dist") < radius))
+        else:
+            out.append(idx.range_search(Q[1], radius, probes=probes))
+        return [_hex_rows(df.collect()) for df in out]
+
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = IvfIndex.build(
+            spark, clustered_df.where("id < 4000"), "id", "vec",
+            os.path.join(tmp, "idx"), opts,
+        )
+        for state, change in (
+            ("build", lambda: None),
+            ("delete", lambda: idx.delete([i for i in range(4000) if i % 7 == 0])),
+            ("insert", lambda: idx.insert(clustered_df.where("id >= 4000"))),
+            ("compact", idx.compact),
+        ):
+            change()
+            want = answers(idx, prefilter=everyone)
+            got = answers(idx)
+            assert all(want), (state, want)
+            assert got == want, state
+
+
+def test_cell_cache_follows_dml(spark, clustered_df):
+    """With every cell already in the Python workers' caches (prewarm),
+    a new search sees each insert, delete and compact, while a search
+    DataFrame built before an insert and collected after it returns the
+    pre-insert answer (it keeps the files it was built over)."""
+    target = clustered_df.where("id = 4500").first()
+    q = list(target.vec)
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = IvfIndex.build(
+            spark, clustered_df.where("id < 4000"), "id", "vec",
+            os.path.join(tmp, "idx"), IvfOptions(metric="l2", lists=[33]),
+        )
+        assert idx.prewarm() == 4000
+
+        def top(df) -> list:
+            return [r.id for r in df.collect()]
+
+        stale = idx.search(q, k=5, probes=None)
+        before = top(idx.search(q, k=5, probes=None))
+        assert before == brute_topk(clustered_df.where("id < 4000"), q, 5)
+        idx.insert(clustered_df.where("id >= 4000"))
+        assert top(stale) == before
+        assert top(idx.search(q, k=5, probes=None)) == brute_topk(clustered_df, q, 5)
+        assert top(idx.search(q, k=5, probes=None))[0] == 4500
+        idx.delete([4500])
+        rest = clustered_df.where("id != 4500")
+        assert top(idx.search(q, k=5, probes=None)) == brute_topk(rest, q, 5)
+        idx.compact()
+        assert idx.prewarm() == 4999
+        assert top(idx.search(q, k=5, probes=None)) == brute_topk(rest, q, 5)
+        assert [r.id for r in idx.search_batch([q], k=5).collect()] == brute_topk(
+            rest, q, 5
+        )
+
+
+def test_ivf_missing_codes_file_raises(spark, clustered_df, monkeypatch):
+    """A codes file removed under the index fails search, search_batch
+    and prewarm instead of answering from the remaining files, also after
+    every cell was read into the Python workers' caches and into this
+    process's cache (the IVF twin of test_graph_missing_shard_raises)."""
+    import re
+
+    import vectorchord_spark.operators.graph as G
+    import vectorchord_spark.operators.ivf as I
+
+    q = [0.1] * 8
+    with tempfile.TemporaryDirectory() as tmp:
+        idx = IvfIndex.build(
+            spark, clustered_df, "id", "vec", os.path.join(tmp, "idx"),
+            IvfOptions(metric="l2", lists=[33]),
+        )
+        assert idx.prewarm() == 5000
+        assert len(idx.search(q, k=10, probes=None).collect()) == 10
+        names, _ = idx._codes_snapshot()
+        assert len(names) > 1
+        cache = G._ShardCache(1 << 30)
+        monkeypatch.setattr(G, "_SHARD_CACHE", cache)
+        cells = np.arange(33)
+        assert I._read_cells(idx.codes_path, names, cells, I._SCAN_COLS).num_rows == 5000
+        assert len(cache._entries) == 33
+        os.remove(os.path.join(idx.codes_path, names[0]))
+        gone = re.escape(names[0])
+        with pytest.raises(FileNotFoundError, match=gone):
+            I._read_cells(idx.codes_path, names, cells, I._SCAN_COLS)
+        with pytest.raises(Exception, match=gone):
+            idx.search(q, k=10, probes=None).collect()
+        with pytest.raises(Exception, match=gone):
+            idx.search_batch([q, q], k=10).collect()
+        with pytest.raises(Exception, match=gone):
+            idx.prewarm()

@@ -33,19 +33,59 @@ def small_index(spark, small_source):
     return idx
 
 
-def test_probe_scan_is_partition_pruned(spark, small_index):
-    """Probe pruning reaches the parquet scan: the cluster_id IN filter is
-    pushed down, so file/row-group min-max stats skip unprobed clusters
-    (the codes layout is cluster-range-bucketed + sorted, giving each file
-    a tight cluster_id range). The probe set is one parsed IN list, and
-    it still reaches Parquet as an In filter."""
+def _cell_reads(monkeypatch, build) -> tuple:
+    """Build a plain-path query with ``build()``, then run its cell reader
+    in this process over every seed row, as the query's tasks would,
+    from an empty cell cache. Returns (DataFrame, the reader's
+    ``_make_cell_reader`` arguments, the keyword arguments of each
+    ``pyarrow.parquet.read_table`` call it made)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vectorchord_spark.operators import graph as G
+    from vectorchord_spark.operators import ivf as I
+
+    made = []
+    make = I._make_cell_reader
+    monkeypatch.setattr(I, "_make_cell_reader", lambda *a: made.append(a) or make(*a))
+    df = build()
+    (args,) = made
+    reads = []
+    read_table = pq.read_table
+    monkeypatch.setattr(
+        pq, "read_table", lambda src, **kw: reads.append(kw) or read_table(src, **kw)
+    )
+    monkeypatch.setattr(G, "_SHARD_CACHE", G._ShardCache(1 << 30))
+    run = make(*args)
+    for i in range(len(args[2])):
+        list(run(iter([pa.record_batch([pa.array([i])], names=["id"])])))
+    monkeypatch.undo()
+    return df, args, reads
+
+
+def test_probe_scan_is_partition_pruned(spark, small_index, monkeypatch):
+    """Probe pruning reaches the codes read: the plain path's Spark plan
+    scans no Parquet, and the Python workers' pyarrow read of the codes
+    files is filtered to the probed cells (``cluster_id in``), so
+    row-group min-max stats skip unprobed clusters (the codes layout is
+    cluster-range-bucketed + sorted, giving each row group a tight
+    cluster_id range). Each task reads its own slice of the probed
+    cells, and together they read each probed cell once."""
     q = [0.0] * 8
-    for res in (
-        small_index.search(q, k=5, probes=[4], guarantee=False),
-        small_index.search_batch([q, [0.5] * 8], k=5, probes=[4]),
+    for qs, build in (
+        ([q], lambda: small_index.search(q, k=5, probes=[4], guarantee=False)),
+        (
+            [q, [0.5] * 8],
+            lambda: small_index.search_batch([q, [0.5] * 8], k=5, probes=[4]),
+        ),
     ):
-        pushed = P.pushed_filters(res)
-        assert any("In(cluster_id" in p for p in pushed), pushed
+        res, _, reads = _cell_reads(monkeypatch, build)
+        assert not P.read_schemas(res), P.explain_str(res)
+        assert reads and all(
+            r["filters"][0][:2] == ("cluster_id", "in") for r in reads
+        ), reads
+        cells = [c for r in reads for c in r["filters"][0][2]]
+        assert sorted(cells) == small_index.probed_union(qs, [4]).tolist(), reads
 
 
 def _nodes(plan: str, name: str) -> int:
@@ -67,10 +107,11 @@ def test_rerank_join_is_broadcast(spark, small_index, small_source):
         assert P.has_broadcast_join(res), P.explain_str(res)
 
 
-def test_scoring_scan_prunes_vec_column(spark, small_index, small_source):
+def test_scoring_scan_prunes_vec_column(spark, small_index, small_source, monkeypatch):
     """Where the rerank payload is not the stored f32 vector, the scoring
-    scan must not read `vec` (the widest column): its codes ReadSchema
-    excludes it for rerank-in-table search and for quantized storage."""
+    read must not read `vec` (the widest column): the codes ReadSchema
+    excludes it for rerank-in-table search, and the workers' pyarrow
+    read of the codes files excludes it for quantized storage."""
     q = [0.0] * 8
     tmp = tempfile.mkdtemp(prefix="vc_plan_sq_")
     sq_index = IvfIndex.build(
@@ -78,24 +119,32 @@ def test_scoring_scan_prunes_vec_column(spark, small_index, small_source):
         IvfOptions(metric="l2", lists=[16], storage="rabitq8"),
     )
     base = small_source.select("id", "vec")
-    for res in (
-        small_index.search(q, k=5, probes=[4], guarantee=False, base_df=base),
-        sq_index.search(q, k=5, probes=[4], guarantee=False),
-    ):
-        schemas = P.read_schemas(res)
-        scoring = [s for s in schemas if "code" in s]
-        assert scoring and all("vec" not in s for s in scoring), schemas
+    res = small_index.search(q, k=5, probes=[4], guarantee=False, base_df=base)
+    schemas = P.read_schemas(res)
+    scoring = [s for s in schemas if "code" in s]
+    assert scoring and all("vec" not in s for s in scoring), schemas
+    _, _, reads = _cell_reads(
+        monkeypatch, lambda: sq_index.search(q, k=5, probes=[4], guarantee=False)
+    )
+    assert reads and all(
+        "code" in r["columns"] and "sq_code" in r["columns"] and "vec" not in r["columns"]
+        for r in reads
+    ), reads
 
 
 @pytest.mark.parametrize("storage", ["f32", "f16", "rabitq8", "base_df"])
-def test_search_scans_codes_once(spark, small_source, storage):
+def test_search_scans_codes_once(spark, small_source, storage, monkeypatch):
     """One-stage query: search (guarantee on and off) and search_batch
-    read the codes table exactly once — codes and rerank payload in the
-    same scan — and run one kernel (MapInArrow), with no threshold cross
+    read the codes exactly once — codes and rerank payload in the same
+    read — and run one kernel (MapInArrow), with no threshold cross
     join (BroadcastNestedLoopJoin), no persisted scored scan
-    (InMemoryTableScan) and no Union; search has no Window. Rerank-in-
-    table (``base_df``, an uncached Parquet table so its scan shows)
-    reads the base table once too, joined into that one scan."""
+    (InMemoryTableScan) and no Union; search has no Window. On the plain
+    path (f32, f16, rabitq8) the kernel's MapInArrow runs over a Range
+    seed and the plan scans no Parquet: the Python workers read the
+    probed cells' codes and payload in one pyarrow read per task.
+    Rerank-in-table (``base_df``, an uncached Parquet table so its scan
+    shows) keeps the Spark codes scan and reads the base table once too,
+    joined into that one scan."""
     tmp = tempfile.mkdtemp(prefix="vc_plan_once_")
     opts = {"rerank_in_index": False} if storage == "base_df" else {"storage": storage}
     idx = IvfIndex.build(
@@ -110,19 +159,28 @@ def test_search_scans_codes_once(spark, small_source, storage):
         small_source.write.parquet(os.path.join(tmp, "base"))
         kw["base_df"] = spark.read.parquet(os.path.join(tmp, "base"))
     q = [0.0] * 8
-    for name, res in (
-        ("search", idx.search(q, k=5, probes=[4], **kw)),
-        ("search", idx.search(q, k=5, probes=[4], guarantee=False, **kw)),
-        ("search_batch", idx.search_batch([q, [0.5] * 8], k=5, probes=[4], **kw)),
+    for name, build in (
+        ("search", lambda: idx.search(q, k=5, probes=[4], **kw)),
+        ("search", lambda: idx.search(q, k=5, probes=[4], guarantee=False, **kw)),
+        (
+            "search_batch",
+            lambda: idx.search_batch([q, [0.5] * 8], k=5, probes=[4], **kw),
+        ),
     ):
-        schemas = P.read_schemas(res)
-        codes = [s for s in schemas if "code:binary" in s]
-        assert len(codes) == 1, schemas
         if storage == "base_df":
+            res = build()
+            schemas = P.read_schemas(res)
+            codes = [s for s in schemas if "code:binary" in s]
+            assert len(codes) == 1, schemas
             assert "vec" not in codes[0], codes
             assert len([s for s in schemas if "vec:array" in s]) == 1, schemas
         else:
-            assert payload in codes[0], codes
+            res, args, reads = _cell_reads(monkeypatch, build)
+            assert not P.read_schemas(res), P.explain_str(res)
+            assert len(reads) == len(args[2]), reads  # one read per task
+            field = payload.split(":")[0]
+            assert all("code" in r["columns"] and field in r["columns"] for r in reads)
+            assert re.search(r"MapInArrow.*\n\s*\+- .*Range", P.explain_str(res, "simple"))
         plan = P.explain_str(res)
         assert "BroadcastNestedLoopJoin" not in plan, plan
         assert "InMemoryTableScan" not in plan, plan

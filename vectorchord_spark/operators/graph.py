@@ -58,8 +58,8 @@ from vectorchord_spark.operators import kmeans as KM
 from vectorchord_spark.operators.sampling import bounded_sample_vectors, source_vectors
 from vectorchord_spark.operators.store import (
     StoredIndex,
+    files_fingerprint,
     link_shards,
-    shard_fingerprint,
     write_meta,
 )
 
@@ -131,11 +131,12 @@ _TRAVERSE_COLS = {
     2: ["id", "row_no", "medoid_row", "neighbors", "vec", "ext_dis_u_2", "ext_nol", "code"],
 }
 
-#: byte budget of the decoded-shard cache that each Python worker keeps
-#: between tasks (:class:`_ShardCache`): a 5k-row 64d 2-bit shard decodes
-#: to 11.9 MB, so the budget holds ~20 such shards but only one 10k-row
-#: shard at 768d (f64 vectors and f64 codes, 136 MB); a shard over the
-#: budget is decoded for its task and not kept
+#: byte budget of the cache that each Python worker keeps between tasks
+#: (:class:`_ShardCache`), shared by graph shards and IVF cells: a 5k-row
+#: 64d 2-bit shard decodes to 11.9 MB, so the budget holds ~20 such
+#: shards but only one 10k-row shard at 768d (f64 vectors and f64 codes,
+#: 136 MB); an IVF cell keeps its Arrow columns as read (~0.3 KB per 64d
+#: f32 row). An entry over the budget is used for its task and not kept
 _SHARD_CACHE_BYTES = 256 << 20
 
 
@@ -201,40 +202,59 @@ def _decode_shard(table, bits: int, dim: int) -> _Shard:
 
 
 class _ShardCache:
-    """LRU of decoded shards within a byte budget, kept by each Python
-    worker between tasks. An entry is keyed on the identity of the
-    shard's files (``store.shard_fingerprint``), read again on every
-    load: a shard rewritten by a rebuild, ``insert`` or ``compact`` has
-    new files and misses, a shard those carried over by hardlink keeps
-    its files and hits, and a deleted shard directory fails the load. A
-    shard larger than the whole budget is decoded but not kept."""
+    """The LRU of decoded index state that each Python worker keeps
+    between tasks, within one byte budget for both index families: graph
+    shards (:meth:`load`) and IVF cells (``ivf._read_cells``). A key is
+    ``(kind, files, part, columns)``: ``files`` is the identity of the
+    data files the entry was read from (``store.files_fingerprint``),
+    taken again on every load, so files rewritten by a rebuild,
+    ``insert`` or ``compact`` miss, files carried over by hardlink keep
+    hitting, and a removed file fails the load; ``part`` is what the
+    entry holds of those files (an IVF cell; None for a whole graph
+    shard) and ``columns`` the columns read. A value reports its size as
+    ``nbytes``; one larger than the whole budget is not kept."""
 
     def __init__(self, budget: int):
         self.budget = budget
         self.used = 0
-        self._entries: "OrderedDict[tuple, _Shard]" = OrderedDict()
+        self._entries: "OrderedDict[tuple, object]" = OrderedDict()
 
-    def load(self, shard_dir: str, bits: int, dim: int) -> _Shard:
-        import pyarrow.parquet as pq
-
-        files = shard_fingerprint(shard_dir)
-        key = (bits, dim, files)
+    def get(self, key: tuple):
+        """The entry under ``key``, now the most recently used; None on a
+        miss."""
         hit = self._entries.get(key)
         if hit is not None:
             self._entries.move_to_end(key)
+        return hit
+
+    def put(self, key: tuple, value) -> None:
+        """Keep ``value`` under ``key``, evicting the least recently used
+        entries until the budget holds."""
+        if value.nbytes > self.budget or key in self._entries:
+            return
+        self._entries[key] = value
+        self.used += value.nbytes
+        while self.used > self.budget:
+            _, old = self._entries.popitem(last=False)
+            self.used -= old.nbytes
+
+    def load(self, shard_dir: str, bits: int, dim: int) -> _Shard:
+        """The decoded graph shard in ``shard_dir``."""
+        import pyarrow.parquet as pq
+
+        files = files_fingerprint(shard_dir)
+        columns = _TRAVERSE_COLS[bits]
+        key = ("graph", files, None, tuple(columns))
+        hit = self.get(key)
+        if hit is not None:
             return hit
         if not files:
             raise FileNotFoundError(f"no data files in {shard_dir}")
         table = pq.read_table(
-            [os.path.join(shard_dir, f[0]) for f in files], columns=_TRAVERSE_COLS[bits]
+            [os.path.join(shard_dir, f[0]) for f in files], columns=columns
         )
         shard = _decode_shard(table, bits, dim)
-        if shard.nbytes <= self.budget:
-            self._entries[key] = shard
-            self.used += shard.nbytes
-            while self.used > self.budget:
-                _, old = self._entries.popitem(last=False)
-                self.used -= old.nbytes
+        self.put(key, shard)
         return shard
 
 

@@ -9,26 +9,34 @@ Spark-first re-expression of the reference's index lifecycle:
   single Spark write job IS the reference's parallel build
   (am_build.rs:611-789).
 - search = driver tree descent over the (small, broadcast) centroid tree →
-  ONE partition-pruned scan of the probed clusters' codes and rerank
-  payload (in the index, or a caller's base table joined to the scan by
-  id: rerank-in-table) → per Arrow batch, rough scoring with ε lower bounds
-  (search.rs:95-196) and the lazy rerank applied to the batch's rows
-  (rerank.rs:53-137: rerank by lower bound until no bound can beat the
-  k-th exact distance) → ``ORDER BY dist LIMIT k`` over the batches'
-  survivors (TakeOrderedAndProject).
+  ONE read of the probed clusters' codes and rerank payload → per Arrow
+  batch, rough scoring with ε lower bounds (search.rs:95-196) and the
+  lazy rerank applied to the batch's rows (rerank.rs:53-137: rerank by
+  lower bound until no bound can beat the k-th exact distance) →
+  ``ORDER BY dist LIMIT k`` over the batches' survivors
+  (TakeOrderedAndProject). The plain query's tasks are a ``spark.range``
+  seed: each takes a slice of the probed cells from its Python worker's
+  cell cache, or reads them once with pyarrow (the reference answers
+  from buffer pages it has already pinned). A ``prefilter`` or a
+  caller's base table (rerank-in-table, joined to the scan by id) keeps
+  a partition-pruned Spark scan of the codes table feeding the same
+  kernel.
 - insert = encode+append (insert.rs:70-212); delete = tombstones
   (bulkdelete.rs:24-183); compact = partition rewrite (maintain.rs:38-260).
 
 Scale notes (the design point is a 1000-executor cluster, not local[32]):
 the centroid tree is ≤ a few hundred MB even at 1M leaves → broadcast;
-``codes`` is cluster-range-bucketed and sorted, so the probes' pushed
-``cluster_id IN`` filter prunes at Parquet file/row-group granularity
-(a directory per cluster would mean 1M directories at 1M leaves);
-the scan reads the code columns and the storage's rerank payload once,
-and each batch emits at most its local top-k per query (top-m under a
-``rerank_factor·k``/``max_scan_tuples`` cap), so the only
-shuffle in the whole query is the final top-k, which
-TakeOrderedAndProject does with per-partition heaps.
+``codes`` is cluster-range-bucketed and sorted, so the probes'
+``cluster_id IN`` filter (pushed to pyarrow or to Spark's Parquet scan)
+prunes at Parquet row-group granularity (a directory per cluster would
+mean 1M directories at 1M leaves); the read takes the code columns and
+the storage's rerank payload once, a cell stays in the worker's
+byte-budgeted cache (shared with graph shards) until its files change
+or it is evicted, and each batch emits at most its local top-k per
+query (top-m under a ``rerank_factor·k``/``max_scan_tuples`` cap), so
+the only data movement after the read is the final top-k merge, which
+TakeOrderedAndProject does with per-partition heaps (a per-``qid``
+window for ``search_batch``).
 """
 
 from __future__ import annotations
@@ -39,13 +47,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectorchord_spark import kernels as K
+from vectorchord_spark.operators import graph as G
 from vectorchord_spark.operators import kmeans as KM
 from vectorchord_spark.operators.sampling import bounded_sample_vectors, source_vectors
-from vectorchord_spark.operators.store import StoredIndex, write_meta
+from vectorchord_spark.operators.store import StoredIndex, files_fingerprint, write_meta
 
 #: ``vec`` is the f32 rerank payload PACKED AS BINARY (little-endian f32,
 #: like the f16/quantized payloads): Spark's parquet LIST<FLOAT> writer
@@ -63,6 +73,111 @@ CODES_SCHEMA = (
 #: Parquet row-group target for the codes table — the probed scan's
 #: pruning granularity (see _write_codes).
 _CODES_BLOCK_BYTES = 8 << 20
+
+#: the codes columns the scan kernel reads for rough scoring, and the
+#: columns of each storage's rerank payload, read after them
+_SCAN_COLS = (
+    "id", "cluster_id", "dis_u_2", "factor_cnt", "factor_ip", "factor_err", "delta", "code"
+)
+_PAYLOAD_COLS = {
+    "f32": ("vec",),
+    "f16": ("vec_f16",),
+    "rabitq8": ("sq_dis_u_2", "sq_nol", "sq_code"),
+    "rabitq4": ("sq_dis_u_2", "sq_nol", "sq_code"),
+}
+
+
+#: rows per Arrow batch that the cell reader hands the scan kernel: the
+#: batch size of the Spark scan (``spark.sql.execution.arrow.
+#: maxRecordsPerBatch`` in ``session.get_spark``), which bounds the
+#: kernel's per-batch arrays (unpacked bits, sums) the same way
+_KERNEL_BATCH_ROWS = 10_000
+
+
+@dataclass(frozen=True)
+class _Cell:
+    """One IVF cell's codes rows as the scan kernel reads them. ``batch``
+    is a compact copy with its own buffers, not a slice that pins the
+    whole read, so ``nbytes`` is what the cell costs the worker cache."""
+
+    batch: "pa.RecordBatch"
+    nbytes: int
+
+
+def _one_batch(table: "pa.Table") -> "pa.RecordBatch":
+    """A table's rows as one record batch (a copy where it has several
+    chunks), without schema metadata, so batches of the same columns
+    concatenate whatever file they were read from."""
+    return pa.RecordBatch.from_arrays(
+        [col.combine_chunks() for col in table.columns],
+        schema=table.schema.remove_metadata(),
+    )
+
+
+def _read_cells(codes_dir: str, names: list, cells, columns: tuple) -> "pa.RecordBatch":
+    """The ``columns`` of the codes rows of ``cells`` as one Arrow batch,
+    cell by cell in the order given, from the files ``names`` of
+    ``codes_dir``. Each cell comes from this Python worker's cache
+    (:class:`graph._ShardCache`, keyed on the files' identity, the cell
+    and the columns); the cells it lacks are read with ONE pyarrow read
+    of those files, filtered to them by ``cluster_id in`` (pruned at
+    row-group granularity by the Parquet statistics), and kept. A file
+    of ``names`` that is gone raises ``FileNotFoundError``, also when
+    every cell is cached. Module-level on purpose: Spark pickles the
+    reader closure by value, and only a function it pickles by reference
+    reaches the worker's own (persistent) cache."""
+    import pyarrow.parquet as pq
+
+    cache = G._SHARD_CACHE
+    files = files_fingerprint(codes_dir, names)
+    keys = [("ivf", files, int(c), columns) for c in cells]
+    got = [cache.get(key) for key in keys]
+    miss = [int(c) for c, hit in zip(cells, got) if hit is None]
+    if miss:
+        read = _one_batch(
+            pq.read_table(
+                [os.path.join(codes_dir, n) for n in names],
+                columns=list(columns),
+                filters=[("cluster_id", "in", miss)],
+            )
+        )
+        cids = np.asarray(read.column("cluster_id"), np.int64)
+        order = np.argsort(cids, kind="stable")
+        lo = np.searchsorted(cids[order], miss, "left")
+        hi = np.searchsorted(cids[order], miss, "right")
+        fresh = {}
+        for c, a, b in zip(miss, lo, hi):
+            batch = read.take(pa.array(order[a:b]))
+            fresh[c] = _Cell(batch, batch.get_total_buffer_size())
+        for i, c in enumerate(cells):
+            if got[i] is None:
+                got[i] = fresh[int(c)]
+                cache.put(keys[i], got[i])
+    return _one_batch(pa.Table.from_batches([cell.batch for cell in got]))
+
+
+def _make_cell_reader(codes_dir: str, names: list, slices: list, columns: tuple, tomb, body):
+    """mapInArrow kernel over a ``spark.range(len(slices))`` seed, one
+    row per partition: seed row ``i`` stands for the cells ``slices[i]``,
+    which the task gets as one Arrow batch through the Python worker's
+    cell cache (:func:`_read_cells`): a warm worker reads no Parquet.
+    Rows whose id is in ``tomb`` (a sorted id array, or None) are
+    dropped, then ``body`` — an ``Iterator[RecordBatch] →
+    Iterator[RecordBatch]`` kernel, the scan kernel of
+    ``IvfIndex._scan`` or ``prewarm``'s count — runs over the batch, in
+    slices of at most ``_KERNEL_BATCH_ROWS`` rows."""
+
+    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                rb = _read_cells(codes_dir, names, slices[i], columns)
+                if tomb is not None:
+                    ids = np.asarray(rb.column("id"), np.int64)
+                    rb = rb.filter(pa.array(~np.isin(ids, tomb)))
+                step = _KERNEL_BATCH_ROWS
+                yield from body(rb.slice(o, step) for o in range(0, rb.num_rows, step))
+
+    return run
 
 
 def _binary_u8_matrix(rb, col_name: str) -> "np.ndarray":
@@ -373,6 +488,7 @@ class IvfOptions:
 class IvfIndex(StoredIndex):
     def __init__(self, spark: SparkSession, path: str):
         super().__init__(spark, path)
+        self._parallelism = int(spark.sparkContext.defaultParallelism)
         cdf = pd.read_parquet(os.path.join(path, "centroids.parquet"))
         self.levels: list[dict] = []
         for lvl in sorted(cdf["level"].unique()):
@@ -1015,7 +1131,10 @@ class IvfIndex(StoredIndex):
         DataFrame, cached until ``_invalidate`` (DataFrames are immutable,
         so sharing one across searches is safe). spark.read.parquet costs
         a JVM file listing + footer read per call, which uncached would be
-        plan-construction wall on every serving call."""
+        plan-construction wall on every call. Read by the Spark scan of
+        a ``prefilter`` or ``base_df`` query, ``compact`` and
+        ``cluster_sizes``; the plain query reads the cells in its tasks
+        (:meth:`_serve_cells`)."""
         tomb = self._tombstones_df()
         key = (self.meta["codes_version"], tomb is not None)
         cached = self._codes_base_cache
@@ -1055,10 +1174,11 @@ class IvfIndex(StoredIndex):
         One query through the same front end as ``search_batch`` (qid 0):
         the shared prep (``K.prep_queries``), the descent and the one scan
         kernel (``_scan``), which reads every probed row's code and rerank
-        payload once and keeps, per Arrow batch, the rows the answer can
-        need with their exact distances. A global ``ORDER BY dist, id
-        LIMIT k`` merges the batches: one codes scan per query, whatever
-        the probed cells hold, and nothing cached.
+        payload once (from the Python workers' cell caches where they
+        hold it) and keeps, per Arrow batch, the rows the answer can need
+        with their exact distances. A global ``ORDER BY dist, id LIMIT k``
+        merges the batches: one Spark job per query, whatever the probed
+        cells hold.
 
         ``guarantee=True`` reproduces the reference's lazy-rerank contract
         (exact within the probed cells, up to estimator-bound validity):
@@ -1078,7 +1198,8 @@ class IvfIndex(StoredIndex):
         ``rerank_factor=None`` reranks every probed row.
 
         ``prefilter``: optional DataFrame of allowed ``id`` values applied
-        BEFORE rerank (the reference's prefilter semantics, Q9).
+        BEFORE rerank (the reference's prefilter semantics, Q9); it joins
+        a Spark scan of the codes table instead of the cell reader.
         ``base_df``: rerank against this (id, vec) table instead of the
         index-stored vectors (``rerank_in_table`` mode, Q5). Its vectors
         join the one codes scan by id, with the probed codes broadcast:
@@ -1217,13 +1338,21 @@ class IvfIndex(StoredIndex):
         base_df: DataFrame | None,
         select: dict,
     ) -> DataFrame:
-        """The one codes scan of every IVF query (``search`` as qid 0,
+        """The one codes read of every IVF query (``search`` as qid 0,
         ``search_batch``, the maxsim pool): ONE read of the probed cells'
         codes and, when ``select`` reranks, the rerank payload — the
-        storage's, or a ``base_df``'s vectors (rerank-in-table), which
-        join the probed codes by id before the kernel. The probed codes
-        are the broadcast side, so the base table never shuffles, and a
-        probed row without a base vector is not a candidate.
+        storage's, or a ``base_df``'s vectors (rerank-in-table).
+
+        Without a ``prefilter`` or ``base_df`` the Python workers read the
+        cells themselves (:meth:`_serve_cells`): each task of a
+        ``spark.range`` seed takes a slice of the probed cells from its
+        worker's cell cache, or reads them once with pyarrow, drops the
+        tombstoned rows and runs the kernel over them. Otherwise a Spark
+        scan of the codes table, pruned to the probed cells, feeds the
+        same kernel: a ``prefilter`` semi-joins it, and a ``base_df``'s
+        vectors join the probed codes by id. The probed codes are the
+        broadcast side, so the base table never shuffles, and a probed
+        row without a base vector is not a candidate.
 
         Per Arrow batch, each row is scored only for the queries whose
         descent probed its cell (``probe_mask``, (n_leaves, nq)), every
@@ -1265,7 +1394,7 @@ class IvfIndex(StoredIndex):
         eps = float(epsilon)
         rough_fn = K.rough_l2 if internal == "l2" else K.rough_dot
         factors = ("dis_u_2", "factor_cnt", "factor_ip", "factor_err")
-        columns = ["id", "cluster_id", *factors, "delta", "code"]
+        columns = _SCAN_COLS
         decode = score = None
         if select.get("refine") != 0:
             payload_cols, decode, score = self._payload_scorer(
@@ -1334,6 +1463,9 @@ class IvfIndex(StoredIndex):
                     names=["qid", "id", "lb", "rough", "dist"],
                 )
 
+        schema = "qid int, id long, lb double, rough double, dist double"
+        if prefilter is None and base_df is None:
+            return self._serve_cells(probed, columns, kernel, schema)
         df = self._codes_df(probed, columns)
         if prefilter is not None:
             df = df.join(prefilter.select("id"), "id", "left_semi")
@@ -1342,9 +1474,41 @@ class IvfIndex(StoredIndex):
             df = base.select("id", F.col("vec").alias("_base_vec")).join(
                 F.broadcast(df), "id"
             )
-        return df.mapInArrow(
-            kernel, "qid int, id long, lb double, rough double, dist double"
+        return df.mapInArrow(kernel, schema)
+
+    def _codes_snapshot(self) -> "tuple[list[str], np.ndarray | None]":
+        """(data file names of the current codes version, tombstoned ids
+        or None), captured once per index state: cached until
+        ``_invalidate``, as ``_codes_base`` caches its plan. A search
+        DataFrame closes over them, so it keeps answering from the files
+        and tombstones it was built over across a later ``insert`` or
+        ``delete``, and fails if one of its files is gone."""
+        if self._codes_snapshot_cache is None:
+            names = [f[0] for f in files_fingerprint(self.codes_path)]
+            self._codes_snapshot_cache = (names, self._tombstone_ids())
+        return self._codes_snapshot_cache
+
+    def _serve_cells(
+        self, cells, columns: tuple, body, schema: str, tombstones: bool = True
+    ) -> DataFrame:
+        """``body`` (an Arrow batch kernel with output ``schema``) over the
+        codes rows of ``cells``, read by the Python workers themselves: a
+        ``spark.range(n)`` seed with one row per partition,
+        ``n = min(defaultParallelism, len(cells))``, each task taking one
+        slice of the sorted cells through :func:`_make_cell_reader`, with
+        the tombstoned rows dropped unless ``tombstones`` is False. The
+        plan has no Parquet scan: the task's cells come from the worker's
+        cell cache, or one pyarrow read of the snapshot's files
+        (:meth:`_codes_snapshot`). The seed is a JVM ``Range``, as for the
+        graph's shard tasks (``VamanaIndex._shard_candidates``)."""
+        names, tomb = self._codes_snapshot()
+        n = min(self._parallelism, len(cells))
+        slices = np.array_split(np.asarray(cells, np.int64), n)
+        reader = _make_cell_reader(
+            self.codes_path, names, slices, columns,
+            tomb if tombstones else None, body,
         )
+        return self.spark.range(n, numPartitions=n).mapInArrow(reader, schema)
 
     def _payload_scorer(self, Qe: np.ndarray, Q_rot: np.ndarray, base: bool):
         """The rerank scorer for the index's storage, or for a ``base_df``
@@ -1387,7 +1551,7 @@ class IvfIndex(StoredIndex):
                     )
                 return np.asarray(col.flatten(), np.float64).reshape(-1, dim)
 
-            return [], base_decode, fold
+            return (), base_decode, fold
 
         if storage in ("rabitq8", "rabitq4"):
             # rotation-invariant distances in rotated space: one decode per
@@ -1413,19 +1577,20 @@ class IvfIndex(StoredIndex):
                     return np.sqrt(np.maximum(q_norm2[qids] + deq_n2 - 2.0 * dotq, 0.0))
                 return -dotq if metric == "dot" else 1.0 - dotq
 
-            return ["sq_dis_u_2", "sq_nol", "sq_code"], sq_decode, sq_score
+            return _PAYLOAD_COLS[storage], sq_decode, sq_score
 
         if not meta["rerank_in_index"]:
             raise ValueError("index built with rerank_in_index=False: pass base_df")
         # packed little-endian f32 / f16 rows, viewed without a copy;
         # scorers widen only the rows they rerank
-        col, fp = ("vec", "<f4") if storage == "f32" else ("vec_f16", "<f2")
+        (col,) = _PAYLOAD_COLS[storage]
+        fp = "<f4" if storage == "f32" else "<f2"
 
         def decode(rb):
             return _binary_u8_matrix(rb, col).view(fp)
 
         if storage == "f32":
-            return [col], decode, fold
+            return _PAYLOAD_COLS[storage], decode, fold
 
         def f16_score(vecs, rows, qids):
             mat = vecs[rows].astype(np.float64)
@@ -1436,7 +1601,7 @@ class IvfIndex(StoredIndex):
                 return -np.einsum("ij,ij->i", mat, qs)
             return 1.0 - np.einsum("ij,ij->i", mat, qs)
 
-        return [col], decode, f16_score
+        return _PAYLOAD_COLS[storage], decode, f16_score
 
     def range_search(
         self,
@@ -1477,6 +1642,7 @@ class IvfIndex(StoredIndex):
         super()._invalidate()
         self._cluster_sizes = None
         self._codes_base_cache = None
+        self._codes_snapshot_cache = None
 
     def compact(self) -> None:
         """Rewrite codes without tombstoned rows and re-coalesce files
@@ -1485,8 +1651,10 @@ class IvfIndex(StoredIndex):
         The *previous* codes directory is kept until the next compact so
         that lazy DataFrames returned by earlier ``search()`` calls remain
         collectable (snapshot-ish semantics); only the version before that
-        is reclaimed. Searches cache nothing, so there is no query state
-        to release."""
+        is reclaimed. The cells the Python workers cache are keyed on the
+        identity of the files they were read from, so the new version's
+        cells miss and the old version's entries age out of the
+        byte-budgeted cache; there is no query state to release."""
         old_version = self.meta["codes_version"]
         # read the OLD version before bumping it (read.parquet resolves
         # the path eagerly, so the lazy plan keeps reading v_old while
@@ -1497,10 +1665,25 @@ class IvfIndex(StoredIndex):
         self._commit(f"codes_v{old_version - 1}", vacuum=True)
 
     def prewarm(self) -> int:
-        """Cache the codes table in executor memory (S11)."""
-        df = self.spark.read.parquet(self.codes_path)
-        df.cache()
-        return df.count()
+        """Warm the serve path (S11 vchordrq_prewarm) and return the codes
+        row count (tombstoned rows included): every cell of the current
+        version is read through the SAME seeded reader the search uses
+        (:meth:`_serve_cells`), with the columns a search of this
+        storage reads, into the cell cache of the Python worker that ran
+        its task (shared with graph shards, :class:`graph._ShardCache`).
+        Spark does not pin a cell to a worker, so a later query may still
+        land on a worker that has not read it yet."""
+        storage = self.meta["storage"]
+        payload = storage.startswith("rabitq") or self.meta["rerank_in_index"]
+        columns = _SCAN_COLS + (_PAYLOAD_COLS[storage] if payload else ())
+
+        def count(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+            for rb in batches:
+                yield pa.record_batch([pa.array([rb.num_rows], pa.int64())], names=["n"])
+
+        cells = np.arange(int(self.meta["n_leaves"]))
+        rows = self._serve_cells(cells, columns, count, "n long", tombstones=False).collect()
+        return int(sum(r.n for r in rows))
 
     def cluster_sizes(self) -> dict[int, int]:
         """Tuple count per leaf cell (cached; the analogue of the jump

@@ -61,17 +61,20 @@ def link_shards(old: str, new: str, skip: set[int]) -> None:
                 shutil.copy2(src, dst)
 
 
-def shard_fingerprint(shard_dir: str) -> tuple:
-    """The identity of a shard directory's data files: ``(name, device,
-    inode, size, mtime_ns)`` per file, sorted by name (hidden ``.`` and
-    ``_`` files, which Parquet readers skip, are left out). A rewrite
-    changes it; a hardlinked carry-over into a later version keeps it. A
-    missing directory raises ``FileNotFoundError``."""
+def files_fingerprint(data_dir: str, names: "list[str] | None" = None) -> tuple:
+    """The identity of a data directory's files: ``(name, device, inode,
+    size, mtime_ns)`` per file. ``names`` None lists the directory's data
+    files, sorted by name (hidden ``.`` and ``_`` files, which Parquet
+    readers skip, are left out); a list of names stats exactly those, so
+    a reader can check that the files it captured are still there. A
+    rewrite changes the fingerprint; a hardlinked carry-over into a later
+    version keeps it. A missing directory or named file raises
+    ``FileNotFoundError``."""
+    if names is None:
+        names = sorted(n for n in os.listdir(data_dir) if not n.startswith((".", "_")))
     out = []
-    for name in sorted(os.listdir(shard_dir)):
-        if name.startswith((".", "_")):
-            continue
-        st = os.stat(os.path.join(shard_dir, name))
+    for name in names:
+        st = os.stat(os.path.join(data_dir, name))
         out.append((name, st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns))
     return tuple(out)
 
@@ -114,6 +117,7 @@ class StoredIndex:
         cached plan's file list is resolved at analysis time and goes
         stale."""
         self._tombstones_cache = None
+        self._tombstone_ids_cache = None
 
     @property
     def _tombstones_path(self) -> str:
@@ -138,6 +142,21 @@ class StoredIndex:
         if self._tombstones_cache is None:
             self._tombstones_cache = self.spark.read.parquet(self._tombstones_path)
         return self._tombstones_cache
+
+    def _tombstone_ids(self) -> np.ndarray | None:
+        """The tombstoned ids as a sorted int64 array read with pyarrow
+        (NULL ids, which match nothing, left out), cached until
+        ``_invalidate``; None when there are none."""
+        if not os.path.exists(self._tombstones_path):
+            return None
+        if self._tombstone_ids_cache is None:
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
+
+            col = pq.read_table(self._tombstones_path, columns=["id"]).column("id")
+            ids = pc.drop_null(col).to_numpy().astype(np.int64)
+            self._tombstone_ids_cache = np.unique(ids)
+        return self._tombstone_ids_cache if len(self._tombstone_ids_cache) else None
 
     def enable_query_sampling(self, rate: float = 1.0, max_records: int = 1000) -> None:
         meta = dict(
